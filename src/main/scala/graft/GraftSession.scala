@@ -10,13 +10,13 @@ import org.apache.spark.sql.SparkSession
   * rather than the 200 default.
   */
 object GraftSession {
+  /** THE graft session: every entry point (Verify, Bench, the mains,
+    * the tests) builds through here, so a conf added to
+    * [[requiredConfs]] takes effect everywhere at once. Only the
+    * session-shaped extras — width, app name, warehouse, UI — are
+    * spelled here. */
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
             appName: String = "graft"): SparkSession = {
-    // oracle-parity confs come from THE one list below (Verify/Bench
-    // iterate it too) — local() previously re-hardcoded them inline,
-    // so a conf added to requiredConfs took effect on the grading
-    // path but silently not on local()-built sessions (round-10
-    // review); only session-specific extras are spelled here
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -30,15 +30,47 @@ object GraftSession {
     spark
   }
 
-  /** Configs to apply when someone else builds the session (Verify/Bench).
-    * `spark.sql.extensions` is a static conf, so the custom SQL functions
-    * and the FuseDotProduct optimizer rule install on EVERY graft
-    * session, not just test sessions that register them by hand. */
+  /** Configs to apply when someone else builds the session (the
+    * benchmark harness). `spark.sql.extensions` is a static conf, so
+    * the custom SQL functions and the FuseDotProduct optimizer rule
+    * install on EVERY graft session, not just test sessions that
+    * register them by hand.
+    *
+    * The two codegen settings make each generated class compile once
+    * per process. At Spark 4.1 defaults Janino recompiled classes it
+    * had already compiled, and each recompile is new bytecode for the
+    * JIT. Counted with `CodegenMetrics` in the perfbench workloads on
+    * a 4-core host:
+    *  - `spark.sql.artifact.isolation.enabled=false`: with isolation
+    *    on, every session — including the clone each streaming query
+    *    runs in — gets its own executor class loader, and the codegen
+    *    cache is keyed on (class loader, source), so each session
+    *    recompiles every class its tasks run. Graft adds no session
+    *    artifacts, so tasks can use the process class loader.
+    *    `ClassNotFoundException`s per `registry_batch` run fall from
+    *    17k to 4.3k.
+    *  - `spark.sql.codegen.cache.maxEntries=600` (static; default
+    *    100): one 5-entry `registry_batch` pass already evicted. The
+    *    largest working set measured is 282 distinct classes (one
+    *    `trace_api` run; `registry_batch` compiles 182), so 600 is
+    *    about twice that. It stays a bound: `TraceService` inlines
+    *    each request's time window, about 35 new classes per 20
+    *    requests, and the cache evicts those once it is full instead
+    *    of growing metaspace and the JIT code cache without limit.
+    * Neither suffices alone. Isolation off alone still recompiles
+    * 23–45 classes per registry warm pass and ~560 per `trace_api`
+    * run; the larger cache alone still recompiles 16 per warm pass.
+    * Together: 0 per registry warm pass (was 36–59), 31–38 per
+    * `trace_api` round (was 122–127), and `work_cpu_s` on `trace_api`
+    * fell 20%. Plans, jobs and tasks are unchanged;
+    * CodegenSpec pins the mechanism. */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.extensions" -> "graft.GraftExtensions") ++
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "600") ++
     // Shuffle/broadcast/block-manager scratch on tmpfs when the host
     // offers one (the streaming drives' shmCheckpointRoot discipline,
     // applied to batch): java.io.tmpdir here is disk-backed ext4, so

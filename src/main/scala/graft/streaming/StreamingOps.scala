@@ -148,6 +148,15 @@ object StreamingOps extends QueryModule {
     * re-layout. */
   private val SplitCap = 8L
 
+  /** Files to re-lay `bytes` of parquet out as: one per split unit, at
+    * most [[SplitCap]] and the session width, at least 1. Both split
+    * sources ([[splitCopyPath]] and the sentinel drives' frame) size
+    * their copy here. */
+  private def splitWidth(spark: SparkSession, bytes: Long): Int =
+    math.max(1L, math.min(math.min(SplitCap,
+      spark.sparkContext.defaultParallelism.toLong),
+      bytes / SplitUnitBytes)).toInt
+
   /** [[tableStream]] never copies an input above this: a single file
     * this large carries many row groups and splits on its own; it is
     * only the toy single-row-group shape that needs the re-layout. */
@@ -186,17 +195,9 @@ object StreamingOps extends QueryModule {
   private[graft] def splitCopyPath(spark: SparkSession, dir: String,
       table: String): Option[String] = {
     val f = new java.io.File(s"$dir/$table.parquet")
-    // profiling seam (never set by the driver): SPARK_GRAFT_STSPLIT=0
-    // disables the re-layout, =N overrides the width cap, for
-    // in-binary A/Bs
-    val cap = sys.env.get("SPARK_GRAFT_STSPLIT")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(SplitCap)
     val target =
-      if (!f.isFile || f.length() > MaxSplitCopyBytes || cap == 0) 1
-      else math.min(math.min(cap,
-        spark.sparkContext.defaultParallelism.toLong),
-        math.max(1L, f.length() / SplitUnitBytes)).toInt
+      if (!f.isFile || f.length() > MaxSplitCopyBytes) 1
+      else splitWidth(spark, f.length())
     if (target <= 1) None
     else Some(graft.util.ArtifactCache.persistent(
       s"stsrc_$table", s"v1-n$target", dir) { p =>
@@ -533,10 +534,7 @@ object StreamingOps extends QueryModule {
     // scan's task count changes
     val nSplit = {
       val ef = new java.io.File(s"$dir/events.parquet")
-      if (!ef.isFile) 1
-      else math.min(math.min(SplitCap,
-        spark.sparkContext.defaultParallelism.toLong),
-        math.max(1L, ef.length() / 4 / SplitUnitBytes)).toInt
+      if (!ef.isFile) 1 else splitWidth(spark, ef.length() / 4)
     }
     val prep = graft.util.ArtifactCache.persistent(
         "stdrive_frame", s"v3-n$nSplit", dir) { p =>

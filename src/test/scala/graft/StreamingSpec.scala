@@ -53,7 +53,10 @@ class StreamingSpec extends SparkSpec {
     // round 13: every streaming drive reads a multi-file re-layout of
     // its single-file table (scan parallelism, guide §2.5/§6). The
     // copy must hold EXACTLY the table's rows — same schema, same
-    // multiset — and actually be split (>1 part file at sf0.01).
+    // multiset — and actually be split (>1 part file at sf0.01). The
+    // split needs a session at least two wide.
+    assume(spark.sparkContext.defaultParallelism > 1,
+      "a one-core session never splits")
     val dir = "/root/testdata/sf0.01"
     for (t <- Seq("events", "documents", "embeddings")) {
       val split = StreamingOps.splitCopyPath(spark, dir, t)

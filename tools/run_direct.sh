@@ -1,6 +1,16 @@
 #!/bin/bash
 # Direct JVM runner for graft mains (bypasses sbt locks; same JVM options
 # as build.sbt's forked run). Usage: tools/run_direct.sh graft.Bench [args...]
+# Runs the classes `sbt compile` left in the checkout this script lives in.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+# Spark's jars: SPARK_HOME, else the installation that holds spark-submit
+if [ -z "$SPARK_HOME" ] && command -v spark-submit >/dev/null; then
+  SPARK_HOME="$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")"
+fi
+[ -d "$SPARK_HOME/jars" ] || {
+  echo "run_direct.sh: no Spark jars; set SPARK_HOME to a Spark install" >&2
+  exit 1
+}
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -10,4 +20,4 @@ done
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" "$@"

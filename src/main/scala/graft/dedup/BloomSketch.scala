@@ -29,26 +29,22 @@ private[graft] object BloomSketch {
   private[graft] def hashOf(c: Column) =
     ColumnBridge.column(new XxHash64(Seq(ColumnBridge.expression(c))))
 
-  /** Per-session build monitor: the conf set/restore pair below is
-    * read-modify-write on SESSION state, so two concurrent builds on
-    * one session could clamp each other (the sketch silently saturates
-    * — perf-only, the exact join keeps correctness) or restore the
-    * other's raised value out of order, leaving the caps permanently
-    * raised. Builds on one session serialize here; the aggregation is
-    * a sub-second single job, so the monitor costs nothing. Distinct
-    * sessions never contend (the map key). Dead-session keys are swept
-    * on entry, the cache-hygiene convention. */
-  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, Object]()
-
   /** Aggregate `df`'s `c` into Bloom bytes sized for `expectedItems`;
     * null when `df` is empty (the aggregate's own empty-input value —
     * callers branch to their exact no-ledger answer). */
   private[graft] def bloomBytes(df: DataFrame, c: Column,
       expectedItems: Long): Array[Byte] = {
-    val spark = df.sparkSession
-    buildLocks.keySet.removeIf(_.sparkContext.isStopped)
-    val lock = buildLocks.computeIfAbsent(spark, _ => new Object)
+    // Per-session build monitor: the conf set/restore pair below is
+    // read-modify-write on SESSION state, so two concurrent builds on
+    // one session could clamp each other (the sketch silently
+    // saturates — perf-only, the exact join keeps correctness) or
+    // restore the other's raised value out of order, leaving the caps
+    // permanently raised. Builds on one session serialize here; the
+    // aggregation is a sub-second single job, so the monitor costs
+    // nothing, and distinct sessions never contend. The lock object is
+    // a (not counted) Memo entry, so it is swept with its session.
+    val lock = graft.util.Memo(Some(df.sparkSession), "bloom_lock", "",
+      counted = false)(new Object)
     lock.synchronized { bloomBytesLocked(df, c, expectedItems) }
   }
 

@@ -132,6 +132,73 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
        |ORDER BY sd.doc_id""".stripMargin
   }
 
+  /** The %97 benchmark slice's DISTINCT shingles as a Spark broadcast,
+    * for the compiled in-row containment probe
+    * ([[graft.functions.SetHitCount]]) — round-11 ScaleBench finding:
+    * the 1-row bench-ARRAY crossJoin + array_intersect spelling
+    * rebuilt the bench hash set per document (O(|bench|)/row), and the
+    * fixture's bench slice co-grows with the corpus, so st25 measured
+    * 587× at ×100. The broadcast is bounded by the same
+    * benchmarks-are-small contract as v16's semi-join side; memoized
+    * per (session, dir). Shared by st17 and the st25 ingest DAG (their slices explode to
+    * the same distinct set — null-text docs contribute no shingles
+    * either way). */
+  private[dedup] def benchShinglesBc(spark: SparkSession, dir: String):
+      org.apache.spark.broadcast.Broadcast[Array[String]] =
+    graft.util.Memo(Some(spark), "bench_shingles_bc", dir) {
+      spark.sparkContext.broadcast(
+        graft.util.PlanMemo.memo(spark, "bench_shingles", dir)(
+          shingleSets(spark, dir)
+            .filter(pmod(col("doc_id"), lit(97)) === 0)
+            .select(explode(col("sh")).as("shingle")).distinct())
+          .collect().map(_.getString(0)))
+    }
+
+  /** The stored (window-hash → first-holder) dup-window ledger — the
+    * artifact BOTH probe shapes read (in-row broadcast below the size
+    * bound, Bloom + keyed join above it). */
+  private[dedup] def scrubLedgerStored(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.util.PlanMemo.memo(spark, "st19_ledger", dir) {
+      scrubWindows(
+        Tables.documents(spark, dir).filter(col("text").isNotNull)
+          .select(col("doc_id"), split(lower(col("text")), " ").as("w")))
+        .groupBy(col("h"))
+        .agg(min(col("doc_id")).as("keep_doc"),
+          count(lit(1)).as("n_occ"))
+        .filter(col("n_occ") >= 2)
+        .select(col("h"), col("keep_doc"))
+    }
+
+  /** Dup-window count of the stored ledger, memoized per (session,
+    * dir) — one count job decides the probe shape for every consumer
+    * in the process. */
+  private[dedup] def scrubLedgerCount(spark: SparkSession,
+      dir: String): Long =
+    graft.util.Memo(Some(spark), "scrub_count", dir) {
+      scrubLedgerStored(spark, dir).count()
+    }
+
+  /** Broadcast bound for the in-row scrub ledger, in dup WINDOWS: the
+    * flat (32-hex-hash, long) pairs run ~100 B/entry materialized, so
+    * 1M windows ≈ 100 MB on the driver and per executor — the same
+    * budget as the BFS frontier bound (TraceService). Above it the
+    * probe switches automatically to the v20b shape
+    * ([[scrubViaLedgerJoin]]): until round 10 this fallback was
+    * documented in SCALING.md "Honest limits" but not wired. */
+  private[dedup] val ScrubLedgerBroadcastMax: Long = 1000000L
+
+  /** Test seam: force the bound down so the fixture exercises the
+    * fallback path (DedupSpec pins both shapes bit-identical). */
+  @volatile private[graft] var scrubLedgerMaxOverride: Option[Long] = None
+  private[dedup] def scrubLedgerMax: Long =
+    scrubLedgerMaxOverride.getOrElse(ScrubLedgerBroadcastMax)
+
+  /** True when (session, dir)'s ledger fits the in-row broadcast. */
+  private[graft] def scrubLedgerFitsBroadcast(spark: SparkSession,
+      dir: String): Boolean =
+    scrubLedgerCount(spark, dir) <= scrubLedgerMax
+
   /** ST19: STREAMING span scrub — v67 as an ingest-time gate (copied
     * spans removed before a document lands), the st17 convention for
     * the span granularity: the duplicated-window LEDGER (hash →
@@ -160,125 +227,14 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     * Bloom runtime filter + keyed join is the right membership probe
     * (see the st19 docstring). Shared by st19 and the st25 ingest
     * DAG. */
-  private val scrubBc = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[Array[(String, Long)]]]()
-
-  /** Bloom bytes of the stored ledger for the over-the-bound join
-    * path — Option because an empty ledger aggregates to null and
-    * ConcurrentHashMap cannot hold null values. */
-  private val scrubBloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Option[Array[Byte]]]()
-
-  /** The %97 benchmark slice's DISTINCT shingles as a Spark broadcast,
-    * for the compiled in-row containment probe
-    * ([[graft.functions.SetHitCount]]) — round-11 ScaleBench finding:
-    * the 1-row bench-ARRAY crossJoin + array_intersect spelling
-    * rebuilt the bench hash set per document (O(|bench|)/row), and the
-    * fixture's bench slice co-grows with the corpus, so st25 measured
-    * 587× at ×100. The broadcast is bounded by the same
-    * benchmarks-are-small contract as v16's semi-join side; memoized
-    * per (session, dir) with the adaptiveNlist cache discipline.
-    * Shared by st17 and the st25 ingest DAG (their slices explode to
-    * the same distinct set — null-text docs contribute no shingles
-    * either way). */
-  private val benchBcCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[Array[String]]]()
-
-  private[dedup] def benchShinglesBc(spark: SparkSession, dir: String):
-      org.apache.spark.broadcast.Broadcast[Array[String]] = {
-    benchBcCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = benchBcCache.get(k)
-    if (hit != null) hit
-    else {
-      val v = spark.sparkContext.broadcast(
-        graft.util.PlanMemo.memo(spark, "bench_shingles", dir)(
-          shingleSets(spark, dir)
-            .filter(pmod(col("doc_id"), lit(97)) === 0)
-            .select(explode(col("sh")).as("shingle")).distinct())
-          .collect().map(_.getString(0)))
-      val prior = benchBcCache.putIfAbsent(k, v)
-      if (prior != null) { v.destroy(); prior } else v
-    }
-  }
-
-  /** The stored (window-hash → first-holder) dup-window ledger — the
-    * artifact BOTH probe shapes read (in-row broadcast below the size
-    * bound, Bloom + keyed join above it). */
-  private[dedup] def scrubLedgerStored(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "st19_ledger", dir) {
-      scrubWindows(
-        Tables.documents(spark, dir).filter(col("text").isNotNull)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("w")))
-        .groupBy(col("h"))
-        .agg(min(col("doc_id")).as("keep_doc"),
-          count(lit(1)).as("n_occ"))
-        .filter(col("n_occ") >= 2)
-        .select(col("h"), col("keep_doc"))
-    }
-
-  /** Dup-window count of the stored ledger, memoized per (session,
-    * dir) — one count job decides the probe shape for every consumer
-    * in the process. */
-  private val scrubCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-  private[dedup] def scrubLedgerCount(spark: SparkSession,
-      dir: String): Long = {
-    // stopped-session sweep + count-outside-lock (the adaptiveNlist
-    // pattern): a Spark job inside computeIfAbsent blocks unrelated
-    // keys in the same bin, and dead-session keys pin the session
-    // graph plus (for the sibling caches below) broadcast/Bloom bytes
-    scrubCountCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = scrubCountCache.get(k)
-    if (hit != null) hit
-    else {
-      val v: java.lang.Long = scrubLedgerStored(spark, dir).count()
-      val prior = scrubCountCache.putIfAbsent(k, v)
-      (if (prior != null) prior else v): Long
-    }
-  }
-
-  /** Broadcast bound for the in-row scrub ledger, in dup WINDOWS: the
-    * flat (32-hex-hash, long) pairs run ~100 B/entry materialized, so
-    * 1M windows ≈ 100 MB on the driver and per executor — the same
-    * budget as the BFS frontier bound (TraceService). Above it the
-    * probe switches automatically to the v20b shape
-    * ([[scrubViaLedgerJoin]]): until round 10 this fallback was
-    * documented in SCALING.md "Honest limits" but not wired. */
-  private[dedup] val ScrubLedgerBroadcastMax: Long = 1000000L
-
-  /** Test seam: force the bound down so the fixture exercises the
-    * fallback path (DedupSpec pins both shapes bit-identical). */
-  @volatile private[graft] var scrubLedgerMaxOverride: Option[Long] = None
-  private[dedup] def scrubLedgerMax: Long =
-    scrubLedgerMaxOverride.getOrElse(ScrubLedgerBroadcastMax)
-
-  /** True when (session, dir)'s ledger fits the in-row broadcast. */
-  private[graft] def scrubLedgerFitsBroadcast(spark: SparkSession,
-      dir: String): Boolean =
-    scrubLedgerCount(spark, dir) <= scrubLedgerMax
-
   private[dedup] def scrubLedgerBroadcast(spark: SparkSession,
       dir: String):
-      org.apache.spark.broadcast.Broadcast[Array[(String, Long)]] = {
-    scrubBc.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = scrubBc.get(k)
-    if (hit != null) hit
-    else {
-      // collect + broadcast OUTSIDE the map lock; a lost race leaks
-      // one redundant broadcast of a bounded ledger, never a wrong one
-      val v = spark.sparkContext.broadcast(
+      org.apache.spark.broadcast.Broadcast[Array[(String, Long)]] =
+    graft.util.Memo(Some(spark), "scrub_bc", dir) {
+      spark.sparkContext.broadcast(
         scrubLedgerStored(spark, dir).collect()
           .map(r => (r.getString(0), r.getLong(1))))
-      val prior = scrubBc.putIfAbsent(k, v)
-      if (prior != null) { v.destroy(); prior } else v
     }
-  }
 
   /** The over-the-broadcast-bound scrub probe — v20b's runtime-filter
     * shape applied to windows: a Bloom of the ledger's window hashes
@@ -300,19 +256,11 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     // the sketch depends only on (session, dir): memoized so the
     // streaming fallbacks (st19/st25 over the bound) pay the full-
     // ledger aggregation ONCE, not once per micro-batch (round-10
-    // review finding — the scrubBc convention applied to the bytes)
-    scrubBloomCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val bfKey = (spark, dir)
-    val bfHit = scrubBloomCache.get(bfKey)
-    val bfBytes = (if (bfHit != null) bfHit
-    else {
-      // aggregation job outside the map lock (adaptiveNlist pattern);
-      // deterministic value, so a lost race is harmless
-      val v = Option(BloomSketch.bloomBytes(stored, col("h"),
-        math.max(1L, scrubLedgerCount(spark, dir))))
-      val prior = scrubBloomCache.putIfAbsent(bfKey, v)
-      if (prior != null) prior else v
-    }).orNull
+    // review finding — the scrub_bc memo applied to the bytes)
+    val bfBytes = graft.util.Memo(Some(spark), "scrub_bloom", dir) {
+      BloomSketch.bloomBytes(stored, col("h"),
+        math.max(1L, scrubLedgerCount(spark, dir)))
+    }
     val wins = scrubWindows(df.select(col("doc_id"), col("w")))
     val candidates =
       if (bfBytes == null) wins.filter(lit(false)) // empty ledger

@@ -518,40 +518,18 @@ object RankOps extends QueryModule {
 
   /** Memoized 6-round training per (process, dir): v49 and v49b both
     * need the identical derivation, and the rounds are sequential
-    * driver-paced jobs — pay them once (the v19b/incAgg FutureTask
-    * convention). The post-merge word frame is materialized to a
-    * pid-suffixed parquet path, NOT kept as a checkpointed frame, so
-    * Bench's between-entry block release cannot invalidate it. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.FutureTask[
-      (Seq[(Int, String, String, Long)], String)]]()
-  private val bpeSeq = new java.util.concurrent.atomic.AtomicInteger()
-
+    * driver-paced jobs — pay them once. The post-merge word frame is
+    * materialized to a [[graft.util.Memo.path]], NOT kept as a
+    * checkpointed frame, so Bench's between-entry block release cannot
+    * invalidate it. */
   private def learnMergesCached(spark: SparkSession,
-      dir: String): (Seq[(Int, String, String, Long)], String) = {
-    val task = bpeCache.computeIfAbsent(dir,
-      _ => new java.util.concurrent.FutureTask(() => {
-        val (merges, words) = learnMerges(spark, dir, 6)
-        val path = graft.util.TempArtifacts.register(
-          s"${graft.util.TempArtifacts.fastBase}/graft_bpe_" +
-            s"${ProcessHandle.current().pid()}_${bpeSeq.getAndIncrement()}")
-        words.write.mode("overwrite").parquet(path)
-        (merges, path)
-      }))
-    task.run()
-    // the ArtifactCache evict-on-failure protocol: a transient build
-    // failure must not poison the key for the process's lifetime (and
-    // the caller gets the build's own exception, not the
-    // ExecutionException wrapper) — round-10 review; this private
-    // cache predates ArtifactCache.runEvicting and had kept the
-    // pre-eviction shape
-    try task.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        bpeCache.remove(dir, task)
-        throw e.getCause
+      dir: String): (Seq[(Int, String, String, Long)], String) =
+    graft.util.Memo(None, "bpe", dir) {
+      val (merges, words) = learnMerges(spark, dir, 6)
+      val path = graft.util.Memo.path("graft_bpe")
+      words.write.mode("overwrite").parquet(path)
+      (merges, path)
     }
-  }
 
   def bpeTrain(spark: SparkSession, dir: String, nMerges: Int = 6): DataFrame = {
     import spark.implicits._
@@ -674,30 +652,18 @@ object RankOps extends QueryModule {
 
   /** The 50-entry vocab as a driver-side pair list — a BOUNDED collect
     * of the memoized [[vocab50]] (LIMIT 50 by construction: the v29
-    * bounded-collect class), cached per (session, dir) so the three
+    * bounded-collect class), memoized per (session, dir) so the three
     * consumers (v4i, v4j's decode + reference arms) pay the collect
     * once. In-row literal-map lookups replace the old posexplode +
     * broadcast join + collect_list re-assembly per consumer: the
     * corpus never explodes or shuffles at all (round 13, guide §1.2
     * step 1 — same values, the join was only a 50-row dictionary). */
-  private val vocabLitCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Int)]]()
   private def vocabPairs(spark: SparkSession,
-      dir: String): Seq[(String, Int)] = {
-    vocabLitCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = vocabLitCache.get(k)
-    if (hit != null) hit
-    else {
-      // collect outside the map lock (the adaptiveNlist pattern); a
-      // lost race recomputes a deterministic 50-row list, never a
-      // wrong one
-      val v = vocab50(spark, dir).collect()
+      dir: String): Seq[(String, Int)] =
+    graft.util.Memo(Some(spark), "vocab_pairs", dir) {
+      vocab50(spark, dir).collect()
         .map(r => (r.getString(0), r.getInt(1))).toSeq
-      val prior = vocabLitCache.putIfAbsent(k, v)
-      if (prior != null) prior else v
     }
-  }
 
   /** V4i: vocabulary ENCODING — the sequel to v4e's vocabulary build:
     * map each doc's words to token ids under the learned top-50 vocab

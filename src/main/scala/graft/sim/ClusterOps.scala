@@ -353,7 +353,6 @@ object ClusterOps extends QueryModule {
     if (k == K) lloyd(spark, dir)
     else {
       val cents = graft.util.PlanMemo.memo(spark, s"coarse_cents_k$k", dir) {
-        graft.util.BuildCounters.inc(s"coarse:$dir:k$k")
         val pts = points(spark, dir)
         var c = pts.filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("xm").as("cm"))

@@ -373,26 +373,12 @@ object PqOps extends QueryModule {
     * fixture replay the K=8 Lloyd chain untouched; the adaptation —
     * and with it the hierarchical two-level assignment above 256
     * cells — engages only beyond test scale. */
-  def adaptiveCoarseK(spark: SparkSession, dir: String): Int = {
-    // stopped-session sweep + compute-outside-lock: the
-    // SimilarityOps.adaptiveNlist pattern verbatim — a Spark count()
-    // inside computeIfAbsent would block unrelated keys hashed to the
-    // same bin, and an unswept dead-session key pins the session graph
-    coarseKCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = coarseKCache.get(k)
-    if (hit != null) hit
-    else {
-      val v: Integer = math.min(math.max(ClusterOps.K.toLong,
+  def adaptiveCoarseK(spark: SparkSession, dir: String): Int =
+    graft.util.Memo(Some(spark), "coarseK", dir) {
+      math.min(math.max(ClusterOps.K.toLong,
         Tables.embeddings(spark, dir).count() / 250L),
         Int.MaxValue.toLong).toInt
-      val prior = coarseKCache.putIfAbsent(k, v)
-      (if (prior != null) prior else v): Int
     }
-  }
-
-  private val coarseKCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
 
   /** Write the IVF-PQ index INCREMENTALLY: base generation = the 90%
     * `vec_id % 10 != 0` slice, delta = the 10% append encoded with the

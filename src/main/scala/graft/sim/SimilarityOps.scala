@@ -232,30 +232,6 @@ object SimilarityOps extends QueryModule {
     }
   }
 
-  /** Per-process IVF build cache — the registry analog of "the index
-    * is built ONCE at ingest": every ANN / embedding-near-dup entry
-    * over the same (dir, nlist, iters) shares one normed projection
-    * and one Lloyd refinement instead of re-running the build per
-    * query (the build is deterministic, so sharing cannot change any
-    * result). The memo hands over a PARQUET PATH, never live frames:
-    * an earlier version cached the localCheckpoint'd DataFrames
-    * themselves, and any block-manager hygiene between entries (the
-    * bench unpersists leftover RDDs so query N+1 doesn't pay query N's
-    * memory) silently deleted the checkpoint blocks out from under the
-    * memo — the next consumer then replayed a truncated lineage and
-    * died. Paths are pid-suffixed (the IngestOps convention) so
-    * parallel test JVMs never clobber each other; keyed by session so
-    * a recreated session rebuilds rather than trusting stale files.
-    * Each cache MISS takes a FRESH monotonic-counter path with the
-    * build params spelled literally (review finding, round 6): no
-    * 32-bit hashCode to collide two distinct builds onto one path, and
-    * a rebuild from a second session writes a NEW directory instead of
-    * mode(overwrite)-swapping part files under a prior session's
-    * still-planned readers. */
-  private val ivfCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), String]()
-
   /** nlist sized to the corpus (FAISS practice: a roughly constant
     * expected cell size, here ~125 vectors — sf0.1's 2000/16, floor
     * 16) — the round-9 scale fix: SCALING.md measured the FIXED
@@ -264,67 +240,35 @@ object SimilarityOps extends QueryModule {
     * corpus. EXACTLY the old fixed default at every driver SF
     * (n ≤ 2000 → 16), so every oracle/recall band is untouched; the
     * adaptation only engages beyond test scale, where it holds the
-    * expected cell size (and so per-vector probe cost) constant. */
-  private val nlistCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
-
-  def adaptiveNlist(spark: SparkSession, dir: String): Int = {
-    // stopped-session sweep (the PlanMemo round-10 discipline): a
-    // strong dead-session key would pin the whole session graph
-    nlistCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = nlistCache.get(k)
-    if (hit != null) hit
-    else {
-      // the count job runs OUTSIDE any map lock (the PlanMemo
-      // monitor lesson: a Spark job inside computeIfAbsent blocks
-      // unrelated keys in the same bin); a lost race recomputes the
-      // same deterministic value
+    * expected cell size (and so per-vector probe cost) constant.
+    * Memoized per (session, dir), so the six IVF consumers (x2 bench
+    * runs) pay ONE count job per process. */
+  def adaptiveNlist(spark: SparkSession, dir: String): Int =
+    graft.util.Memo(Some(spark), "nlist", dir) {
       // clamp BEFORE narrowing: count/125 exceeds Int.MaxValue around
       // 2.7e11 vectors and a bare .toInt would wrap negative exactly
-      // in the regime this function exists for; memoized per
-      // (session, dir) so the six IVF consumers (x2 bench runs) pay
-      // ONE count job per process, the ivfCache convention
-      val v: Integer = math.min(math.max(16L,
+      // in the regime this function exists for
+      math.min(math.max(16L,
         Tables.embeddings(spark, dir).count() / 125L),
         Int.MaxValue.toLong).toInt
-      val prior = nlistCache.putIfAbsent(k, v)
-      (if (prior != null) prior else v): Int
     }
-  }
 
-  private val ivfLocks = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Object]()
-
+  /** Per-(session, dir, nlist, iters) IVF build — the registry analog
+    * of "the index is built ONCE at ingest": every ANN /
+    * embedding-near-dup entry over the same build params shares one
+    * normed projection and one Lloyd refinement instead of re-running
+    * the build per query (the build is deterministic, so sharing
+    * cannot change any result). The memo hands over a PARQUET PATH,
+    * never live frames: an earlier version cached the
+    * localCheckpoint'd DataFrames themselves, and any block-manager
+    * hygiene between entries (the bench unpersists leftover RDDs so
+    * query N+1 doesn't pay query N's memory) silently deleted the
+    * checkpoint blocks out from under the memo — the next consumer
+    * then replayed a truncated lineage and died. Keyed by session so
+    * a recreated session rebuilds rather than trusting stale files. */
   private[graft] def ivfBuild(spark: SparkSession, dir: String,
       nlist: Int, iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    ivfCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    ivfLocks.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (spark, dir, nlist, iters)
-    // the multi-job build runs under a PER-KEY monitor, never inside
-    // the ConcurrentHashMap's bin lock (the PlanMemo discipline —
-    // round-10 review: a minutes-long build in computeIfAbsent blocks
-    // unrelated keys hashed to the same bin and cannot safely call
-    // back into the caches)
-    var base = ivfCache.get(key)
-    if (base == null) {
-      val lock = ivfLocks.computeIfAbsent(key, _ => new Object)
-      lock.synchronized {
-        base = ivfCache.get(key)
-        if (base == null) {
-          base = buildIvf(spark, dir, nlist, iters)
-          ivfCache.put(key, base)
-        }
-      }
-    }
-    (spark.read.parquet(s"$base/e"),
-      spark.read.parquet(s"$base/cents"),
-      spark.read.parquet(s"$base/assign"))
-  }
-
-  private def buildIvf(spark: SparkSession, dir: String,
-      nlist: Int, iters: Int): String = {
-      graft.util.BuildCounters.inc(s"ivf:$dir:n${nlist}_i$iters")
+    val base = graft.util.Memo(Some(spark), s"ivf:n${nlist}_i$iters", dir) {
       // one materialization of the normed projection: every Lloyd
       // round and the final assignment re-scan e, and re-reading
       // parquet + re-computing norms per pass is pure repeated work
@@ -333,15 +277,16 @@ object SimilarityOps extends QueryModule {
       // pass at ingest)
       val e = withNorm(Tables.embeddings(spark, dir)).localCheckpoint()
       val cents = refineCentroids(e, nlist, iters)
-      val root = graft.util.TempArtifacts.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_ivf_" +
-          s"${ProcessHandle.current().pid()}_" +
-          s"${ivfCounter.incrementAndGet()}_n${nlist}_i$iters")
+      val root = graft.util.Memo.path(s"graft_ivf_n${nlist}_i$iters")
       e.write.mode("overwrite").parquet(s"$root/e")
       cents.write.mode("overwrite").parquet(s"$root/cents")
       assignTo(e, cents, nlist).write.mode("overwrite")
         .parquet(s"$root/assign")
       root
+    }
+    (spark.read.parquet(s"$base/e"),
+      spark.read.parquet(s"$base/cents"),
+      spark.read.parquet(s"$base/assign"))
   }
 
   /** IVF index: Lloyd-refined centroids + nearest-centroid assignment of

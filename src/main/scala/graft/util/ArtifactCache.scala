@@ -1,42 +1,14 @@
 package graft.util
 
 /** Once-per-(kind, dir) stored-artifact builder — THE index-build
-  * idiom (previously copied as three private FutureTask caches in
-  * RankOps/PqOps): `computeIfAbsent` only ALLOCATES the inert task,
-  * the multi-stage Spark build runs outside the map's bin lock via
-  * `FutureTask.run()` (a no-op for every caller but the first), paths
-  * are pid+counter-suffixed (never a 32-bit hash — the round-3
-  * fixture-clobber class) and registered for exit-time cleanup BEFORE
-  * the build so a JVM kill cannot leak a partial directory. */
+  * idiom: the build is a [[Memo]] entry (built once per process, evicted
+  * on failure), its path a fresh [[Memo.path]] registered for exit-time
+  * cleanup BEFORE the build so a JVM kill cannot leak a partial
+  * directory. */
 object ArtifactCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.FutureTask[String]]()
-  private val seq = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** The shared run/get/evict-on-failure protocol of both entry
-    * points: a failed build must not poison the key forever — evict
-    * so a later caller retries (fresh pid+seq path; the partial
-    * directory is already registered for exit-time cleanup) and
-    * surface the build's own exception, not the wrapper. */
-  private def runEvicting(key: (String, String))(
-      mk: () => String): String = {
-    val task = cache.computeIfAbsent(key,
-      _ => new java.util.concurrent.FutureTask[String](() => mk()))
-    task.run()
-    try task.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        cache.remove(key, task)
-        throw e.getCause
-    }
-  }
-
   def cached(kind: String, dir: String)(build: String => Unit): String =
-    runEvicting((kind, dir)) { () =>
-      BuildCounters.inc(s"artifact:$kind:$dir")
-      val path = TempArtifacts.register(
-        s"${graft.util.TempArtifacts.fastBase}/graft_${kind}_" +
-          s"${ProcessHandle.current().pid()}_${seq.getAndIncrement()}")
+    Memo(None, s"artifact:$kind", dir) {
+      val path = Memo.path(s"graft_$kind")
       build(path)
       path
     }
@@ -44,7 +16,7 @@ object ArtifactCache {
   // ---- persistent (cross-process) catalog ----------------------------
   //
   // The honest 100 TB shape computes an index/codebook/probe ONCE and
-  // REUSES it across runs; the per-process map above forgets everything
+  // REUSES it across runs; the per-process memo above forgets everything
   // at exit, so every process (Verify, Bench, each test JVM) re-built
   // the same stored artifacts. `persistent` adds a disk catalog under
   // one well-known root, keyed by (kind, builder version, content
@@ -96,17 +68,15 @@ object ArtifactCache {
     * path. */
   def persistent(kind: String, version: String, dir: String)(
       build: String => Unit): String =
-    runEvicting((s"$kind@$version", dir)) { () =>
+    Memo(None, s"persistent:$kind@$version", dir, counted = false) {
       val fp = inputFingerprint(dir)
       val finalDir =
         new java.io.File(catalogRoot, s"${kind}_${version}_$fp")
       val marker = new java.io.File(finalDir, "_COMPLETE")
       if (!marker.exists()) {
         BuildCounters.inc(s"persistent:$kind@$version:$dir")
-        val tmp = TempArtifacts.register(new java.io.File(catalogRoot,
-          s".build_${kind}_${version}_${fp}_" +
-            s"${ProcessHandle.current().pid()}_${seq.getAndIncrement()}")
-          .getPath)
+        val tmp = Memo.path(
+          s"${catalogRoot.getName}/.build_${kind}_${version}_$fp")
         build(tmp)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(tmp, "_COMPLETE"),
@@ -126,8 +96,10 @@ object ArtifactCache {
     * `prefix` so a spec can prove the disk catalog alone satisfies a
     * "cold process" lookup (prefix-scoped so the spec never evicts
     * other suites' live artifacts mid-JVM). */
-  private[graft] def resetInProcess(prefix: String): Unit =
-    cache.keySet.removeIf(_._1.startsWith(prefix)): Unit
+  private[graft] def resetInProcess(prefix: String): Unit = {
+    Memo.forget(s"artifact:$prefix")
+    Memo.forget(s"persistent:$prefix")
+  }
 
   /** Snapshot of a directory's parquet part files (path → length) —
     * the append-contract witness: a delta write must leave every base

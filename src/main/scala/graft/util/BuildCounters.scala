@@ -1,19 +1,21 @@
 package graft.util
 
-/** Per-key build counters for the three shared-artifact caches
-  * (ArtifactCache, PlanMemo, SimilarityOps.ivfBuild) — the round-8
+/** Per-key build counters for the shared-artifact memo store
+  * ([[Memo]], and through it PlanMemo and ArtifactCache) — the round-8
   * regression triage instrument: a shared artifact (inverted index,
-  * IVF build, memoized exact baseline) must build ONCE per process no
-  * matter how many registry entries consume it. A count of 2+ for one
-  * key means some entry is paying a rebuild the memo was supposed to
-  * absorb — exactly the failure class suspected behind the r8
-  * v2d2/v19/v27 bench deltas. BuildCountSpec drives the touched entry
-  * set twice and asserts every key built at most once.
+  * IVF build, memoized exact baseline, scrub-ledger broadcast) must
+  * build ONCE per process no matter how many registry entries consume
+  * it. A count of 2+ for one key means some entry is paying a rebuild
+  * the memo was supposed to absorb — exactly the failure class
+  * suspected behind the r8 v2d2/v19/v27 bench deltas. BuildCountSpec
+  * drives the touched entry set twice and asserts every key built at
+  * most once.
   *
-  * Counting happens INSIDE each cache's build critical section, so a
-  * hit never increments and a concurrent double-build (if a cache's
-  * locking were broken) shows up as a count of 2 — the counter
-  * doubles as a concurrency regression tripwire.
+  * Counting happens INSIDE the memo's build, so a hit never increments
+  * and a concurrent double-build (if the memo's build-once rule were
+  * broken) shows up as a count of 2 — the counter doubles as a
+  * concurrency regression tripwire. The persistent catalog counts only
+  * the builds it publishes, not the artifacts it adopts.
   */
 object BuildCounters {
   private val counts = new java.util.concurrent.ConcurrentHashMap[

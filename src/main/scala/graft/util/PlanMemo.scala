@@ -22,66 +22,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rounded floats, unique-tie-break sorts), so reading the stored result
   * is bit-identical to re-running the plan.
   *
-  * Path safety (the ivfCache review finding, round 6): each cache MISS
-  * gets a fresh pid + monotonic-counter suffixed path, so two distinct
-  * keys can never collide onto one path (no reliance on 32-bit
-  * hashCodes) and a rebuild from a second SparkSession writes a NEW
-  * path instead of mode(overwrite)-swapping part files under a prior
-  * session's still-planned readers. Keyed by (session, key, dir): a
-  * recreated session rebuilds rather than trusting files it didn't
-  * write; every runner uses a single SF per process, and a second dir
-  * in one session simply memoizes separately. Paths are exit-deleted
-  * ([[TempArtifacts]]) — unlike the witness DUMP paths, no oracle SQL
-  * ever references a memo path, so cleanup is safe.
+  * Storage and concurrency are [[Memo]]'s: one build per
+  * (session, key, dir) on a fresh pid+seq path under
+  * [[TempArtifacts.fastBase]], exit-deleted — unlike the witness DUMP
+  * paths, no oracle SQL ever references a memo path, so cleanup is
+  * safe. A recreated session rebuilds rather than trusting files it
+  * didn't write; every runner uses a single SF per process, and a
+  * second dir in one session simply memoizes separately.
   */
 object PlanMemo {
-  private type Key = (SparkSession, String, String)
-  private val counter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val paths =
-    new java.util.concurrent.ConcurrentHashMap[Key, String]()
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[Key, Object]()
-
   /** The memoized result of `build` as a DataFrame read from its
     * materialized parquet; `build` runs at most once per
-    * (session, key, dir). NOTE: parquet round-trips drop sort order —
-    * callers that promise an ordered result re-apply their ORDER BY on
-    * the (small) read side.
-    *
-    * Concurrency: builds run under a PER-KEY monitor, never inside a
-    * ConcurrentHashMap compute — a build lambda is allowed to call
-    * memo() for a DIFFERENT key (the codes→codebooks chain does), and
-    * a nested computeIfAbsent on one shared map can deadlock or throw
-    * 'recursive update' when keys land in the same bin. Only a CYCLE
-    * of memo dependencies could deadlock the per-key form, and the
-    * dependency graph here is a DAG by construction. */
+    * (session, key, dir), and may itself call memo() for a different
+    * key. NOTE: parquet round-trips drop sort order — callers that
+    * promise an ordered result re-apply their ORDER BY on the (small)
+    * read side. */
   def memo(spark: SparkSession, key: String, dir: String)
-      (build: => DataFrame): DataFrame = {
-    // entries keyed by a STOPPED session can never be read again (the
-    // recreated-session rule above forces a rebuild under the new
-    // key), but a strong reference here would pin every dead session
-    // — and everything it transitively holds — for the JVM's lifetime
-    // (round-10 review). The maps are small (one entry per memoized
-    // plan), so a sweep on entry is cheaper than weak-ref machinery.
-    paths.keySet.removeIf(_._1.sparkContext.isStopped)
-    locks.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, key, dir)
-    var p = paths.get(k)
-    if (p == null) {
-      val lock = locks.computeIfAbsent(k, _ => new Object)
-      lock.synchronized {
-        p = paths.get(k)
-        if (p == null) {
-          BuildCounters.inc(s"memo:$key:$dir")
-          p = TempArtifacts.register(
-            s"${graft.util.TempArtifacts.fastBase}/graft_memo_" +
-              s"${ProcessHandle.current().pid()}_" +
-              s"${counter.incrementAndGet()}_$key")
-          build.write.mode("overwrite").parquet(p)
-          paths.put(k, p)
-        }
-      }
-    }
-    spark.read.parquet(p)
-  }
+      (build: => DataFrame): DataFrame =
+    spark.read.parquet(Memo(Some(spark), s"memo:$key", dir) {
+      val p = Memo.path(s"graft_memo_$key")
+      build.write.mode("overwrite").parquet(p)
+      p
+    })
 }

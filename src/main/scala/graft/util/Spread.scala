@@ -20,24 +20,28 @@ import org.apache.spark.sql.DataFrame
   * per-row output is order-independent, so results are unchanged.
   */
 object Spread {
-  // The partition probe (df.rdd) compiles a separate physical plan per
-  // invocation; the callers construct the SAME (table, dir) frame many
-  // times per process, so the probed count is memoized per semantically
-  // equal logical plan (round-13 ADVICE). The probe reflects the
-  // pre-AQE scan split by design: it asks "can this INPUT spread on its
-  // own", which is a property of the file layout, not of AQE coalescing.
-  private val plannedParts =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Integer]()
-
   /** Repartition `df` round-robin to the session's default parallelism
     * iff its planned execution has fewer partitions than that — i.e.
-    * iff the input cannot spread on its own. */
+    * iff the input cannot spread on its own.
+    *
+    * Precondition: `df` is a static table read (a filter/projection
+    * over a table that does not change for the life of the session) —
+    * both callers (MultimodalOps' media tables) meet it. The partition
+    * probe (df.rdd) compiles a separate physical plan per invocation,
+    * and the callers construct the SAME frame many times per process,
+    * so the probed count is a [[Memo]] entry per (session, semantically
+    * equal logical plan): swept with its session, and valid for as long
+    * as the input's file layout is, which the precondition makes the
+    * session's lifetime. The probe reflects the pre-AQE scan split by
+    * design: it asks "can this INPUT spread on its own", a property of
+    * the file layout, not of AQE coalescing. */
   def toCores(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val key = (System.identityHashCode(df.sparkSession),
-      df.queryExecution.logical.semanticHash())
-    val planned = plannedParts.computeIfAbsent(key,
-      _ => Integer.valueOf(df.rdd.getNumPartitions))
+    val spark = df.sparkSession
+    val target = spark.sparkContext.defaultParallelism
+    val planned = Memo(Some(spark), "spread",
+      df.queryExecution.logical.semanticHash().toString) {
+      df.rdd.getNumPartitions
+    }
     if (planned < target) df.repartition(target) else df
   }
 }

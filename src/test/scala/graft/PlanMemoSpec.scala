@@ -65,4 +65,43 @@ class PlanMemoSpec extends SparkSpec {
       sys.error("rebuild attempted"))
     assert(a2.count() === 3)
   }
+
+  test("Memo values: concurrent callers share one build of the identical " +
+    "instance; a failed build surfaces its own exception, then rebuilds") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val tasks = (1 to 16).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Object] {
+          override def call(): Object = {
+            start.await()
+            graft.util.Memo(Some(spark), "pmspec_value", "k3") {
+              builds.incrementAndGet()
+              Thread.sleep(50)
+              new Object
+            }
+          }
+        })
+      }
+      start.countDown()
+      val values = tasks.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get() === 1, s"build ran ${builds.get()} times")
+      assert(values.forall(_ eq values.head), "callers saw distinct instances")
+    } finally pool.shutdownNow()
+
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    def call(fail: Boolean): String =
+      graft.util.Memo(Some(spark), "pmspec_value_fail", "k3") {
+        attempts.incrementAndGet()
+        if (fail) throw new IllegalStateException("value boom")
+        "built"
+      }
+    val e = intercept[IllegalStateException] { call(fail = true) }
+    assert(e.getMessage === "value boom")
+    assert(call(fail = false) === "built")
+    assert(attempts.get() === 2)
+    assert(call(fail = true) === "built") // the success is now memoized
+    assert(attempts.get() === 2)
+  }
 }

@@ -54,8 +54,7 @@ object IngestOps extends QueryModule {
     * and a second `mode("overwrite")` write would replace the part file
     * with a new UUID name, breaking any reader that already planned
     * against the old listing (a2a3's plan is built before a4b runs when
-    * a caller constructs all registry DataFrames up front, as
-    * ContractSpec does). */
+    * a caller constructs all registry DataFrames up front). */
   private val fixtureOnce = new graft.util.OncePerProcess("OTLP fixture")
   private def dumpFixture(spark: SparkSession): DataFrame = {
     import spark.implicits._

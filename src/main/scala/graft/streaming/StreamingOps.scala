@@ -294,14 +294,7 @@ object StreamingOps extends QueryModule {
     * matched rows are final once emitted. */
   def runToBatch(spark: SparkSession, agg: DataFrame, name: String,
       mode: String = "complete", shufflePartitions: Int = 2): DataFrame = {
-    // profiling seam (never set by the driver): override every drive's
-    // state-store/shuffle sizing for an A/B without touching call
-    // sites. Round-12 A/B at 8 vs 2 showed no win outside host noise
-    // on the toy batches, so 2 stays the default.
-    val parts = sys.env.get("SPARK_GRAFT_DRIVE_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(shufflePartitions)
-    withStreamSizedShuffle(spark, parts) {
+    withStreamSizedShuffle(spark, shufflePartitions) {
       val q = agg.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()

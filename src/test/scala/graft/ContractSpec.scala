@@ -1,53 +1,9 @@
 package graft
 
-import org.apache.spark.sql.types._
-
-/** Driver-contract invariants for every registered query: the properties
-  * the DuckDB hash-compare depends on, enforced structurally so a future
-  * operator can't silently regress them. */
+/** Invariants the DuckDB hash-compare depends on, in the oracle SQL and
+  * the exact-decimal helpers. Each entry's output contract
+  * (column types and names, rows) is checked by RegistrySweepSpec. */
 class ContractSpec extends SparkSpec {
-
-  private lazy val results =
-    SparkEntry.all.map(q => q -> q.run(spark, sf0001))
-
-  test("no output column is a timestamp (epoch longs only - type drift)") {
-    results.foreach { case (q, df) =>
-      withClue(q.id) {
-        assert(!df.schema.fields.exists(f =>
-          f.dataType.isInstanceOf[TimestampType] ||
-            f.dataType.isInstanceOf[TimestampNTZType] ||
-            f.dataType.isInstanceOf[DateType]))
-      }
-    }
-  }
-
-  test("no output column is a decimal (cast to double before emitting)") {
-    results.foreach { case (q, df) =>
-      withClue(q.id) {
-        assert(!df.schema.fields.exists(
-          _.dataType.isInstanceOf[DecimalType]))
-      }
-    }
-  }
-
-  test("column names are lowercase, unique, and oracle-friendly") {
-    results.foreach { case (q, df) =>
-      withClue(q.id) {
-        assert(df.columns.forall(c => c == c.toLowerCase),
-          s"non-lowercase column in ${df.columns.mkString(",")}")
-        assert(df.columns.distinct.length === df.columns.length)
-        assert(df.columns.forall(_.matches("[a-z][a-z0-9_]*")))
-      }
-    }
-  }
-
-  test("every oracle-declared query yields rows at sf0.001") {
-    results.foreach { case (q, df) =>
-      if (q.oracle.isDefined) {
-        withClue(q.id) { assert(df.count() > 0) }
-      }
-    }
-  }
 
   test("oracle SQL references only known tables") {
     val known = Tables.names.toSet

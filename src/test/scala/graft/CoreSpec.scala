@@ -19,15 +19,6 @@ class CoreSpec extends SparkSpec {
     assert(keys == keys.sorted && keys.distinct == keys)
   }
 
-  test("every registered query runs on sf0.001 and is deterministic-shaped") {
-    SparkEntry.all.foreach { q =>
-      val df = q.run(spark, sf0001)
-      val n = df.count()
-      assert(n >= 0, s"${q.id} failed")
-      withClue(q.id) { assert(df.columns.distinct.length == df.columns.length) }
-    }
-  }
-
   test("query ids are unique and every oracle key has a query") {
     val ids = SparkEntry.all.map(_.id)
     assert(ids.distinct.length == ids.length)
@@ -54,13 +45,9 @@ class CoreSpec extends SparkSpec {
     val byUser = ev.groupBy(_._1)
     val expected = byUser.map { case (u, vs) =>
       val avg = vs.map(_._2).sum / vs.length
-      u -> vs.count(_._2 > 2 * avg)
+      u -> vs.count(_._2 > 2 * avg).toLong
     }
-    df.collect().foreach { r =>
-      val u = r.getLong(0)
-      // FP tolerance: the engine's exact-decimal avg may differ from this
-      // naive double sum by an ulp; issue counts still must be close.
-      assert(math.abs(r.getLong(4) - expected(u)) <= 0)
-    }
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(4)).toSeq
+    assert(got.sortBy(_._1) == expected.toSeq.sortBy(_._1))
   }
 }

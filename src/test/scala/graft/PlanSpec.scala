@@ -390,77 +390,4 @@ class PlanSpec extends SparkSpec {
         assert(w.partitionSpec.nonEmpty, w.toString)
     }
   }
-
-  /** The generic anti-pattern detector behind the GLOBAL SWEEP test:
-    * flags (a) joins with no equality predicate between their sides
-    * (nested-loop at execution) where NEITHER side is bounded, and
-    * (b) windows partitioned only by constants over raw (un-aggregated)
-    * rows. "Bounded" = every path from the node to a leaf crosses an
-    * Aggregate / Range / LocalRelation / Limit — frames whose
-    * cardinality is fixed by construction (histograms, calendar grids,
-    * fence tables, top-k), not by the data volume — or the side carries
-    * an EXPLICIT broadcast() hint (the author's reviewed claim of
-    * smallness: the 1-row query vectors, corpus totals and centroid
-    * tables each carry their own per-query pin above; an un-hinted
-    * unbounded nested loop is always a bug). */
-  private def sweepProblems(id: String, df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def rawBelow(p: LogicalPlan): Boolean = p match {
-      case _: Aggregate => false
-      case _: Range => false
-      case _: LocalRelation | _: OneRowRelation => false
-      case _: GlobalLimit | _: LocalLimit => false
-      case n if n.children.isEmpty => true
-      case n => n.children.exists(rawBelow)
-    }
-    def broadcastHinted(h: Option[HintInfo]): Boolean =
-      h.exists(_.strategy.contains(BROADCAST))
-    val lp = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.optimizedPlan
-    val badJoins = lp.collect {
-      case j: Join
-          if !j.condition.exists(_.collectFirst {
-            case _: EqualTo | _: EqualNullSafe => ()
-          }.isDefined) && rawBelow(j.left) && rawBelow(j.right) &&
-            !broadcastHinted(j.hint.leftHint) &&
-            !broadcastHinted(j.hint.rightHint) =>
-        s"$id: nested-loop-shaped ${j.joinType} join, both sides unbounded"
-    }
-    val badWindows = lp.collect {
-      case w: Window
-          if w.partitionSpec.forall(_.foldable) && rawBelow(w.child) =>
-        s"$id: constant-partitioned window over raw rows"
-    }
-    badJoins ++ badWindows
-  }
-
-  test("GLOBAL SWEEP: no registry entry plans a nested-loop join over " +
-    "unbounded inputs or a constant-partitioned window over raw rows") {
-    // The generic backstop behind the per-query pins above: the next
-    // w15-class BETWEEN-join BNLJ or lit(1)-window over a raw scan is
-    // caught the day it is registered.
-    val problems = SparkEntry.all.flatMap(gq =>
-      sweepProblems(gq.id, gq.run(spark, sf0001)))
-    assert(problems.isEmpty, problems.mkString("\n"))
-  }
-
-  test("the sweep detector actually trips on the bug classes it guards") {
-    // a detector that never fires proves nothing: feed it the w15-class
-    // BETWEEN self-join and a lit(1)-window over a raw scan and require
-    // BOTH to be flagged
-    import org.apache.spark.sql.expressions.{Window => WSpec}
-    import org.apache.spark.sql.functions.{col, lit, row_number}
-    val ev = Tables.events(spark, sf0001)
-    val bnlj = ev.select(col("user_id").as("u"), col("ts_s").as("a"))
-      .join(ev.select(col("ts_s").as("b")),
-        col("b") >= col("a") && col("b") < col("a") + 3600L)
-    assert(sweepProblems("bad_join", bnlj)
-      .exists(_.contains("nested-loop")), "BETWEEN self-join not flagged")
-    val constWin = ev.withColumn("rn",
-      row_number().over(WSpec.partitionBy(lit(1)).orderBy(col("ts_s"))))
-    assert(sweepProblems("bad_window", constWin)
-      .exists(_.contains("constant-partitioned")),
-      "lit(1) window over raw rows not flagged")
-  }
 }

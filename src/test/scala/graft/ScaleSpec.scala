@@ -265,51 +265,6 @@ class ScaleSpec extends SparkSpec {
         s"rasters; got ${pairs.mkString(",")}")
   }
 
-  test("registry results are shuffle-partition-count independent") {
-    // the determinism CONTRACT (Registry scaladoc): unique-key ORDER BY
-    // + Exact decimal aggregation means re-planning with a different
-    // parallelism cannot change any result. Pin it on a cross-module
-    // sample (join, window, series, dedup, mix, temporal joins, text)
-    // instead of trusting the one-off manual cpus=4/32 check.
-    val sample = Seq("q3_shipping_priority", "t04_endpoint_latencies",
-      "t10_trace_counts", "v1_dedup_exact", "v8_per_source_cap",
-      "v14_sample_mix", "v15_token_packing", "w1_asof_join",
-      "w2_range_join", "v4g_term_scores",
-      // late round-4: CDC window over a union, BM25's decimal-sum
-      // ranking, the substring pair join over a cached explode
-      "w3_merge_upsert", "v19_bm25_search", "v22_substring_dup",
-      // final round-4: iterative BFS + checkpoint loop, scaled-integer
-      // PageRank, the sharded sweep-line prefix-sum, full-outer diff,
-      // bigram count join, hash sampling
-      "u5_critical_path", "v29_pagerank", "w8_max_concurrency",
-      "v31_snapshot_diff", "v27_rare_bigrams", "v34_importance_sample",
-      // session-4: bounded-frame windows (drift shares, gap-fill
-      // neighbors, water-filling prefix sums, vocab-growth cumsum),
-      // signed-division trend, CUBE's Expand, dedup-weighted draw
-      "v35_drift", "w11_trend", "w12_gap_fill", "w13_cube",
-      "v40_token_budget", "v41_dedup_weighted_sample", "v42_vocab_growth",
-      // session-4 late: histogram fences, in-row EMA fold, embedding
-      // micro-centroids, the zero-filled pair matrix
-      "v36b_mad_histogram", "w14_ema", "v39_embedding_drift",
-      "v43_cross_source_dup",
-      // session-4 final: layered session windows, trailing-distinct
-      // join, weekday shares, vocab membership probe
-      "u7_attribution", "w15_stickiness", "w16_weekday_profile",
-      "v44_oov_rate")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val at32 = sample.map { id =>
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        id -> SparkEntry.queries(id)(spark, sf0001).collect().toSeq
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", "5")
-      at32.foreach { case (id, want) =>
-        val got = SparkEntry.queries(id)(spark, sf0001).collect().toSeq
-        withClue(id) { assert(got === want) }
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   test("salted join equals plain join") {
     import spark.implicits._
     val probe = Seq((1, "a"), (1, "b"), (2, "c"), (3, "d"))

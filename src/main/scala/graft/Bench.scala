@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -86,30 +85,15 @@ object Bench {
     // the suite total as an overstatement.
     val NominalCalibSec = 0.13
     val calibStart = calibrate()
-    // optional comma-separated substring filter for local iteration
-    // (the driver never sets it: full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq).getOrElse(Seq.empty)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.isEmpty || only.exists(name.contains) }
-    // Per-query hygiene: operators may cache() for intra-query reuse (e.g.
-    // the v22 window table feeds three branches of one DAG); dropping the
-    // cache between entries keeps query N's number from paying query N-1's
-    // leftover blocks + GC pressure. Round 5 measured the contamination at
-    // up to 18x (v22b: 190s in-suite vs 10.4s isolated). Failures are
-    // recorded as -1 so an erroring entry reads as broken, not as fast.
+    // Failures are recorded as -1 so an erroring entry reads as broken,
+    // not as fast; what threw is named on stderr. Drive.run releases
+    // the entry's cached blocks and persistent RDDs after each run.
     // Best-of-2 per entry (round-6 review): two same-code full-suite
     // runs disagreed up to 5x on individual entries — host contention
     // and IO noise, not plan changes — so a single sample is not a
     // reproducible number. Each entry runs twice with the full cache
     // hygiene between runs; the MIN is recorded (the run least
-    // polluted by external noise). Entry-level hygiene still holds:
-    // clearCache drops only CacheManager entries; frames materialized
-    // via localCheckpoint (BPE word tables, BFS frontiers, graph
-    // edges) pin block-manager memory until the ContextCleaner gets
-    // to them — release those too so the next run starts clean. Safe:
-    // every cross-entry memo in this repo hands over a parquet PATH,
-    // never a persisted frame.
+    // polluted by external noise).
     // Interleaved contention canary (round-10 verdict "What's wrong"
     // #1: the start/end calibration pair read 1.007 on a run whose
     // MID-RUN entries blew up 10x — endpoint probes are necessary but
@@ -129,29 +113,20 @@ object Bench {
     val midCalib = scala.collection.mutable.ArrayBuffer[Double]()
     val sampleLog =
       scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
-    def once(fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // Force.rows, NOT count(): count lets Catalyst prune computed
-      // columns and eliminate unique-keyed joins, timing a fraction of
-      // the query the driver actually hashes (see Force's scaladoc)
-      val ok = try { graft.util.Force.rows(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      if (ok) dt else -1.0
+    def once(q: GraftQuery): Double = {
+      val r = Drive.run(spark, q.run(_, sfDir))
+      r.problem.foreach(p => System.err.println(s"[bench] ${q.id} failed: $p"))
+      if (r.problem.isEmpty) (r.constructNs + r.executeNs) / 1e9 else -1.0
     }
-    val sel = selected.toSeq
-    val firstPass = sel.zipWithIndex.map { case ((name, fn), idx) =>
+    val sel = Drive.selected
+    val firstPass = sel.zipWithIndex.map { case (q, idx) =>
       if (idx > 0 && idx % CanaryEvery == 0)
         midCalib += math.min(calibOnce(), calibOnce())
-      val (a, b) = (once(fn), once(fn))
-      sampleLog += ((name, a, b))
+      val (a, b) = (once(q), once(q))
+      sampleLog += ((q.id, a, b))
       // an erroring entry must read as broken, not fast: -1 unless
       // BOTH runs succeed (a flaky single failure is itself a signal)
-      name -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
+      q.id -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
     }
     val calibEnd = calibrate()
     // END-OF-SUITE RETRY for contention-window entries (the first two
@@ -235,12 +210,12 @@ object Bench {
         .exists(b => v > math.max(2 * b + 0.15, 3 * b)) =>
         name }.toSet
     val retrySample = scala.collection.mutable.Map[String, Double]()
-    sel.zipWithIndex.foreach { case ((name, fn), idx) =>
+    sel.zipWithIndex.foreach { case (q, idx) =>
       if (firstPass(idx)._2 >= 0 &&
-          (contendedWindow(idx) || noiseSplit0.contains(name) ||
-            overBaseline0.contains(name))) {
-        val c = once(fn)
-        if (c >= 0) retrySample(name) = c
+          (contendedWindow(idx) || noiseSplit0.contains(q.id) ||
+            overBaseline0.contains(q.id))) {
+        val c = once(q)
+        if (c >= 0) retrySample(q.id) = c
       }
     }
     val results = firstPass.map { case (name, v) =>

@@ -30,16 +30,15 @@ object StreamProf {
     val names = if (args.nonEmpty) args.toSeq else Seq("st25", "st1")
     names.foreach { n =>
       // exact name or '<prefix>_' — bare startsWith("st1") would hit
-      // whichever of st10..st19 the Map's iteration order offers first
-      val (full, fn) = SparkEntry.queries
-        .find(e => e._1 == n || e._1.startsWith(n + "_"))
-        .orElse(SparkEntry.queries.find(_._1.startsWith(n)))
+      // the first of st10..st19 in registry order
+      val q = SparkEntry.all.find(q => q.id == n || q.id.startsWith(n + "_"))
+        .orElse(SparkEntry.all.find(_.id.startsWith(n)))
         .getOrElse(sys.error(s"no entry $n"))
       (1 to 2).foreach { run =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"== $full run $run: $dt%.2f s")
+        val r = Drive.run(spark, q.run(_, sfDir))
+        println(f"== ${q.id} run $run: construct ${r.constructNs / 1e9}%.2f s" +
+          f", execute ${r.executeNs / 1e9}%.2f s" +
+          r.problem.map(p => s", failed: $p").getOrElse(""))
       }
     }
     Thread.sleep(500) // listener bus drain

@@ -1,32 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected registry entry's result
+  * → parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated substring filter for local iteration
-    // (the driver never sets it: full dump)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq).getOrElse(Seq.empty)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.isEmpty || only.exists(name.contains) }
     // Failures must be VISIBLE, not just absent: round 5's testdata schema
     // change broke every events-based entry, and because a failed entry
     // simply produced no dump, the driver's correctness report silently
     // shrank from 154 rows to 82 all-green ones. verify_errors.json makes
     // a skipped entry a first-class artifact the driver/judge can see.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Drive.selected.foreach { q =>
+      val r = Drive.run(spark, q.run(_, sfDir), { df =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.id}")
+        0L
+      })
+      r.problem.foreach { p =>
+        errors(q.id) = p
+        System.err.println(s"[verify] ${q.id} failed: $p")
       }
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -341,7 +341,8 @@ object SimilarityOps extends QueryModule {
     * single-cell-both-sides form measured macro recall@5 = 0.20 at
     * sf0.1 (a vector's true neighbours usually straddle cells at
     * nlist=16 over these weakly-clustered synthetic vectors). The r7
-    * witnessed sweep (KnnTune, sf0.1, sampled exact baseline):
+    * witnessed sweep (sf0.1, recall@5 against the sampled
+    * [[exactKnn]] baseline):
     * nprobe 4/8/12 → recall 0.53/0.79/0.93 at 1 Lloyd iter, and
     * 0.56/0.79/0.93 at 3 iters — extra refinement moves nothing here
     * (the synthetic vectors have no real cluster structure for Lloyd

@@ -1,24 +1,25 @@
 package graft
 
-import graft.util.{BuildCounters, Force}
+import graft.util.BuildCounters
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** The one Tier-1 pass over the whole registry: each entry is built
   * ONCE at sf0.001 (a streaming entry runs its drive in that build) and
-  * fully materialised with [[Force.rows]], not `count()`, which prunes
-  * computed columns and drops joins. Cached blocks are released between
-  * entries as `Bench.once` does. An entry that throws is recorded and
-  * the pass carries on; the tests are checks over its records. */
+  * run through [[Drive.run]] as Bench runs it: fully materialised, not
+  * `count()`ed, with cached blocks released after it. An entry that
+  * throws is recorded and the pass carries on; the tests are checks
+  * over its records. */
 class RegistrySweepSpec extends SparkSpec {
 
   /** What the pass saw of one entry. `schema` is None when the build
-    * threw, `rows` when the build or the materialisation threw;
-    * `faults` says what threw and whether the SparkContext stopped. */
-  private case class Record(q: GraftQuery,
-      schema: Option[StructType] = None, problems: Seq[String] = Nil,
-      rows: Option[Long] = None, collected: Seq[Row] = Nil,
-      faults: Seq[String] = Nil)
+    * threw; `run` holds the rows, what threw and whether the
+    * SparkContext stopped. */
+  private case class Record(q: GraftQuery, run: Drive.Result,
+      schema: Option[StructType], problems: Seq[String],
+      collected: Seq[Row]) {
+    def faults: Seq[String] = run.problem.toSeq
+  }
 
   /** Re-run at another shuffle partition count, these must return the
     * same rows: unique-key ORDER BY and Exact decimal aggregation make
@@ -42,30 +43,37 @@ class RegistrySweepSpec extends SparkSpec {
     "u7_attribution", "w15_stickiness", "w16_weekday_profile",
     "v44_oov_rate")
 
-  private def release(s: SparkSession): Unit = {
-    s.catalog.clearCache()
-    s.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-  }
-
   /** The pass. Each entry asks [[SparkSpec.session]] for the session,
     * so an entry that stops the SparkContext is named in its record and
-    * the next entry runs on a rebuilt one. */
-  private lazy val records: Seq[Record] = SparkEntry.all.map { q =>
-    val s = SparkSpec.session(suiteName)
-    var rec = Record(q)
-    try {
-      val df = q.run(s, sf0001)
-      rec = rec.copy(schema = Some(df.schema),
-        problems = sweepProblems(q.id, df))
-      if (partitionSample(q.id)) {
-        val rows = df.collect().toSeq
-        rec = rec.copy(rows = Some(rows.length.toLong), collected = rows)
-      } else rec = rec.copy(rows = Some(Force.rows(df)))
-    } catch { case e: Throwable => rec = rec.copy(faults = Seq(s"threw $e")) }
-    if (s.sparkContext.isStopped)
-      rec.copy(faults = rec.faults :+ "stopped the SparkContext")
-    else { release(s); rec }
+    * the next entry runs on a rebuilt one. Prints the pass's construct
+    * and execute totals and its slowest builds. */
+  private lazy val records: Seq[Record] = {
+    val recs = SparkEntry.all.map { q =>
+      var schema = Option.empty[StructType]
+      var problems = Seq.empty[String]
+      var collected = Seq.empty[Row]
+      def build(s: SparkSession): DataFrame = {
+        val df = q.run(s, sf0001)
+        schema = Some(df.schema)
+        problems = sweepProblems(q.id, df)
+        df
+      }
+      val s = SparkSpec.session(suiteName)
+      val run =
+        if (partitionSample(q.id)) Drive.run(s, build, { df =>
+          collected = df.collect().toSeq
+          collected.length.toLong
+        })
+        else Drive.run(s, build)
+      Record(q, run, schema, problems, collected)
+    }
+    def sec(ns: Long) = f"${ns / 1e9}%.1f s"
+    println(s"RegistrySweepSpec pass: construct " +
+      s"${sec(recs.map(_.run.constructNs).sum)}, execute " +
+      s"${sec(recs.map(_.run.executeNs).sum)}; slowest builds: " +
+      recs.sortBy(-_.run.constructNs).take(5)
+        .map(r => s"${r.q.id} ${sec(r.run.constructNs)}").mkString(", "))
+    recs
   }
 
   private def failed(r: Record): String =
@@ -108,7 +116,7 @@ class RegistrySweepSpec extends SparkSpec {
 
   test("every oracle-declared query yields rows at sf0.001") {
     assertNone(records.filter(r => r.q.oracle.isDefined &&
-      !r.rows.exists(_ > 0)).map(r => s"${failed(r)}, rows ${r.rows}"))
+      !r.run.rows.exists(_ > 0)).map(r => s"${failed(r)}, rows ${r.run.rows}"))
   }
 
   /** The generic anti-pattern detector behind the GLOBAL SWEEP test:
@@ -199,13 +207,18 @@ class RegistrySweepSpec extends SparkSpec {
     val other = base.newSession()
     other.conf.set(key, if (base.conf.get(key) == "5") "32" else "5")
     val before = BuildCounters.snapshot
-    val differing = first.filter { r =>
-      val got = try r.q.run(other, sf0001).collect().toSeq
-        finally release(other)
-      r.faults.nonEmpty || got != r.collected
+    val differing = first.flatMap { r =>
+      var got = Seq.empty[Row]
+      val again = Drive.run(other, r.q.run(_, sf0001), { df =>
+        got = df.collect().toSeq
+        got.length.toLong
+      })
+      val faults = r.faults ++ again.problem.map("second arm: " + _)
+      if (faults.nonEmpty || got != r.collected)
+        Some(s"${r.q.id}: results differ${faults.map("; " + _).mkString}")
+      else None
     }
-    assertNone(differing.map(r =>
-      s"${r.q.id}: results differ${r.faults.map("; " + _).mkString}"))
+    assertNone(differing)
     val rebuilt = BuildCounters.snapshot.collect {
       case (k, n) if n > before.getOrElse(k, 0) => k }.toSet
     assert(rebuilt.contains(s"memo:t04_exact:$sf0001"), rebuilt)

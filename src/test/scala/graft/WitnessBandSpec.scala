@@ -42,7 +42,8 @@ class WitnessBandSpec extends SparkSpec {
     // pair legitimately missed — the guarantee starts at k+b-1) / 1.0
     ("v22c_winnow_coverage", "coverage", 0.9, 1.0),
     // sampled-query kNN-join macro recall@5 at the r7-tuned nprobe=12:
-    // 0.93 at sf0.1 (0.79 at the old nprobe=8 — see KnnTune curve)
+    // 0.93 at sf0.1 (0.79 at the old nprobe=8 — the curve is in the
+    // SimilarityOps.knnJoin scaladoc)
     ("v3c2_knn_recall", "recall_at_5", 0.85, 1.0),
     // PQ ADC distance inflation: 1.07/1.06/1.14 at sf0.001/0.01/0.1
     // (set recall saturates low under distance concentration — the

@@ -59,8 +59,9 @@ object ScaleBench {
     // TPC-H tables) and v7 (one synth-encode + decode per doc, spread
     // across cores through the fast PNG container); round 10 the
     // events/graph family v29/t05/u12 — the salted events copies offset
-    // user_ids, so the user-keyed self-join edge build scales with
-    // users while the event-type graph stays constant.
+    // user_ids, so v29's user-keyed self-join and t05's span-id parent
+    // join scale with the copies while the event-type graph and the
+    // five-service edge set stay constant.
     // v16c is the DRIVER-GRADED fixed-benchmark twin of the
     // "v16[fixed benchmark]" row below: the slice is bounded in-table
     // (id%97==0 AND id<500, constant under blow-up).

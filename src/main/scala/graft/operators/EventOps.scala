@@ -1,22 +1,22 @@
 package graft.operators
 
 import graft._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The reference's span-analytics endpoints (SURVEY §2.T T1-T18) re-targeted
-  * onto the `events` table per the FIXTURES.md mapping: ts ≈ start_time,
-  * event_type ≈ span name / service, user_id ≈ trace id, value ≈ duration.
-  * The span-native forms of the same operators (running on the real span
-  * schema) live in [[graft.spans.TraceService]]; these registry entries
-  * exist so the DuckDB oracle can verify each operator shape on real
-  * parquet fixtures.
+/** Events-table operators outside the Query API: time-range and point
+  * predicates (B4-B6), the salted-join skew path, the U1/U2 window and
+  * rollup shapes, and the value-profiling family (heavy hitters,
+  * winsorization, CDF normalization, set operations, key skew). The
+  * Query API endpoints themselves (T1-T18) are
+  * [[graft.spans.TraceService]] methods, oracle-checked through
+  * [[SpanNativeOps]].
   *
-  * Scale notes: all top-k queries compile to TakeOrderedAndProject (no full
-  * sort at 100 TB); per-group averages are computed via a groupBy + join of
-  * the (tiny) aggregate side with `broadcast()`, not a window over the fact
-  * table; the self-join (T5) shuffles both sides on the join key once.
+  * Scale notes: per-group fences and stats are computed via a groupBy +
+  * join of the (tiny) aggregate side with `broadcast()`, not a window
+  * over the fact table; the salted self-join shuffles both sides on the
+  * salted key once.
   */
 object EventOps extends QueryModule {
   private val Minute: Long = 60L * 1000 * 1000 // µs
@@ -25,57 +25,10 @@ object EventOps extends QueryModule {
   private def ev(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
 
-  /** T1 (F1+B2+B1): top-N most-recent/slowest events — reference's
-    * "top slow traces" ORDER BY start DESC, duration DESC LIMIT n
-    * (api/service.go:175-210). */
-  def topSlowTraces(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("ts_us"), round(col("value"), 6).as("dur"))
-      .orderBy(col("ts_us").desc, col("dur").desc, col("event_id"))
-      .limit(10)
-
-  /** T2 (F2+B6): latest-100 for one service (api/service.go:212-244). */
-  def serviceTraces(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        round(col("value"), 6).as("dur"))
-      .orderBy(col("ts_us").desc, col("event_id"))
-      .limit(100)
-
-  /** T3 (F3+B6): all spans of one trace in waterfall (start ASC) order
-    * (api/service.go:246-313). */
-  def traceDetails(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .filter(col("user_id") === 13)
-      .select(col("event_id"), col("event_type"), col("ts_us"),
-        round(col("value"), 6).as("dur"), col("props"))
-      .orderBy(col("ts_us"), col("event_id"))
-
-  /** T5 (C1+D13): dependency edges via self-join — reference joins
-    * s1.span_id = s2.parent_span_id with service-differs residual
-    * (api/service.go:365-398); events analog: successor event of a
-    * different type within 60s for the same user. Both sides shuffle on
-    * user_id once; at scale a skewed user is handled by AQE skew-join. */
-  def serviceDependencies(spark: SparkSession, dir: String): DataFrame = {
-    val e = ev(spark, dir)
-    val e1 = e.select(col("user_id").as("u1"),
-      col("event_type").as("parent_type"), col("ts_us").as("t1"))
-      .filter(col("parent_type").isin("signup", "purchase"))
-    val e2 = e.select(col("user_id").as("u2"),
-      col("event_type").as("child_type"), col("ts_us").as("t2"))
-    e1.join(e2, col("u1") === col("u2") && col("t2") > col("t1") &&
-        col("t2") <= col("t1") + lit(Minute) &&
-        col("parent_type") =!= col("child_type"))
-      .groupBy(col("parent_type"), col("child_type"))
-      .agg(count(lit(1)).as("n_calls"))
-      .orderBy(col("parent_type"), col("child_type"))
-  }
-
-  /** T5 computed through [[Skew.saltedJoin]] — identical semantics and
-    * oracle to t05, exercising the hot-key salting path end-to-end (the
-    * static fallback when AQE skew-split isn't enough). */
+  /** The events-successor edges of [[GraphOps.successorEdges]] computed
+    * through [[Skew.saltedJoin]] — identical semantics and oracle,
+    * exercising the hot-key salting path end-to-end (the static fallback
+    * when AQE skew-split isn't enough). */
   def serviceDependenciesSalted(spark: SparkSession, dir: String): DataFrame = {
     val e = ev(spark, dir)
     val build = e.select(col("user_id"),
@@ -90,101 +43,6 @@ object EventOps extends QueryModule {
       .agg(count(lit(1)).as("n_calls"))
       .orderBy(col("parent_type"), col("child_type"))
   }
-
-  /** T6 (D2): per-hour heatmap — count+avg per hour bucket, latest 24
-    * (api/service.go:400-433). */
-  def traceHeatmap(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .groupBy(expr("ts_s div 3600 * 3600").as("hour_s"))
-      .agg(count(lit(1)).as("n"), Exact.avgExact(col("value")).as("avg_dur"))
-      .orderBy(col("hour_s").desc)
-      .limit(24)
-
-  /** T7 (B6+D4): one span's stats vs its endpoint's aggregate —
-    * avg/p50/p90/p99 + duration_diff_percent (api/service.go:560-592).
-    * The 5-row stats side is broadcast; no shuffle of the lookup. */
-  def spanDetails(spark: SparkSession, dir: String): DataFrame = {
-    val e = ev(spark, dir)
-    val stats = e.groupBy(col("event_type").as("et"))
-      .agg(Exact.avgExact(col("value")).as("avg_dur"),
-        round(percentile(col("value"), lit(0.5)), 6).as("p50"),
-        round(percentile(col("value"), lit(0.9)), 6).as("p90"),
-        round(percentile(col("value"), lit(0.99)), 6).as("p99"))
-    e.filter(col("event_id") === 424)
-      .join(broadcast(stats), col("event_type") === col("et"))
-      .select(col("event_id"), col("event_type"),
-        round(col("value"), 6).as("dur"),
-        col("avg_dur"), col("p50"), col("p90"), col("p99"),
-        round((col("value") - col("avg_dur")) / col("avg_dur") * 100, 6)
-          .as("diff_pct"))
-  }
-
-  /** T8 (D3): per-trace rollup with the reference's nested-aggregate
-    * `countIf(duration > avg(duration)*2) AS issues` (api/service.go:597-640)
-    * — rebuilt as a window over the trace key: ONE shuffle on user_id
-    * computes the per-trace avg, and the follow-up groupBy on the same key
-    * reuses that hash partitioning (no second Exchange). Per-trace
-    * cardinality grows with the data, so the earlier broadcast-back form
-    * was an unbounded broadcast at scale; the window form is bounded
-    * per-partition. PlanSpec pins the single-Exchange shape. */
-  def traceList(spark: SparkSession, dir: String): DataFrame = {
-    val e = ev(spark, dir)
-    val byTrace = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-    e.withColumn("avg_v", Exact.avgExactRawOver(col("value"), byTrace))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_spans"),
-        round(max(col("value")), 6).as("max_dur"),
-        min(col("ts_us")).as("start_us"),
-        sum(when(col("value") > col("avg_v") * 2, 1).otherwise(0))
-          .cast("long").as("issues"))
-      .orderBy(col("user_id"))
-  }
-
-  /** T11 (D5/C2): per-service count/avg + pseudo error_rate =
-    * countIf(d > svc_avg*2)/count*100 (api/service.go:961-1024). */
-  def serviceMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val e = ev(spark, dir)
-    val avgs = e.groupBy(col("event_type").as("et"))
-      .agg(Exact.avgExactRaw(col("value")).as("avg_v"))
-    e.join(broadcast(avgs), col("event_type") === col("et"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        Exact.avgExact(col("value")).as("avg_dur"),
-        Exact.ratio6(
-          sum(when(col("value") > col("avg_v") * 2, 1).otherwise(0)) * 100,
-          count(lit(1))).as("error_rate"))
-      .orderBy(col("event_type"))
-  }
-
-  /** T12 (D6): per-endpoint count/avg/p95 top-10 (api/service.go:1026-1069). */
-  def endpointMetrics(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        Exact.avgExact(col("value")).as("avg_dur"),
-        round(percentile(col("value"), lit(0.95)), 6).as("p95"))
-      .orderBy(col("n").desc, col("event_type"))
-      .limit(10)
-
-  /** T13 (F4+B5): top-10 slowest in the trailing 24h window; "now" is
-    * derived from the data (max ts) so the result is deterministic — the
-    * reference uses wall-clock now64() (api/service.go:1071-1123,969-981). */
-  def slowestTraces(spark: SparkSession, dir: String): DataFrame = {
-    val e = ev(spark, dir)
-    val maxTs = e.agg(max(col("ts_us")).as("max_us"))
-    e.crossJoin(broadcast(maxTs))
-      .filter(col("ts_us") >= col("max_us") - lit(Day))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("ts_us"), round(col("value"), 6).as("dur"))
-      .orderBy(col("dur").desc, col("event_id"))
-      .limit(10)
-  }
-
-  /** T18 (D12): DISTINCT service names, sorted (api/service.go:1540-1570). */
-  def services(spark: SparkSession, dir: String): DataFrame =
-    ev(spark, dir).select(col("event_type")).distinct()
-      .orderBy(col("event_type"))
 
   /** B4: absolute time-range predicate (api/service.go:709-712). */
   def timeRange(spark: SparkSession, dir: String): DataFrame =
@@ -458,37 +316,9 @@ object EventOps extends QueryModule {
       Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              | CAST(0 AS BIGINT) AS err_bound
              |FROM events GROUP BY 1 ORDER BY n DESC, event_type""".stripMargin)),
-    GraftQuery("t01_top_slow_traces",
-      "T1/F1 top-N by start desc, duration desc (api/service.go:175-210)",
-      topSlowTraces,
-      Some("""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-             | round(value,6) AS dur
-             |FROM events ORDER BY ts_us DESC, dur DESC, event_id LIMIT 10""".stripMargin)),
-    GraftQuery("t02_service_traces",
-      "T2/F2 latest-100 for one service (api/service.go:212-244)",
-      serviceTraces,
-      Some("""SELECT event_id, user_id, epoch_us(ts) AS ts_us, round(value,6) AS dur
-             |FROM events WHERE event_type='click'
-             |ORDER BY ts_us DESC, event_id LIMIT 100""".stripMargin)),
-    GraftQuery("t03_trace_details",
-      "T3/F3 one trace's spans, start ASC (api/service.go:246-313)",
-      traceDetails,
-      Some("""SELECT event_id, event_type, epoch_us(ts) AS ts_us,
-             | round(value,6) AS dur, props
-             |FROM events WHERE user_id=13 ORDER BY ts_us, event_id""".stripMargin)),
-    GraftQuery("t05_service_dependencies",
-      "T5/C1+D13 dependency-edge self-join + count (api/service.go:365-398)",
-      serviceDependencies,
-      Some("""SELECT e1.event_type AS parent_type, e2.event_type AS child_type,
-             | CAST(count(*) AS BIGINT) AS n_calls
-             |FROM events e1 JOIN events e2 ON e1.user_id = e2.user_id
-             | AND epoch_us(e2.ts) > epoch_us(e1.ts)
-             | AND epoch_us(e2.ts) <= epoch_us(e1.ts) + 60000000
-             |WHERE e1.event_type IN ('signup','purchase')
-             | AND e1.event_type <> e2.event_type
-             |GROUP BY 1,2 ORDER BY 1,2""".stripMargin)),
     GraftQuery("t05b_dependencies_salted",
-      "T5 via the salted-join skew path - same oracle as t05",
+      "T5-shaped events-successor edges (v29's edge set) via the " +
+        "salted-join skew path",
       serviceDependenciesSalted,
       Some("""SELECT e1.event_type AS parent_type, e2.event_type AS child_type,
              | CAST(count(*) AS BIGINT) AS n_calls
@@ -498,70 +328,6 @@ object EventOps extends QueryModule {
              |WHERE e1.event_type IN ('signup','purchase')
              | AND e1.event_type <> e2.event_type
              |GROUP BY 1,2 ORDER BY 1,2""".stripMargin)),
-    GraftQuery("t06_trace_heatmap",
-      "T6/D2 hourly count+avg heatmap, latest 24 (api/service.go:400-433)",
-      traceHeatmap,
-      Some(s"""SELECT (epoch_us(ts)//1000000)//3600*3600 AS hour_s,
-              | CAST(count(*) AS BIGINT) AS n,
-              | ${OracleSql.avgExact("value")} AS avg_dur
-              |FROM events GROUP BY 1 ORDER BY hour_s DESC LIMIT 24""".stripMargin)),
-    GraftQuery("t07_span_details",
-      "T7/D4 span vs endpoint comparative stats (api/service.go:560-592)",
-      spanDetails,
-      Some(s"""WITH s AS (
-              |  SELECT event_type AS et, ${OracleSql.avgExact("value")} AS avg_dur,
-              |   round(quantile_cont(value,0.5),6) AS p50,
-              |   round(quantile_cont(value,0.9),6) AS p90,
-              |   round(quantile_cont(value,0.99),6) AS p99
-              |  FROM events GROUP BY 1)
-              |SELECT e.event_id, e.event_type, round(e.value,6) AS dur,
-              | s.avg_dur, s.p50, s.p90, s.p99,
-              | round((e.value - s.avg_dur)/s.avg_dur*100,6) AS diff_pct
-              |FROM events e JOIN s ON e.event_type = s.et
-              |WHERE e.event_id=424""".stripMargin)),
-    GraftQuery("t08_trace_list",
-      "T8/D3 per-trace rollup with issues=countIf(d>2*avg) (api/service.go:597-640)",
-      traceList,
-      Some(s"""WITH a AS (
-              |  SELECT user_id AS uid, ${OracleSql.avgExactRaw("value")} AS avg_v
-              |  FROM events GROUP BY 1)
-              |SELECT e.user_id, CAST(count(*) AS BIGINT) AS n_spans,
-              | round(max(e.value),6) AS max_dur, min(epoch_us(e.ts)) AS start_us,
-              | CAST(sum(CASE WHEN e.value > a.avg_v*2 THEN 1 ELSE 0 END) AS BIGINT) AS issues
-              |FROM events e JOIN a ON e.user_id = a.uid
-              |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    GraftQuery("t11_service_metrics",
-      "T11/D5+C2 per-service count/avg/error_rate (api/service.go:961-1024)",
-      serviceMetrics,
-      Some(s"""WITH a AS (
-              |  SELECT event_type AS et, ${OracleSql.avgExactRaw("value")} AS avg_v
-              |  FROM events GROUP BY 1)
-              |SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
-              | ${OracleSql.avgExact("e.value")} AS avg_dur,
-              | ${OracleSql.ratio6(
-                  "sum(CASE WHEN e.value > a.avg_v*2 THEN 1 ELSE 0 END)*100",
-                  "count(*)")} AS error_rate
-              |FROM events e JOIN a ON e.event_type = a.et
-              |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    GraftQuery("t12_endpoint_metrics",
-      "T12/D6 per-endpoint count/avg/p95 top-10 (api/service.go:1026-1069)",
-      endpointMetrics,
-      Some(s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-              | ${OracleSql.avgExact("value")} AS avg_dur,
-              | round(quantile_cont(value,0.95),6) AS p95
-              |FROM events GROUP BY 1 ORDER BY n DESC, event_type LIMIT 10""".stripMargin)),
-    GraftQuery("t13_slowest_traces",
-      "T13/F4+B5 top-10 slowest in trailing 24h (api/service.go:1071-1123)",
-      slowestTraces,
-      Some("""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-             | round(value,6) AS dur
-             |FROM events
-             |WHERE epoch_us(ts) >= (SELECT max(epoch_us(ts)) FROM events) - 86400000000
-             |ORDER BY dur DESC, event_id LIMIT 10""".stripMargin)),
-    GraftQuery("t18_services",
-      "T18/D12 distinct service names sorted (api/service.go:1540-1570)",
-      services,
-      Some("SELECT DISTINCT event_type FROM events ORDER BY event_type")),
     GraftQuery("b4_time_range",
       "B4 absolute time-range predicate (api/service.go:709-712)",
       timeRange,

@@ -17,19 +17,20 @@ import org.apache.spark.sql.functions._
   * CTEs. Mass at dangling nodes (no out-edges) leaks, the standard
   * simplification; ranks are reported raw plus integer-rounded to 6 dp.
   *
-  * Scale: the heavy lift is the ONE edge-extraction self-join (t05's
-  * shape, shuffled on user_id), materialized once via localCheckpoint;
-  * the iteration loop then touches only service-level frames (bounded
-  * by #services², not event volume). For graphs whose node count grows
-  * with the data (v2e's doc-cluster graphs), the identical loop runs
-  * with a node-keyed shuffle per iteration and the same
-  * checkpoint-per-iteration lineage cut v2e uses.
+  * Scale: the heavy lift is the ONE edge-extraction self-join
+  * ([[successorEdges]], shuffled on user_id), materialized once via
+  * localCheckpoint; the iteration loop then touches only service-level
+  * frames (bounded by #services², not event volume). For graphs whose
+  * node count grows with the data (v2e's doc-cluster graphs), the
+  * identical loop runs with a node-keyed shuffle per iteration and the
+  * same checkpoint-per-iteration lineage cut v2e uses.
   */
 object GraphOps extends QueryModule {
 
   /** Total rank mass: 1.0 ≡ 1e12 (room for 85× and ×1e6 in a Long). */
   private val Scale = 1000000000000L
   private val Iters = 10
+  private val Minute: Long = 60L * 1000 * 1000 // µs
 
   /** Ceilings under which the power iteration runs on the driver over
     * the COLLECTED (node, edge) tables instead of as 10 chained Spark
@@ -44,6 +45,27 @@ object GraphOps extends QueryModule {
   private val MaxDriverNodes = 4096L
   private val MaxDriverEdges = 262144L
 
+  /** V29's edges: events-successor pairs — a `signup`/`purchase` event
+    * followed within 60 s by an event of another type for the same user
+    * — counted per (parent_type, child_type). Both sides shuffle on
+    * user_id once; a skewed user is handled by AQE skew-join
+    * (t05b_dependencies_salted runs the same edges through the static
+    * salted join). */
+  def successorEdges(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(spark, dir)
+    val e1 = e.select(col("user_id").as("u1"),
+      col("event_type").as("parent_type"), col("ts_us").as("t1"))
+      .filter(col("parent_type").isin("signup", "purchase"))
+    val e2 = e.select(col("user_id").as("u2"),
+      col("event_type").as("child_type"), col("ts_us").as("t2"))
+    e1.join(e2, col("u1") === col("u2") && col("t2") > col("t1") &&
+        col("t2") <= col("t1") + lit(Minute) &&
+        col("parent_type") =!= col("child_type"))
+      .groupBy(col("parent_type"), col("child_type"))
+      .agg(count(lit(1)).as("n_calls"))
+      .orderBy(col("parent_type"), col("child_type"))
+  }
+
   /** V29: weighted PageRank, damping 0.85, 10 fixed iterations.
     * rank' = (0.15/N)·S + 0.85·Σ_in (rank·wf ÷ 1e6) where wf is the
     * edge's out-weight fraction pre-quantized to 1e6 units — all in
@@ -54,7 +76,7 @@ object GraphOps extends QueryModule {
     * Long-overflow class); w·1e6 itself holds to ~9.2e12 calls per
     * source node. */
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
-    val edges = EventOps.serviceDependencies(spark, dir)
+    val edges = successorEdges(spark, dir)
       .select(col("parent_type").as("src"), col("child_type").as("dst"),
         col("n_calls").as("w"))
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
@@ -133,8 +155,8 @@ object GraphOps extends QueryModule {
     ranks
   }
 
-  /** The t05 edge subquery verbatim (same oracle text as
-    * t05_service_dependencies) + ten unrolled power iterations. */
+  /** The [[successorEdges]] subquery verbatim (same oracle text as
+    * t05b_dependencies_salted) + ten unrolled power iterations. */
   private lazy val pageRankSql: String = {
     val iters = (1 to Iters).map { i =>
       s"""r$i AS (

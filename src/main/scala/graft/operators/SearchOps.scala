@@ -5,10 +5,11 @@ import graft.dsl.SearchDsl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The search endpoint family (SURVEY §2.S S1-S5, F5 pagination, V5 JSON
-  * extraction) over the events table. The same `Column` predicate object
-  * produced by [[SearchDsl]] is reused by the search-metrics series
-  * (SeriesOps.searchMetrics covers S6/D11) — no SQL-string surgery.
+/** The search DSL's events-table forms (SURVEY §2.S S3/S4, F5
+  * pagination, V5 JSON extraction): the same [[SearchDsl]] predicate
+  * builder under the events binder. The T9 endpoint itself is
+  * [[graft.spans.TraceService.search]], oracle-checked through
+  * [[SpanNativeOps]].
   *
   * Scale notes: search = filter + TakeOrderedAndProject; the JSON probing
   * (`get_json_object`) is codegen'd and runs inside the scan stage.
@@ -17,19 +18,6 @@ import org.apache.spark.sql.functions._
   * should switch to keyset (ts_us < last_seen) — both forms provided.
   */
 object SearchOps extends QueryModule {
-
-  /** T9 (S1+S2+S3+S5+F5): parsed DSL search with mode/time filter, dynamic
-    * sort, and LIMIT/OFFSET pagination (api/service.go:698-892). */
-  def search(spark: SparkSession, dir: String): DataFrame = {
-    val pred = SearchDsl.predicate("name=purchase,k!=3", SearchDsl.EventsBinder)
-    Tables.events(spark, dir)
-      .filter(pred)
-      .filter(col("ts_us") >= lit(1704067200000000L))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("ts_us"), round(col("value"), 6).as("dur"), col("props"))
-      .orderBy(col("ts_us").desc, col("event_id"))
-      .offset(10).limit(20)
-  }
 
   /** S3: generic-key != with De Morgan / absent-key semantics. */
   def genericNeq(spark: SparkSession, dir: String): DataFrame = {
@@ -93,16 +81,6 @@ object SearchOps extends QueryModule {
       .orderBy(col("event_type"))
 
   val queries: Seq[GraftQuery] = Seq(
-    GraftQuery("t09_search",
-      "T9/S1-S5+F5 DSL search, time filter, sort, pagination (api/service.go:698-892)",
-      search,
-      Some("""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-             | round(value,6) AS dur, props
-             |FROM events
-             |WHERE event_type='purchase'
-             | AND coalesce(json_extract_string(props,'$.k') <> '3', true)
-             | AND epoch_us(ts) >= 1704067200000000
-             |ORDER BY ts_us DESC, event_id LIMIT 20 OFFSET 10""".stripMargin)),
     GraftQuery("s3_generic_neq",
       "S3 generic-key != with absent-key=true De Morgan semantics (api/service.go:752-771)",
       genericNeq,

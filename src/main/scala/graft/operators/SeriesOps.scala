@@ -4,19 +4,17 @@ import graft._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Time-bucketed monitoring series (SURVEY §2 D7-D11) with in-plan
-  * zero-fill (H14). The reference buckets with
-  * `toStartOfInterval(t, INTERVAL n second)` where n = range/15
-  * (utils/utils.go:81-85) and pads the series to a dense grid in Go
-  * (utils/utils.go:14-46, api/service.go:948-958); we produce the identical
-  * grid inside the plan: a `spark.range` calendar frame left-joined to the
-  * aggregated buckets, `coalesce(v, 0)`. Bucket edges follow the
-  * reference's `unix − unix % step` floor alignment (utils/utils.go:74-79).
+/** Time-bucketed series over `events` beyond the Query API's own
+  * (the D7-D11 endpoint series are [[graft.spans.TraceService]] methods,
+  * oracle-checked through [[SpanNativeOps]]): distinct-user series and
+  * their HLL twins, moving windows, spike and SLO-burn alerting, and
+  * DAU/WAU stickiness. Bucketed series share the reference's grid: width
+  * range/15 (utils/utils.go:81-85), `unix − unix % step` floor alignment
+  * (utils/utils.go:74-79), zero-filled inside the plan (H14) by a
+  * `spark.range` calendar frame left-joined to the aggregated buckets.
   *
   * Scale notes: one scan + one shuffle on the bucket key per series; the
-  * frame side is ≤16 rows so the fill join is a broadcast. D11 computes
-  * quantile+count+avg in a single pass — the same fusion the reference
-  * hand-codes (api/service.go:1339-1341) falls out of one `agg()`.
+  * frame side is ≤16 rows so the fill join is a broadcast.
   */
 object SeriesOps extends QueryModule {
   // Query window: the testdata month [2024-01-01, 2024-01-31] in epoch secs.
@@ -53,52 +51,6 @@ object SeriesOps extends QueryModule {
     s"(epoch_us(ts)//1000000) - (epoch_us(ts)//1000000) % $Step"
   private val rangeSql =
     s"epoch_us(ts)//1000000 BETWEEN $Start AND $End"
-
-  /** T10/D7: count per bucket, zero-filled (api/service.go:899-959). */
-  def traceCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = bucketed(spark, dir).groupBy(col("bucket_s"))
-      .agg(count(lit(1)).as("n"))
-    zeroFill(spark, agg, Seq("n" -> lit(0L)))
-  }
-
-  /** T14/D8: quantile(p) series, p clamped as the reference does
-    * (api/service.go:1125-1171). */
-  def pSeries(spark: SparkSession, dir: String): DataFrame = {
-    val agg = bucketed(spark, dir).groupBy(col("bucket_s"))
-      .agg(round(percentile(col("value"), lit(0.9)), 6).as("p90"))
-    zeroFill(spark, agg, Seq("p90" -> lit(0.0)))
-  }
-
-  /** T15/D9: avg series (api/service.go:1173-1238). */
-  def avgSeries(spark: SparkSession, dir: String): DataFrame = {
-    val agg = bucketed(spark, dir).groupBy(col("bucket_s"))
-      .agg(Exact.avgExact(col("value")).as("avg_v"))
-    zeroFill(spark, agg, Seq("avg_v" -> lit(0.0)))
-  }
-
-  /** T16/D10: error-count series — the reference counts spans carrying an
-    * 'exception' event (api/service.go:1240-1297); events analog:
-    * event_type='error'. */
-  def errorCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = bucketed(spark, dir)
-      .groupBy(col("bucket_s"))
-      .agg(sum(when(col("event_type") === "error", 1).otherwise(0))
-        .cast("long").as("n_errors"))
-    zeroFill(spark, agg, Seq("n_errors" -> lit(0L)))
-  }
-
-  /** T17/D11+S6: combined single-pass quantile+count+avg series over a
-    * search-filtered subset (api/service.go:1339-1428). */
-  def searchMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val agg = bucketed(spark, dir)
-      .filter(col("event_type") === "purchase" && col("user_id") =!= 7)
-      .groupBy(col("bucket_s"))
-      .agg(round(percentile(col("value"), lit(0.5)), 6).as("p50"),
-        count(lit(1)).as("n"),
-        Exact.avgExact(col("value")).as("avg_v"))
-    zeroFill(spark, agg,
-      Seq("p50" -> lit(0.0), "n" -> lit(0L), "avg_v" -> lit(0.0)))
-  }
 
   /** T19 (beyond the reference): trailing 7-day moving window over the
     * daily count series — window-frame coverage (rowsBetween) the
@@ -387,53 +339,5 @@ object SeriesOps extends QueryModule {
              |FROM h
              |WINDOW w AS (ORDER BY hour_s
              |   RANGE BETWEEN 18000 PRECEDING AND CURRENT ROW)
-             |ORDER BY hour_s""".stripMargin)),
-    GraftQuery("t10_trace_counts",
-      "T10/D7+H14 zero-filled count series (api/service.go:899-959)",
-      traceCounts,
-      Some(s"""WITH f AS ($frameSql),
-              | c AS (SELECT $bucketSql AS b, count(*) AS n FROM events
-              |       WHERE $rangeSql GROUP BY 1)
-              |SELECT f.bucket_s, CAST(coalesce(c.n,0) AS BIGINT) AS n
-              |FROM f LEFT JOIN c ON f.bucket_s=c.b ORDER BY 1""".stripMargin)),
-    GraftQuery("t14_pseries",
-      "T14/D8+H14 zero-filled p90 series (api/service.go:1125-1171)",
-      pSeries,
-      Some(s"""WITH f AS ($frameSql),
-              | c AS (SELECT $bucketSql AS b,
-              |        round(quantile_cont(value,0.9),6) AS p90 FROM events
-              |       WHERE $rangeSql GROUP BY 1)
-              |SELECT f.bucket_s, coalesce(c.p90,0.0) AS p90
-              |FROM f LEFT JOIN c ON f.bucket_s=c.b ORDER BY 1""".stripMargin)),
-    GraftQuery("t15_avg_series",
-      "T15/D9+H14 zero-filled avg series (api/service.go:1173-1238)",
-      avgSeries,
-      Some(s"""WITH f AS ($frameSql),
-              | c AS (SELECT $bucketSql AS b,
-              |        ${OracleSql.avgExact("value")} AS avg_v FROM events
-              |       WHERE $rangeSql GROUP BY 1)
-              |SELECT f.bucket_s, coalesce(c.avg_v,0.0) AS avg_v
-              |FROM f LEFT JOIN c ON f.bucket_s=c.b ORDER BY 1""".stripMargin)),
-    GraftQuery("t16_error_counts",
-      "T16/D10+H14 zero-filled error-count series (api/service.go:1240-1297)",
-      errorCounts,
-      Some(s"""WITH f AS ($frameSql),
-              | c AS (SELECT $bucketSql AS b,
-              |        sum(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS n
-              |       FROM events WHERE $rangeSql GROUP BY 1)
-              |SELECT f.bucket_s, CAST(coalesce(c.n,0) AS BIGINT) AS n_errors
-              |FROM f LEFT JOIN c ON f.bucket_s=c.b ORDER BY 1""".stripMargin)),
-    GraftQuery("t17_search_metrics",
-      "T17/D11+S6 single-pass p50+count+avg series over search filter (api/service.go:1339-1428)",
-      searchMetrics,
-      Some(s"""WITH f AS ($frameSql),
-              | c AS (SELECT $bucketSql AS b,
-              |        round(quantile_cont(value,0.5),6) AS p50,
-              |        count(*) AS n, ${OracleSql.avgExact("value")} AS avg_v
-              |       FROM events
-              |       WHERE $rangeSql AND event_type='purchase' AND user_id<>7
-              |       GROUP BY 1)
-              |SELECT f.bucket_s, coalesce(c.p50,0.0) AS p50,
-              | CAST(coalesce(c.n,0) AS BIGINT) AS n, coalesce(c.avg_v,0.0) AS avg_v
-              |FROM f LEFT JOIN c ON f.bucket_s=c.b ORDER BY 1""".stripMargin)))
+             |ORDER BY hour_s""".stripMargin)))
 }

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
 /** Span-native trace analytics: every read endpoint of the reference
   * (SURVEY §2.T T1-T18, routes api/controller.go:380-398) as a DataFrame
   * transformation over a [[SpanSchema]] table. This is the library surface
-  * a reference user switches to; the oracle-checked registry entries in
-  * `graft.operators` exercise the same operator shapes on parquet
-  * fixtures, and `TraceServiceSpec` pins these span-native semantics.
+  * a reference user switches to. The registry entries t01–t18 (all but
+  * the lineitem-based t04 family) are calls of these methods over the
+  * events → span mappings of `graft.operators.SpanNativeOps`, so the
+  * DuckDB oracle checks this code; `TraceServiceSpec` pins the
+  * span-native semantics on the FIXTURES.md §B trace.
   *
   * Scale design: callers hand in a spans DataFrame read from the
   * date-partitioned store ([[OtlpIngest.readSpans]]); every time-ranged
@@ -147,13 +149,18 @@ class TraceService(spans: DataFrame) {
   }
 
   /** T8: per-trace rollup with issues = countIf(dur > 2*trace-avg)
-    * (api/service.go:597-640, the ClickHouse nested-aggregate trick,
-    * rebuilt two-phase). */
+    * (api/service.go:597-640, the ClickHouse nested-aggregate trick).
+    * The per-trace average is a window over the trace key: ONE shuffle
+    * on trace_id computes it, and the groupBy on the same key reuses
+    * that hash partitioning (no second Exchange). Per-trace cardinality
+    * grows with the data, so a broadcast-back of the averages would be
+    * unbounded at scale; the window is bounded per partition. PlanSpec
+    * pins the single-Exchange shape. */
   def traceList(): DataFrame = {
-    val avgs = spans.groupBy(col("trace_id").as("t_id"))
-      .agg((Exact.avgExactRaw(expr("duration_ns div 1000").cast("double"))
-        * 1000).as("avg_ns"))
-    spans.join(avgs, col("trace_id") === col("t_id"))
+    val byTrace = Window.partitionBy(col("trace_id"))
+    spans
+      .withColumn("avg_ns", Exact.avgExactRawOver(
+        expr("duration_ns div 1000").cast("double"), byTrace) * 1000)
       .groupBy(col("trace_id"))
       .agg(count(lit(1)).as("n_spans"),
         max(col("duration_ns")).as("max_ns"),

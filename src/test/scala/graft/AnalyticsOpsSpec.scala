@@ -112,8 +112,8 @@ class AnalyticsOpsSpec extends SparkSpec {
     rows.foreach { r =>
       assert(r.getAs[Long]("rank") >= base, s"below teleport floor: $r")
     }
-    // every child_type of the t05 edges receives inflow -> above floor
-    val dsts = EventOps.serviceDependencies(spark, sf0001)
+    // every child_type of the successor edges receives inflow -> above floor
+    val dsts = GraphOps.successorEdges(spark, sf0001)
       .select("child_type").distinct().as[String].collect().toSet
     rows.filter(r => dsts(r.getAs[String]("node"))).foreach { r =>
       assert(r.getAs[Long]("rank") > base, s"no inflow credited: $r")
@@ -123,7 +123,7 @@ class AnalyticsOpsSpec extends SparkSpec {
   test("v29 pagerank driver fast path is bit-identical to the " +
     "distributed loop (round-12 dispatch)") {
     // rebuild the shared inputs exactly as pageRank does
-    val edges = EventOps.serviceDependencies(spark, sf0001)
+    val edges = GraphOps.successorEdges(spark, sf0001)
       .select(col("parent_type").as("src"), col("child_type").as("dst"),
         col("n_calls").as("w"))
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))

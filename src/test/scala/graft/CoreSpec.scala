@@ -30,24 +30,28 @@ class CoreSpec extends SparkSpec {
     val buckets = df.select("bucket_s").collect().map(_.getLong(0))
     assert(buckets.length == 16)
     assert(buckets.sliding(2).forall(p => p(1) - p(0) == 172800L))
-    // total events in window == sum of series
+    // root spans in window == sum of series: the tree mapping roots
+    // each trace (user) at its earliest event
     val total = df.agg(sum("n")).collect().head.getLong(0)
     val expected = Tables.events(spark, sf0001)
-      .filter(col("ts_s").between(1704067200L, 1706659200L)).count()
+      .groupBy("user_id").agg(min("ts_s").as("root_s"))
+      .filter(col("root_s").between(1704067200L, 1706659200L)).count()
     assert(total == expected)
   }
 
   test("trace list issues: value > 2*group-avg counted per trace") {
     val df = SparkEntry.queries("t08_trace_list")(spark, sf0001)
+    // the tree mapping: trace = user, duration = floor(value ms × 1e6)
+    // ns; TraceService averages durations on a µs basis
     val ev = Tables.events(spark, sf0001)
       .select("user_id", "value").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
+      .map(r => (r.getLong(0), math.floor(r.getDouble(1) * 1000000).toLong))
     val byUser = ev.groupBy(_._1)
-    val expected = byUser.map { case (u, vs) =>
-      val avg = vs.map(_._2).sum / vs.length
-      u -> vs.count(_._2 > 2 * avg).toLong
+    val expected = byUser.map { case (u, ds) =>
+      val avgNs = ds.map(_._2 / 1000).sum.toDouble / ds.length * 1000
+      s"trace-$u" -> ds.count(_._2 > 2 * avgNs).toLong
     }
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(4)).toSeq
+    val got = df.collect().map(r => r.getString(0) -> r.getLong(4)).toSeq
     assert(got.sortBy(_._1) == expected.toSeq.sortBy(_._1))
   }
 }

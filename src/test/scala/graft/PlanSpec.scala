@@ -14,13 +14,26 @@ class PlanSpec extends SparkSpec {
 
   private def q(id: String): DataFrame = SparkEntry.queries(id)(spark, sf0001)
 
+  /** The Query API over a date-partitioned SpanSchema parquet store (the
+    * FIXTURES.md §B trace), read back the way users read one: the
+    * registry's t* entries run the same methods over computed columns,
+    * which no filter can reach the scan through. */
+  private lazy val store: graft.spans.TraceService = {
+    val dir = java.nio.file.Files.createTempDirectory("plan-spans").toString
+    graft.spans.OtlpIngest.writeSpans(SpanFixtures.spans(spark), dir + "/s")
+    new graft.spans.TraceService(
+      graft.spans.OtlpIngest.readSpans(spark, dir + "/s"))
+  }
+
   test("equality filters reach the parquet scan (PushedFilters)") {
-    val p = plan(q("t02_service_traces"))
-    assert(p.contains("PushedFilters") && p.contains("EqualTo(event_type,click)"), p)
+    // TraceService.serviceTraces, the t02 entry's method
+    val p = plan(store.serviceTraces("db"))
+    assert(p.contains("PushedFilters") && p.contains("EqualTo(scope_name,db)"), p)
   }
 
   test("top-k compiles to TakeOrderedAndProject, not a global sort") {
-    val p = plan(q("t01_top_slow_traces"))
+    // TraceService.topSlowTraces, the t01 entry's method
+    val p = plan(store.topSlowTraces())
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
@@ -92,9 +105,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("t08 computes per-trace avg with ONE exchange (window, no broadcast)") {
-    val p = plan(q("t08_trace_list"))
+    // TraceService.traceList, the t08 entry's method
+    val p = plan(store.traceList())
     assert(!p.contains("BroadcastExchange"), p)
-    // window on user_id + groupBy on user_id share one hash partitioning
+    // window on trace_id + groupBy on trace_id share one hash partitioning
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges\n$p")
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.spans.TraceService
 import graft.spans.SearchRequest
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Span-native semantics pinned on the canonical FIXTURES.md §B trace. */
@@ -134,5 +135,80 @@ class TraceServiceSpec extends SparkSpec {
     assert(r.getAs[Long]("duration_ns") === 40000000L)
     // only span with this name → avg == own duration → diff 0
     assert(math.abs(r.getAs[Double]("duration_diff_percent")) < 1e-9)
+  }
+
+  /** The series tests' window: 300 s from the fixture base, so the
+    * bucket is 300/15 = 20 s and every fixture span falls in the first
+    * of the 16 buckets. */
+  private val SeriesEnd = Base + 300L * 1000000000L
+
+  test("T3 trace details: one trace's spans by start, events and " +
+    "attributes included") {
+    val rows = svc.traceDetails("T1").collect()
+    assert(rows.map(_.getAs[String]("span_id")).toSeq ===
+      Seq("s1", "s2", "s3", "s4"))
+    assert(rows.map(_.getAs[String]("parent_span_id")).toSeq ===
+      Seq("", "s1", "s2", "s1"))
+    assert(rows.map(_.getAs[Double]("duration_ms")).toSeq ===
+      Seq(100.0, 60.0, 40.0, 10.0))
+    val s3 = rows(2)
+    assert(s3.getAs[Map[String, String]]("span_attributes") ===
+      Map("db.statement" -> "SELECT * FROM users"))
+    val evs = s3.getAs[collection.Seq[Row]]("events")
+    assert(evs.map(_.getAs[String]("name")) === Seq("exception"))
+    assert(evs.head.getAs[Map[String, String]]("attributes")
+      .apply("exception.type") === "SQLException")
+    assert(rows.take(2).forall(_.getAs[collection.Seq[Row]]("events").isEmpty))
+  }
+
+  test("T6 heatmap: root spans per hour with their average duration") {
+    val rows = svc.traceHeatmap().collect()
+    // both roots (s1 100 ms, s5 20 ms) start in the base hour
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ===
+      Seq((Base / 1000000000L, 2L, 60.0)))
+  }
+
+  test("T10 trace counts: root spans only, zero-filled 20 s grid") {
+    val rows = svc.traceCounts(Base, SeriesEnd).collect()
+    val startS = Base / 1000000000L
+    assert(rows.map(_.getLong(0)).toSeq === (0 to 15).map(startS + 20L * _))
+    assert(rows.map(_.getLong(1)).toSeq === 2L +: Seq.fill(15)(0L))
+  }
+
+  test("T14 percentile series: exact percentile in ms, p clamped to " +
+    "[0,100]") {
+    // durations of all five spans, ms: 10, 20, 40, 60, 100
+    def first(p: Double) = {
+      val rows = svc.percentileSeries(p, Base, SeriesEnd).collect()
+      assert(rows.length === 16)
+      assert(rows.tail.forall(_.getDouble(1) === 0.0))
+      rows.head.getDouble(1)
+    }
+    assert(first(50.0) === 40.0)
+    assert(first(75.0) === 60.0)
+    assert(first(150.0) === 100.0) // clamped to p100: the maximum
+    assert(first(-5.0) === 10.0) // clamped to p0: the minimum
+  }
+
+  test("T15 avg series: mean duration of every span per bucket, " +
+    "empty buckets 0") {
+    val rows = svc.avgSeries(Base, SeriesEnd).collect()
+    assert(rows.length === 16)
+    assert(rows.head.getDouble(1) === 46.0) // (100+60+40+10+20)/5
+    assert(rows.tail.forall(_.getDouble(1) === 0.0))
+  }
+
+  test("T17 search metrics: percentile, count and avg of the DSL-" +
+    "filtered spans in one pass") {
+    val rows = svc.searchMetrics("scope=gateway", 50.0, Base, SeriesEnd)
+      .collect()
+    assert(rows.length === 16)
+    // gateway spans: s1 100 ms, s4 10 ms
+    val h = rows.head
+    assert((h.getDouble(1), h.getLong(2), h.getDouble(3)) === ((55.0, 2L, 55.0)))
+    assert(rows.tail.forall(r =>
+      r.getDouble(1) == 0.0 && r.getLong(2) == 0L && r.getDouble(3) == 0.0))
+    val all = svc.searchMetrics("", 200.0, Base, SeriesEnd).collect().head
+    assert((all.getDouble(1), all.getLong(2)) === ((100.0, 5L)))
   }
 }

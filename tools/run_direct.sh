@@ -19,5 +19,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" "$@"

@@ -26,7 +26,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Usage: SPARK_GRAFT_SF_DIR=<base> runMain graft.ScaleBench [factor]
   * (one process measures both scales back to back: same JIT state, and
-  * none of the measured entries writes a OncePerProcess fixture). */
+  * none of the measured entries writes a [[graft.util.Memo.once]]
+  * dump). */
 object ScaleBench {
   private type Plan = (SparkSession, String, Int) => DataFrame
 

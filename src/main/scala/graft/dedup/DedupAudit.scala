@@ -222,9 +222,7 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
           s"st25_ingest_${System.nanoTime()}")
         .orderBy(col("doc_id"))
     else {
-      val out = graft.util.TempArtifacts.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_st25_fb_" +
-          s"${ProcessHandle.current().pid()}_${System.nanoTime()}")
+      val out = graft.util.Memo.path("graft_st25_fb")
       graft.streaming.StreamingOps.runForeachBatch(spark, stream,
         s"st25_ingest_${System.nanoTime()}") { (b, _) =>
         planOver(b).write.mode("append").parquet(out)
@@ -481,19 +479,9 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
     * pinned against the fixture in DedupSpec. At a scale where a banded
     * miss appears, this oracle would catch exactly that recall loss,
     * which is the honest thing to measure. */
-  /** v2c2 / v22c dump paths + per-process guards (the IvfPairsPath
-    * contract: pid-suffixed, NOT exit-deleted — the oracle SQL reads
-    * them from DuckDB after the Verify JVM exits). */
-  val SimhashPairsPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_simhash_pairs_" +
-      ProcessHandle.current().pid()
-  val WinnowPairsPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_winnow_pairs_" +
-      ProcessHandle.current().pid()
-  private[dedup] val simhashPairsOnce =
-    new graft.util.OncePerProcess("SimHash pair dump")
-  private[dedup] val winnowPairsOnce =
-    new graft.util.OncePerProcess("winnowed pair dump")
+  /** v2c2 / v22c dump paths ([[graft.util.Memo.stablePath]]). */
+  val SimhashPairsPath: String = graft.util.Memo.stablePath("simhash_pairs")
+  val WinnowPairsPath: String = graft.util.Memo.stablePath("winnow_pairs")
 
   /** V2c2: cross-method agreement of the SimHash path,
     * ORACLE-WITNESSED — the share of exact Jaccard≥τ near-dup pairs
@@ -503,11 +491,8 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
     * target); it is exactly the number a curation owner needs before
     * swapping v2a's quadratic join for v2c's linear one. */
   def simhashOverlap(spark: SparkSession, dir: String): DataFrame = {
-    simhashPairsOnce.ensure(dir) {
-      simhashDedup(spark, dir).select(col("i"), col("j"))
-        .coalesce(1).write.mode("overwrite").parquet(SimhashPairsPath)
-    }
-    overlapAgainstDump(spark, SimhashPairsPath,
+    overlapAgainstDump(spark, graft.util.Memo.dump("simhash_pairs", dir)(
+        simhashDedup(spark, dir).select(col("i"), col("j"))),
       ngramJaccard(spark, dir).select(col("i"), col("j")),
       Seq("i", "j"), "agreement")
   }
@@ -529,11 +514,8 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
     * this value row shows what that means on the live corpus, judged
     * independently by both engines every round. */
   def winnowCoverage(spark: SparkSession, dir: String): DataFrame = {
-    winnowPairsOnce.ensure(dir) {
-      substringDupsWinnowed(spark, dir).select(col("i"), col("j"))
-        .coalesce(1).write.mode("overwrite").parquet(WinnowPairsPath)
-    }
-    overlapAgainstDump(spark, WinnowPairsPath,
+    overlapAgainstDump(spark, graft.util.Memo.dump("winnow_pairs", dir)(
+        substringDupsWinnowed(spark, dir).select(col("i"), col("j"))),
       substringDups(spark, dir).select(col("i"), col("j")),
       Seq("i", "j"), "coverage")
   }

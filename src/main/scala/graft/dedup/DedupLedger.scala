@@ -11,21 +11,12 @@ import org.apache.spark.sql.functions._
   * Mixed into [[DedupOps]].
   */
 private[dedup] trait DedupLedger { self: DedupOps.type =>
-  /** Path for the dumped IVF pair set — referenced by the v2d2b oracle
-    * SQL, so it must be stable within a process (pid-suffixed against
-    * concurrent runners, same convention as the ingest fixture). */
-  // NOT TempArtifacts-registered: the v2d2b oracle SQL reads this path
-  // from DuckDB after the Verify JVM exits (same contract as the OTLP
-  // fixture) — exit-time deletion would break the gate.
-  val IvfPairsPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_ivf_pairs_" +
-      ProcessHandle.current().pid()
-
-  /** One write per process, and the IVF pairs DEPEND on the data dir
-    * (unlike the dir-independent OTLP fixture), so a second dir in the
-    * same process would silently compare recall against the wrong dump
-    * — [[graft.util.OncePerProcess]] guards it loudly instead. */
-  private[dedup] val ivfPairsOnce = new graft.util.OncePerProcess("IVF pair dump")
+  /** Path for the dumped IVF pair set, referenced by the v2d2b oracle
+    * SQL ([[graft.util.Memo.stablePath]]). The pairs DEPEND on the data
+    * dir, so a second dir in the same process would silently compare
+    * recall against the wrong dump — [[graft.util.Memo.once]] fails
+    * loudly instead. */
+  val IvfPairsPath: String = graft.util.Memo.stablePath("ivf_pairs")
 
   /** Shared tail of every oracle-witnessed quality metric (v2d2b,
     * v2c2, v22c, and SimilarityOps' v3b3/v18c): ONE pass over the
@@ -55,14 +46,12 @@ private[dedup] trait DedupLedger { self: DedupOps.type =>
   def ivfRecall(spark: SparkSession, dir: String): DataFrame = {
     // build the candidate plan only when the dump actually happens —
     // embeddingNearDupIvf is EAGER (the Lloyd refinement
-    // localCheckpoints), so hoisting it out of the once-block would
+    // localCheckpoints), so hoisting it out of the by-name dump would
     // re-run the full IVF build on every call just to discard it
-    ivfPairsOnce.ensure(dir) {
+    graft.util.Memo.dump("ivf_pairs", dir)(
       embeddingNearDupIvf(spark, dir,
         graft.sim.SimilarityOps.adaptiveNlist(spark, dir))
-        .select(col("i"), col("j"))
-        .coalesce(1).write.mode("overwrite").parquet(IvfPairsPath)
-    }
+        .select(col("i"), col("j")))
     // ONE pass over the exact pairs: a left join against the (tiny)
     // dumped candidate set marks hits, and a single aggregate counts
     // both totals — the previous two-action form (semi-join count +

@@ -338,9 +338,7 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
       // ledger — the scrub is per-document and stateless across
       // batches, so the union of batch outputs equals the batch scrub
       // (the in-row path's own equivalence argument, unchanged).
-      val out = graft.util.TempArtifacts.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_st19_fb_" +
-          s"${ProcessHandle.current().pid()}_${System.nanoTime()}")
+      val out = graft.util.Memo.path("graft_st19_fb")
       graft.streaming.StreamingOps.runForeachBatch(spark, stream,
         s"st19_scrub_${System.nanoTime()}") { (b, _) =>
         scrubViaLedgerJoin(spark, dir, b).select(outCols: _*)

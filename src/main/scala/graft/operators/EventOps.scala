@@ -2,14 +2,13 @@ package graft.operators
 
 import graft._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Events-table operators outside the Query API: time-range and point
-  * predicates (B4-B6), the salted-join skew path, the U1/U2 window and
-  * rollup shapes, and the value-profiling family (heavy hitters,
+  * predicates (B4-B6), the salted-join skew path, the U2 per-trace
+  * error rollup, and the value-profiling family (heavy hitters,
   * winsorization, CDF normalization, set operations, key skew). The
-  * Query API endpoints themselves (T1-T18) are
+  * Query API endpoints themselves (T1-T18, and U1's waterfall) are
   * [[graft.spans.TraceService]] methods, oracle-checked through
   * [[SpanNativeOps]].
   *
@@ -71,33 +70,6 @@ object EventOps extends QueryModule {
       .filter(col("event_id") === 777)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), round(col("value"), 6).as("dur"), col("props"))
-
-  /** U1: trace waterfall metadata via window functions — per-span offset%
-    * and duration-share% within its trace (ui TraceDetails.tsx:207-242,
-    * absorbed into the engine as SURVEY §2.U suggests). */
-  def waterfall(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-    ev(spark, dir)
-      .filter(col("user_id") === 13)
-      .withColumn("t0", min(col("ts_us")).over(w))
-      .withColumn("t1", max(col("ts_us")).over(w))
-      .withColumn("total_v",
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .over(w).cast("double"))
-      .select(col("event_id"), col("ts_us"),
-        // plain double round: µs-scale operands overflow the integer-space
-        // trick, and boundary hits need the denominator to divide 2*10^8 —
-        // measure-zero for ~1e12-scale µs deltas
-        // zero-width guard (single-timestamp trace): Spark's non-ANSI
-        // divide-by-zero returns NULL while DuckDB's double division
-        // yields inf — a latent cross-engine divergence; both engines
-        // now spell "the instant sits at offset 0" (round-10 review)
-        when(col("t1") === col("t0"), lit(0.0))
-          .otherwise(round((col("ts_us") - col("t0")) * lit(100.0) /
-            (col("t1") - col("t0")), 6)).as("offset_pct"),
-        round(col("value") * lit(100.0) / col("total_v"), 6).as("share_pct"))
-      .orderBy(col("ts_us"), col("event_id"))
-  }
 
   /** U2: error flag rollup — errors per trace (TraceDetails.tsx:111-124;
     * server-side variant api/service.go:817). */
@@ -346,20 +318,6 @@ object EventOps extends QueryModule {
       Some("""SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
              | round(value,6) AS dur, props
              |FROM events WHERE event_id=777""".stripMargin)),
-    GraftQuery("u1_waterfall",
-      "U1 waterfall offset%/share% via window functions (TraceDetails.tsx:207-242)",
-      waterfall,
-      Some(s"""SELECT event_id, epoch_us(ts) AS ts_us,
-             | CASE WHEN max(epoch_us(ts)) OVER w = min(epoch_us(ts)) OVER w
-             |   THEN 0.0
-             |   ELSE round((epoch_us(ts) - min(epoch_us(ts)) OVER w)*100.0 /
-             |     (max(epoch_us(ts)) OVER w - min(epoch_us(ts)) OVER w),6)
-             |   END AS offset_pct,
-             | round(value*100.0 /
-             |   CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE),6) AS share_pct
-             |FROM events WHERE user_id=13
-             |WINDOW w AS (PARTITION BY user_id)
-             |ORDER BY ts_us, event_id""".stripMargin)),
     GraftQuery("u2_error_rollup",
       "U2 per-trace error counts (TraceDetails.tsx:111-124, api/service.go:817)",
       errorRollup,

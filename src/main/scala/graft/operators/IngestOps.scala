@@ -25,17 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object IngestOps extends QueryModule {
 
-  /** Path shared by the Spark query and the DuckDB oracle SQL. The SQL
-    * string is built from this val, so it only needs to be stable WITHIN
-    * a process — the pid suffix keeps two concurrent runners on one host
-    * from clobbering each other's fixture mid-read (same convention as
-    * the per-process Derby db below). */
-  // NOT TempArtifacts-registered: this path is interpolated into the
-  // a2a3/a4b oracle SQL, which the driver's DuckDB executes AFTER the
-  // Verify JVM exits — exit-time deletion would break the gate.
-  val FixturePath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_otlp_fixture_" +
-      ProcessHandle.current().pid()
+  /** Path shared by the Spark query and the a2a3/a4b oracle SQL
+    * ([[graft.util.Memo.stablePath]]). */
+  val FixturePath: String = graft.util.Memo.stablePath("otlp_fixture")
 
   private def projection(flat: DataFrame): DataFrame =
     flat.select(col("trace_id"), col("span_id"), col("parent_span_id"),
@@ -55,17 +47,13 @@ object IngestOps extends QueryModule {
     * with a new UUID name, breaking any reader that already planned
     * against the old listing (a2a3's plan is built before a4b runs when
     * a caller constructs all registry DataFrames up front). */
-  private val fixtureOnce = new graft.util.OncePerProcess("OTLP fixture")
   private def dumpFixture(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val flat = OtlpIngest.fromJson(spark.createDataset(OtlpExamples.all))
     // dir-independent fixture (built from OtlpExamples, not testdata) —
-    // a constant key makes the per-process dir guard vacuous, as it
+    // a constant dir makes the per-process dir guard vacuous, as it
     // should be here
-    fixtureOnce.ensure("") {
-      flat.coalesce(1) // 3-row fixture: one file, not 32 task stubs
-        .write.mode("overwrite").parquet(FixturePath)
-    }
+    graft.util.Memo.dump("otlp_fixture", "")(flat)
     flat
   }
 

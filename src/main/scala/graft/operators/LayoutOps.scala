@@ -118,9 +118,6 @@ object LayoutOps extends QueryModule {
     * size x files per bucket). */
   val NumBuckets = 8
 
-  private val bucketsOnce =
-    new graft.util.OncePerProcess("bucketed tables")
-
   /** Write orders and lineitem as BUCKETED, bucket-SORTED tables
     * co-partitioned on the join key — the storage layout that deletes
     * the shuffle (and the sort) from every subsequent fact-fact join
@@ -134,10 +131,8 @@ object LayoutOps extends QueryModule {
     * `repartition` on the bucket key before the write yields exactly
     * one file per bucket, which is what lets Spark skip the SMJ sort. */
   private def ensureBucketTables(spark: SparkSession, dir: String): Unit =
-    bucketsOnce.ensure(dir) {
-      val root = graft.util.TempArtifacts.register(
-        s"${graft.util.TempArtifacts.fastBase}/graft_buckets_" +
-          ProcessHandle.current().pid())
+    graft.util.Memo.once("bucket_tables", dir) {
+      val root = graft.util.Memo.path("graft_buckets")
       spark.sql("DROP TABLE IF EXISTS graft_lineitem_b")
       spark.sql("DROP TABLE IF EXISTS graft_orders_b")
       Tables.lineitem(spark, dir)

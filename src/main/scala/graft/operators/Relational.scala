@@ -570,23 +570,16 @@ object Relational extends QueryModule {
       approx_count_distinct(col("l_suppkey"), 0.02).as("n_supps"),
       approx_count_distinct(col("l_orderkey"), 0.02).as("n_orders"))
 
-  /** v10c dump path + guard (IvfPairsPath contract). */
-  val HllCountsPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_hll_counts_" +
-      ProcessHandle.current().pid()
-  private val hllCountsOnce =
-    new graft.util.OncePerProcess("HLL counts dump")
+  /** v10c dump path ([[graft.util.Memo.stablePath]]). */
+  val HllCountsPath: String = graft.util.Memo.stablePath("hll_counts")
 
   /** V10c: the HLL++ cardinalities' error vs exact, ORACLE-WITNESSED —
     * the sketch counts are dumped; both engines compare them to their
     * own exact distinct counts and report per-column relative error
     * (exact-integer ratio). */
   def cardinalityError(spark: SparkSession, dir: String): DataFrame = {
-    hllCountsOnce.ensure(dir) {
-      cardinalityApprox(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(HllCountsPath)
-    }
-    val a = spark.read.parquet(HllCountsPath)
+    val a = spark.read.parquet(
+        graft.util.Memo.dump("hll_counts", dir)(cardinalityApprox(spark, dir)))
       .select(col("n_parts").as("a_p"), col("n_supps").as("a_s"),
         col("n_orders").as("a_o"))
     def m(name: String, ap: Column, ex: Column) =
@@ -628,17 +621,9 @@ object Relational extends QueryModule {
   private def micro6Sql(x: String): String =
     s"CAST(CAST($x AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
 
-  /** t04d / v9c dump paths + guards (IvfPairsPath contract). */
-  val ApproxLatPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_approx_lat_" +
-      ProcessHandle.current().pid()
-  val ProfileHllPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_profile_hll_" +
-      ProcessHandle.current().pid()
-  private val approxLatOnce =
-    new graft.util.OncePerProcess("approx latency dump")
-  private val profileHllOnce =
-    new graft.util.OncePerProcess("profile HLL dump")
+  /** t04d / v9c dump paths ([[graft.util.Memo.stablePath]]). */
+  val ApproxLatPath: String = graft.util.Memo.stablePath("approx_lat")
+  val ProfileHllPath: String = graft.util.Memo.stablePath("profile_hll")
 
   /** T04d: the approx-percentile twin's error vs exact,
     * ORACLE-WITNESSED — t04b's grouped p50/p90/p99 are dumped; both
@@ -646,11 +631,8 @@ object Relational extends QueryModule {
     * worst relative error across groups and percentiles, in exact
     * integer micro-space. */
   def endpointLatenciesError(spark: SparkSession, dir: String): DataFrame = {
-    approxLatOnce.ensure(dir) {
-      endpointLatenciesApprox(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(ApproxLatPath)
-    }
-    val a = spark.read.parquet(ApproxLatPath)
+    val a = spark.read.parquet(graft.util.Memo.dump("approx_lat", dir)(
+        endpointLatenciesApprox(spark, dir)))
       .select(col("l_returnflag"), col("l_linestatus"),
         col("p50_price").as("a50"), col("p90_price").as("a90"),
         col("p99_price").as("a99"))
@@ -687,11 +669,8 @@ object Relational extends QueryModule {
     * ORACLE-WITNESSED — per-column relative error from the dumped v9b
     * report. */
   def profileError(spark: SparkSession, dir: String): DataFrame = {
-    profileHllOnce.ensure(dir) {
-      profileApprox(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(ProfileHllPath)
-    }
-    val a = spark.read.parquet(ProfileHllPath)
+    val a = spark.read.parquet(
+        graft.util.Memo.dump("profile_hll", dir)(profileApprox(spark, dir)))
       .select(col("col_name"), col("n_distinct").as("approx"))
     profile(spark, dir).select(col("col_name"),
         col("n_distinct").as("exact"))

@@ -145,13 +145,8 @@ object SeriesOps extends QueryModule {
     zeroFill(spark, agg, Seq("u" -> lit(0L)))
   }
 
-  /** t20c dump path + guard (the IvfPairsPath contract: pid-suffixed,
-    * not exit-deleted — the oracle SQL reads it after the JVM exits). */
-  val HllSeriesPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_hll_series_" +
-      ProcessHandle.current().pid()
-  private val hllSeriesOnce =
-    new graft.util.OncePerProcess("HLL series dump")
+  /** t20c dump path ([[graft.util.Memo.stablePath]]). */
+  val HllSeriesPath: String = graft.util.Memo.stablePath("hll_series")
 
   /** T20c: the HLL++ series' error vs exact, ORACLE-WITNESSED — the
     * sketch series is dumped; both engines join it to their own exact
@@ -160,11 +155,8 @@ object SeriesOps extends QueryModule {
     * spec-only claim and becomes a value the driver hashes every
     * round. */
   def uniqueUsersSeriesError(spark: SparkSession, dir: String): DataFrame = {
-    hllSeriesOnce.ensure(dir) {
-      uniqueUsersSeriesApprox(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(HllSeriesPath)
-    }
-    val approx = spark.read.parquet(HllSeriesPath)
+    val approx = spark.read.parquet(graft.util.Memo.dump("hll_series", dir)(
+        uniqueUsersSeriesApprox(spark, dir)))
       .select(col("bucket_s"), col("u").as("a"))
     uniqueUsersSeries(spark, dir).select(col("bucket_s"), col("u").as("e"))
       .join(approx, Seq("bucket_s"))

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.ArrayType
   * event_type = 'error'.
   *  - Flat ([[eventsAsSpans]], the tn_* entries): every event is a root
   *    span 'span-' || event_id of service 'svc-' || (user_id mod 5).
-  *  - Tree ([[eventsAsTreeSpans]], t01–t18 except the t04 family, and
-  *    u5): events are ranked per user by (ts_us, event_id); rank r is
+  *  - Tree ([[eventsAsTreeSpans]], t01–t18 except the t04 family, u1
+  *    and u5): events are ranked per user by (ts_us, event_id); rank r is
   *    span 's<user>.<r>' and parents onto rank r div 2, rank 1 is the
   *    root. Span ids are unique across traces, so span-id-only joins
   *    (serviceDependencies) stay exact, and the service
@@ -361,6 +361,21 @@ object SpanNativeOps extends QueryModule {
               | CASE WHEN t1 = t0 THEN 100.0
               |   ELSE dur * 100e0 / (t1 - t0) END AS width_pct
               |FROM s CROSS JOIN b ORDER BY span_id""".stripMargin)),
+    GraftQuery("u1_waterfall",
+      "U1 TraceService.waterfall: per-span offset%/width% of one trace " +
+        "over its min start / max end (TraceDetails.tsx:207-242)",
+      (s, d) => tree(s, d).waterfall("trace-13"),
+      Some(s"""WITH $Spans,
+              | t AS (SELECT * FROM spans WHERE trace_id = 'trace-13'),
+              | b AS (SELECT min(start_time_unix_nano) AS t0,
+              |   max(end_time_unix_nano) AS t1 FROM t)
+              |SELECT span_id, name, scope_name,
+              | CASE WHEN t1 = t0 THEN 0.0
+              |   ELSE (start_time_unix_nano - t0) * 100e0 / (t1 - t0)
+              |   END AS offset_pct,
+              | CASE WHEN t1 = t0 THEN 100.0
+              |   ELSE duration_ns * 100e0 / (t1 - t0) END AS width_pct
+              |FROM t CROSS JOIN b ORDER BY span_id""".stripMargin)),
     GraftQuery("u5_critical_path",
       "U5 span-tree depth + critical path via level-synchronous BFS " +
         "(TraceService.spanDepths over the synthesized heap tree; " +

@@ -608,9 +608,7 @@ object PqOps extends QueryModule {
     val idx = graft.util.ArtifactCache.persistent("ivfpq_index", "v1", dir)(
       writeIvfPqIndex(spark, dir, _))
     val q = serveQueryFrame(spark, dir, idx, ncell)
-    val outPath = graft.util.TempArtifacts.register(
-      s"${graft.util.TempArtifacts.fastBase}/graft_st21b_" +
-        s"${ProcessHandle.current().pid()}_${System.nanoTime()}")
+    val outPath = graft.util.Memo.path("graft_st21b")
     // seed the result store with the empty frame so a workload with no
     // queries reads back empty exactly like st21's memory sink (review
     // finding, round 8: an all-empty run otherwise had no path to read)

@@ -658,15 +658,9 @@ object SimilarityOps extends QueryModule {
        |SELECT neg_for, CAST(rk AS INT) AS rk, vec_id, label, cos
        |FROM r WHERE rk <= 5 ORDER BY neg_for, rk""".stripMargin
 
-  /** Path for the dumped IVF top-k id set — referenced by the v3b3
-    * oracle SQL after the Verify JVM exits, so NOT exit-deleted
-    * (the v2d2b/IvfPairsPath contract). */
-  val IvfTopkPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_ivf_topk_" +
-      ProcessHandle.current().pid()
-
-  private val ivfTopkOnce =
-    new graft.util.OncePerProcess("IVF top-k dump")
+  /** Path for the dumped IVF top-k id set, referenced by the v3b3
+    * oracle SQL ([[graft.util.Memo.stablePath]]). */
+  val IvfTopkPath: String = graft.util.Memo.stablePath("ivf_topk")
 
   /** V3b3: recall@10 of the IVF probe, ORACLE-WITNESSED (the v2d2b
     * convention brought to the ANN surface): the engine dumps its IVF
@@ -677,17 +671,15 @@ object SimilarityOps extends QueryModule {
     * neighbors the probe found — ANN quality as a driver-visible
     * value row every round, not only a spec assertion. */
   def ivfTopKRecall(spark: SparkSession, dir: String): DataFrame = {
-    ivfTopkOnce.ensure(dir) {
-      // same nlist spelling as the v3b entry the witness certifies
+    // same nlist spelling as the v3b entry the witness certifies
+    val dump = graft.util.Memo.dump("ivf_topk", dir)(
       ivfTopK(spark, dir, nlist = adaptiveNlist(spark, dir))
-        .select(col("vec_id"))
-        .coalesce(1).write.mode("overwrite").parquet(IvfTopkPath)
-    }
+        .select(col("vec_id")))
     // the SHARED witness tail (overlapAgainstDump) — this method had
     // kept a byte-identical inline copy of it, so a fix to the
     // overlap shape would have had to land twice (round-10 review;
     // DedupLedger documents v3b3 as one of its consumers)
-    graft.dedup.DedupOps.overlapAgainstDump(spark, IvfTopkPath,
+    graft.dedup.DedupOps.overlapAgainstDump(spark, dump,
       cosineTopK(spark, dir).select(col("vec_id")),
       Seq("vec_id"), "recall_at_10")
   }
@@ -709,12 +701,8 @@ object SimilarityOps extends QueryModule {
        | ${OracleSql.ratio6("n_hit", "n_exact")} AS recall_at_10
        |FROM h, t""".stripMargin
 
-  /** v3c2 dump path + guard (the IvfTopkPath contract). */
-  val KnnPairsPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_knn_pairs_" +
-      ProcessHandle.current().pid()
-  private val knnPairsOnce =
-    new graft.util.OncePerProcess("kNN join dump")
+  /** v3c2 dump path ([[graft.util.Memo.stablePath]]). */
+  val KnnPairsPath: String = graft.util.Memo.stablePath("knn_pairs")
 
   /** Deterministic query-vector sample for the v3c2 witness baseline:
     * only vec_id % KnnSampleMod == 0 vectors are scored as QUERIES
@@ -761,13 +749,11 @@ object SimilarityOps extends QueryModule {
     * number that decides whether nlist/nprobe/maxCell need retuning —
     * becomes a driver-hashed value each round, at any SF. */
   def knnJoinRecall(spark: SparkSession, dir: String): DataFrame = {
-    knnPairsOnce.ensure(dir) {
-      // same nlist spelling as the v3c entry the witness certifies
+    // same nlist spelling as the v3c entry the witness certifies
+    val dump = graft.util.Memo.dump("knn_pairs", dir)(
       knnJoin(spark, dir, nlist = adaptiveNlist(spark, dir))
-        .select(col("i"), col("j"))
-        .coalesce(1).write.mode("overwrite").parquet(KnnPairsPath)
-    }
-    graft.dedup.DedupOps.overlapAgainstDump(spark, KnnPairsPath,
+        .select(col("i"), col("j")))
+    graft.dedup.DedupOps.overlapAgainstDump(spark, dump,
       exactKnn(spark, dir, 5), Seq("i", "j"), "recall_at_5")
   }
 
@@ -790,23 +776,17 @@ object SimilarityOps extends QueryModule {
        | ${OracleSql.ratio6("n_hit", "n_exact")} AS recall_at_5
        |FROM h, t""".stripMargin
 
-  /** v18c dump path + guard (the IvfTopkPath contract). */
-  val QuantTopkPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_quant_topk_" +
-      ProcessHandle.current().pid()
-  private val quantTopkOnce =
-    new graft.util.OncePerProcess("quantized top-k dump")
+  /** v18c dump path ([[graft.util.Memo.stablePath]]). */
+  val QuantTopkPath: String = graft.util.Memo.stablePath("quant_topk")
 
   /** V18c: recall@10 of the int8-code top-k (v18b) vs the float
     * exact top-k, ORACLE-WITNESSED — how much neighborhood quality
     * the 4× storage saving costs, judged independently by both
     * engines from the dumped id set every round. */
   def quantizedTopKRecall(spark: SparkSession, dir: String): DataFrame = {
-    quantTopkOnce.ensure(dir) {
-      cosineTopKQuantized(spark, dir).select(col("vec_id"))
-        .coalesce(1).write.mode("overwrite").parquet(QuantTopkPath)
-    }
-    graft.dedup.DedupOps.overlapAgainstDump(spark, QuantTopkPath,
+    graft.dedup.DedupOps.overlapAgainstDump(spark,
+      graft.util.Memo.dump("quant_topk", dir)(
+        cosineTopKQuantized(spark, dir).select(col("vec_id"))),
       cosineTopK(spark, dir).select(col("vec_id")),
       Seq("vec_id"), "recall_at_10")
   }
@@ -989,12 +969,9 @@ object SimilarityOps extends QueryModule {
         "probe reads only nprobe partitions (pruning + equality pinned " +
         "in DedupSpec; rows-only — approximate)",
       (s, d) => {
-        // pid-suffixed so concurrent runners on one host don't clobber
-        // each other's index mid-read (rows-only entry: no oracle SQL
-        // needs the path, so per-process uniqueness is free)
-        val idx = graft.util.TempArtifacts.register(
-          s"${graft.util.TempArtifacts.fastBase}/graft_ivf_index_" +
-            ProcessHandle.current().pid())
+        // a fresh exit-deleted dir per call: no rewrite swaps part
+        // files under a reader (rows-only entry: no oracle SQL names it)
+        val idx = graft.util.Memo.path("graft_ivf_index")
         writeIvfIndex(s, d, idx, nlist = adaptiveNlist(s, d))
         // the query vector arrives from OUTSIDE the index (a pushed-down
         // point lookup on the source table, like b6)

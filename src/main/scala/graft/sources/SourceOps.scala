@@ -119,26 +119,21 @@ object SourceOps extends QueryModule {
     "svc0" -> "edge", "svc1" -> "core", "svc2" -> "edge",
     "svc3" -> "batch", "svc4" -> "core")
 
-  /** The dim as a REAL parquet scan (written once per process beside
-    * the span fixture): a local relation won't do — the optimizer
-    * constant-folds a filter over literal rows into the relation
-    * itself, and dynamic pruning is only planned when the dim side
-    * still CARRIES a selective predicate. */
-  // OncePerProcess, not a bare CAS (review finding, round 6): the CAS
-  // loser would proceed straight to spark.read.parquet on a path the
-  // winner may still be writing; ensure() blocks every caller until
-  // the write has completed before any read plans against the path.
-  private val teamsOnce =
-    new graft.util.OncePerProcess("a9 teams dimension")
-  private def teamsDim(spark: SparkSession): DataFrame = {
-    val path = s"${SpanFixture.Dir}_teams"
-    teamsOnce.ensure(path) {
+  /** The dim as a REAL parquet scan (written once per process): a
+    * local relation won't do — the optimizer constant-folds a filter
+    * over literal rows into the relation itself, and dynamic pruning is
+    * only planned when the dim side still CARRIES a selective
+    * predicate. [[graft.util.Memo.once]], not a bare CAS (review
+    * finding, round 6): the CAS loser would read a path the winner may
+    * still be writing; `once` returns only after the write. */
+  private def teamsDim(spark: SparkSession): DataFrame =
+    spark.read.parquet(graft.util.Memo.once("a9_teams", "") {
+      val path = graft.util.Memo.path("graft_a9_teams")
       import spark.implicits._
       TeamRows.toDF("service_name", "team").coalesce(1)
         .write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
+      path
+    })
 
   /** A9: runtime (DPP-style) file pruning through
     * `SupportsRuntimeFiltering` — the spans source joined to a tiny

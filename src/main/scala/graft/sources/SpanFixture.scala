@@ -99,21 +99,15 @@ object SpanFixture {
         s""""services":["${serviceOf(h)}"]}"""
     }.mkString("[", ",", "]")
 
-  /** Root of the per-process fixture (pid-suffixed: two concurrent
-    * runners on one host must not clobber each other mid-read — the
-    * IngestOps convention). Interpolated into oracle SQL, so it must be
-    * stable within the process and survive JVM exit for the driver's
-    * DuckDB pass. */
-  val Dir: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_spanfiles_" +
-      ProcessHandle.current().pid()
-
-  private val once = new graft.util.OncePerProcess("span-file fixture")
+  /** Root of the per-process fixture, interpolated into oracle SQL
+    * ([[graft.util.Memo.stablePath]]). */
+  val Dir: String = graft.util.Memo.stablePath("spanfiles")
 
   /** Write JSON files + stats sidecar + expected parquet, once per
-    * process. Returns [[Dir]]. */
+    * process (dir-independent: built from code, not testdata). Returns
+    * [[Dir]]. */
   def ensure(spark: SparkSession): String = {
-    once.ensure(Dir) {
+    graft.util.Memo.once("spanfiles", "") {
       Files.createDirectories(Paths.get(Dir))
       (0 until NFiles).foreach { h =>
         Files.write(Paths.get(Dir, s"spans_h$h.json"),

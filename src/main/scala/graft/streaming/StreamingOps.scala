@@ -562,11 +562,9 @@ object StreamingOps extends QueryModule {
       bake("wm1.sentinel", "WM1", 100000000000L)
       bake("wm2.sentinel", "WM2", 200000000000L)
     }
-    // registered for exit-time cleanup — one fresh dir per run (the
-    // nanoTime-suffixed query name), holding links to the shared dump
-    val streamDir = graft.util.TempArtifacts.register(
-      s"${graft.util.TempArtifacts.fastBase}/graft_stdrive_" +
-        ProcessHandle.current().pid() + "_" + name)
+    // one fresh exit-deleted dir per run, holding links to the shared
+    // dump
+    val streamDir = graft.util.Memo.path("graft_stdrive")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(streamDir))
     new java.io.File(prep).listFiles()
@@ -908,12 +906,8 @@ object StreamingOps extends QueryModule {
       .orderBy(col("cluster"))
   }
 
-  /** st6c dump path + guard (IvfPairsPath contract). */
-  val SketchSeriesPath: String =
-    s"${graft.util.TempArtifacts.fastBase}/graft_sketch_series_" +
-      ProcessHandle.current().pid()
-  private val sketchSeriesOnce =
-    new graft.util.OncePerProcess("streaming sketch series dump")
+  /** st6c dump path ([[graft.util.Memo.stablePath]]). */
+  val SketchSeriesPath: String = graft.util.Memo.stablePath("sketch_series")
 
   /** ST6c: the streaming p90 sketch's error vs the exact batch
     * percentile, ORACLE-WITNESSED — st6's series is dumped; both
@@ -922,10 +916,8 @@ object StreamingOps extends QueryModule {
     * positive exact p90). The last approximate surface in the registry
     * gains a driver-visible quality value. */
   def streamingSketchError(spark: SparkSession, dir: String): DataFrame = {
-    sketchSeriesOnce.ensure(dir) {
-      streamingQuantileSeries(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(SketchSeriesPath)
-    }
+    graft.util.Memo.dump("sketch_series", dir)(
+      streamingQuantileSeries(spark, dir))
     def micro6(c: org.apache.spark.sql.Column) =
       (c.cast(org.apache.spark.sql.types.DecimalType(18, 6)) * 1000000)
         .cast("long")

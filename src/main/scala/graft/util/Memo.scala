@@ -3,12 +3,13 @@ package graft.util
 import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one driver-side memo store: every shared artifact the engine
   * builds once and reuses across queries (exact baselines, IVF builds,
-  * vocabularies, scrub-ledger broadcasts, Bloom bytes, stored indexes)
-  * lives in this map, keyed by (session or none, kind, dir).
+  * vocabularies, scrub-ledger broadcasts, Bloom bytes, stored indexes,
+  * witness dumps and fixtures) lives in this map, keyed by (session or
+  * none, kind, dir), and every artifact path is minted here.
   *
   *  - Build once: `computeIfAbsent` only ALLOCATES an inert FutureTask;
   *    the build runs outside the map's bin lock via `FutureTask.run()`
@@ -25,13 +26,24 @@ import org.apache.spark.sql.SparkSession
   *    JVM's lifetime, so they are dropped on entry. The map holds one
   *    entry per shared artifact, so the sweep costs nothing.
   *  - Count builds: [[BuildCounters]] is incremented once per build,
-  *    under `s"$kind:$dir"`, and never on a hit. */
+  *    under `s"$kind:$dir"`, and never on a hit.
+  *
+  * Two path shapes. [[path]] is a fresh exit-deleted directory per
+  * build. [[stablePath]] is `fastBase/graft_<name>_<pid>`, the same for
+  * the whole process and deliberately NOT exit-deleted: the witness
+  * dumps and fixtures written there are named in oracle SQL, which
+  * `tools/check.py` runs in DuckDB after the Verify JVM has exited. The
+  * pid keeps two runners on one host from overwriting each other's dump
+  * mid-read. So every process leaves its stable paths behind; they can
+  * be deleted once the oracle has read them. [[once]] writes such an
+  * artifact once per process. */
 object Memo {
   private final case class Key(session: Option[SparkSession], kind: String,
       dir: String)
 
   private val entries = new ConcurrentHashMap[Key, FutureTask[Any]]()
   private val seq = new AtomicLong()
+  private val pid = ProcessHandle.current().pid()
 
   /** The value `build` returns for (session, kind, dir), built at most
     * once while it succeeds. `session = None` scopes the entry to the
@@ -54,6 +66,37 @@ object Memo {
     }
   }
 
+  /** What `write` returns, run once per process for the artifact
+    * `name` built from the data in `dir` (a process-scoped entry, so it
+    * keeps the build-once, wait-for-the-writer and retry-after-failure
+    * rules above). A second write would swap part files under readers
+    * that already planned against the first, so every caller in the
+    * process must name the same `dir` (every runner uses one SF per
+    * process): a different `dir` fails and leaves the first artifact
+    * untouched. Counted under `s"once:$name:$dir"`. */
+  def once[V](name: String, dir: String)(write: => V): V = {
+    val (first, value) = apply(None, s"once:$name", "", counted = false) {
+      BuildCounters.inc(s"once:$name:$dir")
+      (dir, write)
+    }
+    require(first == dir,
+      s"$name is per-process: written from $first, now asked for $dir")
+    value
+  }
+
+  /** `df` written [[once]] per process as one parquet file at
+    * [[stablePath]]`(name)` (the witness-dump shape); returns the path. */
+  def dump(name: String, dir: String)(df: => DataFrame): String = {
+    val p = stablePath(name)
+    once(name, dir)(df.coalesce(1).write.mode("overwrite").parquet(p))
+    p
+  }
+
+  /** `fastBase/graft_<name>_<pid>`: stable for the process and kept
+    * after exit (see the object's doc). */
+  def stablePath(name: String): String =
+    s"${TempArtifacts.fastBase}/graft_${name}_$pid"
+
   /** Forget every entry whose kind starts with `kindPrefix`. */
   private[util] def forget(kindPrefix: String): Unit =
     entries.keySet.removeIf(_.kind.startsWith(kindPrefix)): Unit
@@ -66,6 +109,6 @@ object Memo {
     * directory instead of overwriting part files under readers that a
     * prior session already planned. */
   def path(name: String): String =
-    TempArtifacts.register(s"${TempArtifacts.fastBase}/${name}_" +
-      s"${ProcessHandle.current().pid()}_${seq.incrementAndGet()}")
+    TempArtifacts.register(
+      s"${TempArtifacts.fastBase}/${name}_${pid}_${seq.incrementAndGet()}")
 }

@@ -24,9 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Storage and concurrency are [[Memo]]'s: one build per
   * (session, key, dir) on a fresh pid+seq path under
-  * [[TempArtifacts.fastBase]], exit-deleted — unlike the witness DUMP
-  * paths, no oracle SQL ever references a memo path, so cleanup is
-  * safe. A recreated session rebuilds rather than trusting files it
+  * [[TempArtifacts.fastBase]], exit-deleted — unlike the witness dumps
+  * at [[Memo.stablePath]], no oracle SQL ever references a memo path,
+  * so cleanup is safe. A recreated session rebuilds rather than trusting files it
   * didn't write; every runner uses a single SF per process, and a
   * second dir in one session simply memoizes separately.
   */

@@ -1,13 +1,15 @@
 package graft.util
 
-/** One process-wide ledger of per-process /tmp artifacts (ingest
-  * fixtures, bucket tables, IVF indexes/pair dumps, inverted indexes)
-  * with a single JVM shutdown hook deleting them all — instead of one
-  * ad-hoc hook per module, or none. Callers [[register]] the path
-  * BEFORE starting the write, so a JVM exit mid-build still cleans the
-  * partial directory. Registration is idempotent and never deletes
-  * during the run (oracle SQL and already-planned readers reference
-  * these paths until exit). */
+/** One process-wide ledger of per-process artifacts (every
+  * [[Memo.path]] — memoized plans, bucket tables, IVF and inverted
+  * indexes, streaming scratch — plus the session's local dir and the
+  * streaming checkpoint root) with a single JVM shutdown hook deleting
+  * them all — instead of one ad-hoc hook per module, or none. Paths are
+  * registered BEFORE the write starts, so a JVM exit mid-build still
+  * cleans the partial directory. Registration
+  * never deletes during the run (already-planned readers reference
+  * these paths until exit). The witness dumps at [[Memo.stablePath]]
+  * are deliberately not registered. */
 object TempArtifacts {
   private val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 

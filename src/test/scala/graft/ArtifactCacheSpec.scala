@@ -9,6 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * append-contract listing helper sees exactly the parquet parts. */
 class ArtifactCacheSpec extends AnyFunSuite {
 
+  /** Deletes what a persistent test published to the SHARED catalog
+    * (its kind is unique to the run, so no later process could ever
+    * adopt it) and its source dir. */
+  private def dropPublished(kind: String, src: String): Unit = {
+    val catalog = new java.io.File(graft.util.TempArtifacts.fastBase,
+      "graft_artifact_catalog")
+    val published = Option(catalog.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith(s"${kind}_"))
+    (published :+ new java.io.File(src)).foreach(f =>
+      new scala.reflect.io.Directory(f).deleteRecursively(): Unit)
+  }
+
   test("concurrent callers of one (kind, dir) share ONE build") {
     val builds = new java.util.concurrent.atomic.AtomicInteger()
     val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -69,17 +81,19 @@ class ArtifactCacheSpec extends AnyFunSuite {
       Files.createDirectories(Paths.get(p))
       Files.write(Paths.get(p, "payload.txt"), "x".getBytes("UTF-8")): Unit
     }
-    val warm = call()
-    assert(builds.get() === 1)
-    assert(Files.exists(Paths.get(warm, "payload.txt")))
-    assert(Files.exists(Paths.get(warm, "_COMPLETE")),
-      "published artifact must carry its completeness marker")
-    // simulate process death: drop the in-process memo for this kind —
-    // the next lookup has only the disk catalog to go on
-    ArtifactCache.resetInProcess(kind)
-    val cold = call()
-    assert(builds.get() === 1, "cold lookup rebuilt despite a catalog hit")
-    assert(cold === warm)
+    try {
+      val warm = call()
+      assert(builds.get() === 1)
+      assert(Files.exists(Paths.get(warm, "payload.txt")))
+      assert(Files.exists(Paths.get(warm, "_COMPLETE")),
+        "published artifact must carry its completeness marker")
+      // simulate process death: drop the in-process memo for this kind —
+      // the next lookup has only the disk catalog to go on
+      ArtifactCache.resetInProcess(kind)
+      val cold = call()
+      assert(builds.get() === 1, "cold lookup rebuilt despite a catalog hit")
+      assert(cold === warm)
+    } finally dropPublished(kind, src)
   }
 
   test("persistent: a changed input publishes to a NEW path and never " +
@@ -96,25 +110,27 @@ class ArtifactCacheSpec extends AnyFunSuite {
       Files.write(Paths.get(p, "payload.txt"),
         s"build$n".getBytes("UTF-8")): Unit
     }
-    val first = call()
-    // the input grows a byte (and so a new fingerprint)...
-    Files.write(input, "gen2x".getBytes("UTF-8"))
-    ArtifactCache.resetInProcess(kind)
-    val second = call()
-    assert(builds.get() === 2)
-    assert(second !== first, "changed input must not reuse the artifact")
-    // ...and the first artifact is still byte-intact where it was
-    assert(new String(Files.readAllBytes(
-      Paths.get(first, "payload.txt")), "UTF-8") === "build1")
-    // version bump likewise forces a fresh build at a fresh path
-    ArtifactCache.resetInProcess(kind)
-    val v2 = ArtifactCache.persistent(kind, "v2", src) { p =>
-      builds.incrementAndGet()
-      Files.createDirectories(Paths.get(p))
-      Files.write(Paths.get(p, "payload.txt"), "v2".getBytes("UTF-8")): Unit
-    }
-    assert(builds.get() === 3)
-    assert(v2 !== second)
+    try {
+      val first = call()
+      // the input grows a byte (and so a new fingerprint)...
+      Files.write(input, "gen2x".getBytes("UTF-8"))
+      ArtifactCache.resetInProcess(kind)
+      val second = call()
+      assert(builds.get() === 2)
+      assert(second !== first, "changed input must not reuse the artifact")
+      // ...and the first artifact is still byte-intact where it was
+      assert(new String(Files.readAllBytes(
+        Paths.get(first, "payload.txt")), "UTF-8") === "build1")
+      // version bump likewise forces a fresh build at a fresh path
+      ArtifactCache.resetInProcess(kind)
+      val v2 = ArtifactCache.persistent(kind, "v2", src) { p =>
+        builds.incrementAndGet()
+        Files.createDirectories(Paths.get(p))
+        Files.write(Paths.get(p, "payload.txt"), "v2".getBytes("UTF-8")): Unit
+      }
+      assert(builds.get() === 3)
+      assert(v2 !== second)
+    } finally dropPublished(kind, src)
   }
 
   test("parquetListing sees exactly the nested parquet part files") {

@@ -1,13 +1,31 @@
 package graft
 
-import graft.util.PlanMemo
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import graft.util.{BuildCounters, Memo, PlanMemo}
 
 /** PlanMemo contract: builds run exactly once per key under
   * concurrency, nested memo calls (a build that calls memo for a
   * DIFFERENT key — the codes→codebooks shape) neither deadlock nor
   * throw ConcurrentHashMap's 'recursive update', and every caller
-  * reads the same materialized rows. */
+  * reads the same materialized rows. The once-per-process dump guard
+  * ([[Memo.once]]) keeps the same rules and fails a second data dir. */
 class PlanMemoSpec extends SparkSpec {
+
+  /** A two-part dump file written with a pause between the parts, so a
+    * caller that returned before the write finished would read half. */
+  private def slowDump(): String = {
+    val p = Memo.path("graft_pmspec_once")
+    Files.createDirectories(Paths.get(p))
+    val f = Paths.get(p, "dump.txt")
+    Files.write(f, "first|".getBytes(UTF_8))
+    Thread.sleep(100)
+    Files.write(f, "second".getBytes(UTF_8), StandardOpenOption.APPEND)
+    p
+  }
+  private def read(p: String): String =
+    new String(Files.readAllBytes(Paths.get(p, "dump.txt")), UTF_8)
 
   test("concurrent callers build once and all read the same rows") {
     val built = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -102,6 +120,73 @@ class PlanMemoSpec extends SparkSpec {
     assert(call(fail = false) === "built")
     assert(attempts.get() === 2)
     assert(call(fail = true) === "built") // the success is now memoized
+    assert(attempts.get() === 2)
+  }
+
+  test("Memo.once: 16 callers released together run one write, and " +
+    "each returns only after the complete dump is on disk") {
+    val name = s"pmspec_once_${System.nanoTime()}"
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val tasks = (1 to 16).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          override def call(): String = {
+            start.await()
+            read(Memo.once(name, "dirA") {
+              writes.incrementAndGet()
+              slowDump()
+            })
+          }
+        })
+      }
+      start.countDown()
+      val seen = tasks.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(writes.get() === 1, s"write ran ${writes.get()} times")
+      assert(seen.forall(_ == "first|second"), seen.distinct)
+      assert(BuildCounters.count(s"once:$name:dirA") === 1)
+    } finally pool.shutdownNow()
+  }
+
+  test("Memo.once: a second dir fails naming both dirs and leaves the " +
+    "first dump untouched") {
+    val name = s"pmspec_once_dir_${System.nanoTime()}"
+    val p = Memo.once(name, "dirA")(slowDump())
+    def listing = new java.io.File(p).listFiles()
+      .map(f => f.getName -> (f.length, f.lastModified)).toMap
+    val before = listing
+    val e = intercept[IllegalArgumentException] {
+      Memo.once(name, "dirB") {
+        Files.write(Paths.get(p, "dump.txt"), "dirB".getBytes(UTF_8))
+        p
+      }
+    }
+    assert(e.getMessage.contains(s"$name is per-process: written from " +
+      "dirA, now asked for dirB"), e.getMessage)
+    assert(read(p) === "first|second")
+    assert(listing === before)
+    assert(Memo.once[String](name, "dirA")(sys.error("rewrite attempted")) === p)
+  }
+
+  test("Memo.once: a throwing write surfaces its own exception and the " +
+    "next caller writes") {
+    val name = s"pmspec_once_fail_${System.nanoTime()}"
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalStateException] {
+      Memo.once(name, "dirA") {
+        attempts.incrementAndGet()
+        throw new IllegalStateException("dump boom")
+      }
+    }
+    assert(e.getMessage === "dump boom")
+    val p = Memo.once(name, "dirA") {
+      attempts.incrementAndGet()
+      slowDump()
+    }
+    assert(attempts.get() === 2)
+    assert(read(p) === "first|second")
+    assert(Memo.once[String](name, "dirA")(sys.error("rewrite attempted")) === p)
     assert(attempts.get() === 2)
   }
 }

@@ -8,9 +8,10 @@ package graft
   * live in ONE place here — previously they were scattered across
   * per-module specs and prose.
   *
-  * Runs at sf0.001: the witness dump paths are OncePerProcess and the
-  * whole test JVM (PlanSpec's global sweep included) binds them to
-  * sf0.001 — a second dir would trip the per-process guard by design.
+  * Runs at sf0.001: each witness dump is written once per process
+  * ([[graft.util.Memo.once]]) and the whole test JVM (the registry
+  * sweep included) binds them to sf0.001 — a second dir would trip the
+  * per-process guard by design.
   * Measured values r7 at sf0.001 (and sf0.01, driver SF) are noted per
   * row; bands leave honest slack, not 10x margins.
   */

@@ -123,9 +123,8 @@ object SourceOps extends QueryModule {
     * local relation won't do — the optimizer constant-folds a filter
     * over literal rows into the relation itself, and dynamic pruning is
     * only planned when the dim side still CARRIES a selective
-    * predicate. [[graft.util.Memo.once]], not a bare CAS (review
-    * finding, round 6): the CAS loser would read a path the winner may
-    * still be writing; `once` returns only after the write. */
+    * predicate. [[graft.util.Memo.once]] returns only after the write,
+    * so no caller reads a half-written dim. */
   private def teamsDim(spark: SparkSession): DataFrame =
     spark.read.parquet(graft.util.Memo.once("a9_teams", "") {
       val path = graft.util.Memo.path("graft_a9_teams")

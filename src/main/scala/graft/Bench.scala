@@ -58,235 +58,73 @@ object Bench {
         .getConnection("jdbc:derby:memory:bench_warm;drop=true")
       catch { case _: java.sql.SQLException => () }
     } catch { case _: Throwable => () }
-    // Host-contention tripwire (round-9 verdict "What's wrong" #1: the
-    // official r9 artifact was a contended-host run reading 2.3x slow,
-    // and nothing in the artifact said so). A fixed CPU-bound
-    // calibration job — 64M xxhash64 across all cores, no IO — is
-    // timed at suite start AND end; `host_noise_factor` =
-    // max(start,end) / nominal is embedded in every artifact, so a
-    // contended run is self-labeling. Nominal pinned from an idle
-    // local[32] host (min-of-3 after warm; see BenchCalib).
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      // cpus may be any master-string arity ("*"), not only an int
-      spark.range(0, 64000000L, 1,
-          scala.util.Try(cpus.toInt).getOrElse(
-            spark.sparkContext.defaultParallelism))
-        .selectExpr("sum(xxhash64(id) % 1048576) as s").collect(): Unit
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calibrate(): Double = {
-      calibOnce() // warm the codegen path; not counted
-      Seq(calibOnce(), calibOnce(), calibOnce()).min
-    }
-    // Idle local[32] reference for the calibration job, pinned round
-    // 10 (measured 0.11-0.16 s min-of-3 on the quiet sandbox host).
-    // host_noise_factor ~1 = clean run; >>1 = contended host, treat
-    // the suite total as an overstatement.
-    val NominalCalibSec = 0.13
-    val calibStart = calibrate()
-    // Failures are recorded as -1 so an erroring entry reads as broken,
-    // not as fast; what threw is named on stderr. Drive.run releases
-    // the entry's cached blocks and persistent RDDs after each run.
-    // Best-of-2 per entry (round-6 review): two same-code full-suite
-    // runs disagreed up to 5x on individual entries — host contention
-    // and IO noise, not plan changes — so a single sample is not a
-    // reproducible number. Each entry runs twice with the full cache
-    // hygiene between runs; the MIN is recorded (the run least
-    // polluted by external noise).
-    // Interleaved contention canary (round-10 verdict "What's wrong"
-    // #1: the start/end calibration pair read 1.007 on a run whose
-    // MID-RUN entries blew up 10x — endpoint probes are necessary but
-    // not sufficient). The calibration job is re-timed every
-    // CanaryEvery entries and the whole series is embedded in both
-    // artifacts as `calib_series`; a mid-run contention window now
-    // shows up as a spike at the canary index even when the endpoints
-    // read clean. Min-of-TWO back-to-back samples, not one and not
-    // min-of-3: three same-code close runs showed a single sample is
-    // systematically 2-5x elevated by the just-finished entry's GC/
-    // cleaner churn (the canary fires right after the between-entry
-    // hygiene) — chronic false "contended" labels that re-timed all
-    // 263 entries every run — while a real external window (the 14x
-    // spike the canary caught in this round's first close runs)
-    // inflates both samples; min-of-3 would over-smooth short windows.
-    val CanaryEvery = 50
-    val midCalib = scala.collection.mutable.ArrayBuffer[Double]()
-    val sampleLog =
-      scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
-    def once(q: GraftQuery): Double = {
-      val r = Drive.run(spark, q.run(_, sfDir))
-      r.problem.foreach(p => System.err.println(s"[bench] ${q.id} failed: $p"))
-      if (r.problem.isEmpty) (r.constructNs + r.executeNs) / 1e9 else -1.0
-    }
+    // One timing rule. Each entry runs twice through Drive.run, which
+    // releases what it cached between runs; `queries` holds the lower
+    // wall time of the two, the run least disturbed by other work on the
+    // host. `cpu` holds the lower JVM CPU time beside it: in local mode
+    // the whole entry runs in this JVM, and CPU time leaves out what the
+    // hypervisor gave to other guests. That share, the host's steal,
+    // is read from /proc/stat over the suite and over each window of
+    // StealEvery entries, so a contended run says so in its artifact.
+    // A failed run records -1, so an erroring entry reads as broken, not
+    // fast; what threw is named on stderr.
+    val StealEvery = 50
     val sel = Drive.selected
-    val firstPass = sel.zipWithIndex.map { case (q, idx) =>
-      if (idx > 0 && idx % CanaryEvery == 0)
-        midCalib += math.min(calibOnce(), calibOnce())
-      val (a, b) = (once(q), once(q))
-      sampleLog += ((q.id, a, b))
-      // an erroring entry must read as broken, not fast: -1 unless
-      // BOTH runs succeed (a flaky single failure is itself a signal)
-      q.id -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
-    }
-    val calibEnd = calibrate()
-    // END-OF-SUITE RETRY for contention-window entries (the first two
-    // round-11 close runs showed why min-of-2 alone is not enough:
-    // BOTH of v42's samples landed inside one hypervisor-contention
-    // window and agreed at 8-10 s against a 0.4 s true cost — split
-    // detection can't see a window that swallows both samples, but the
-    // CANARY bracketing those entries read 14x nominal). Every entry
-    // whose bracketing canary samples read >1.5x nominal — plus every
-    // noise_split entry — gets ONE more sample here, minutes later,
-    // almost certainly outside the window; `queries` takes the min of
-    // all samples (a contended retry can never make an entry worse).
-    val series0 = (calibStart +: midCalib :+ calibEnd).toIndexedSeq
-    // The contention threshold adapts to the RUN's own quiet floor
-    // (round-11 field observation: this host's min-of-3 calibration
-    // moved from the 0.11-0.16 s band the 0.13 nominal was pinned from
-    // to 0.062-0.074 s — against the stale pin a normal sample read
-    // >1.5x and the retry pass re-timed all 263 entries even in mild
-    // noise). min(series) is the best available estimate of what the
-    // calibration job costs on THIS host when quiet; the pinned
-    // nominal stays as a floor-of-the-floor so one glitch-fast sample
-    // cannot mark a genuinely contended run clean, and host_noise_
-    // factor keeps the pinned nominal for round-over-round comparison.
-    // Capped above as well as below: under sustained whole-run
-    // contention series0.min is itself inflated, and an uncapped floor
-    // would raise canaryThreshold with the contention — flagging
-    // nothing exactly when the run is uniformly slow. 2x nominal keeps
-    // the threshold anchored to the idle-host pin in that regime
-    // (host_noise_factor + over_baseline still label the run).
-    val calibFloor = math.min(
-      math.max(series0.min, NominalCalibSec * 0.5), NominalCalibSec * 2.0)
-    // Threshold: the QUIET band itself spans ~2.5x on this host (a
-    // clean run read series 0.063-0.16 — noise factor 1.01 — and
-    // 1.5x-the-min flagged every window, re-timing all 264 entries for
-    // nothing), while genuine contention reads >=2x nominal (0.28-1.87
-    // observed). max(1.5x nominal, 2x run floor) clears the quiet band
-    // on this host AND scales with a slower-but-quiet host's floor.
-    val canaryThreshold =
-      math.max(1.5 * NominalCalibSec, 2.0 * calibFloor)
-    def contendedWindow(idx: Int): Boolean = {
-      val lo = math.min(idx / CanaryEvery, series0.length - 1)
-      val hi = math.min(lo + 1, series0.length - 1)
-      math.max(series0(lo), series0(hi)) > canaryThreshold
-    }
-    val noiseSplit0 = sampleLog.collect { case (k, a, b)
-      if a > 0 && b > 0 && math.max(a, b) > 2 * math.min(a, b) &&
-        math.max(a, b) - math.min(a, b) > 0.3 => k }.toSet
-    // Per-entry known-cost baseline (BENCH_BASELINE.json: flat
-    // {"name":sec}, the per-entry MIN across prior same-code close
-    // runs, refreshed each round). Catches the one class the canary
-    // and the split detector both miss: a disturbance LOCAL to one
-    // entry (a long GC pause, a page-cache eviction) that swallows
-    // both samples while the bracketing canaries read clean — v68b
-    // read 5.39 s on both samples against a 0.45 s known cost in a
-    // run whose canary series was spotless. An entry whose best
-    // sample exceeds 3x baseline + 0.3 s gets the same end-of-suite
-    // retry; min-of-all-samples means a retry can never worsen it,
-    // and a GENUINE regression reproduces in the retry and stays.
-    // Failure-open: no file / unparseable / missing entry = no flag.
-    val baseline: Map[String, Double] = (try {
-      val p = java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_BASELINE", "/root/repo/BENCH_BASELINE.json"))
-      if (java.nio.file.Files.exists(p)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // Per-token Try: one malformed numeric must skip that entry,
-        // not silently discard the whole baseline map (which would
-        // disable the over-baseline trigger for every entry).
-        "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(txt)
-          .flatMap(m => scala.util.Try(m.group(2).toDouble).toOption
-            .map(m.group(1) -> _)).toMap
-      } else Map.empty[String, Double]
-    } catch { case _: Throwable => Map.empty[String, Double] })
-    // Trigger: max(2x base + 0.15, 3x base). The old 3x+0.3 form's
-    // absolute term exempted exactly the entries whose known cost is
-    // small (median registry cost 0.35 s): t10 read 4.9x its 0.146 s
-    // floor in the r11 driver run without tripping (0.72 observed vs
-    // the 0.74 threshold). The +0.15 floor still absorbs per-entry
-    // jitter on sub-0.1 s entries without re-timing the whole tail.
-    val overBaseline0 = firstPass.collect { case (name, v)
-      if v >= 0 && baseline.get(name)
-        .exists(b => v > math.max(2 * b + 0.15, 3 * b)) =>
-        name }.toSet
-    val retrySample = scala.collection.mutable.Map[String, Double]()
-    sel.zipWithIndex.foreach { case (q, idx) =>
-      if (firstPass(idx)._2 >= 0 &&
-          (contendedWindow(idx) || noiseSplit0.contains(q.id) ||
-            overBaseline0.contains(q.id))) {
-        val c = once(q)
-        if (c >= 0) retrySample(q.id) = c
+    val marks = scala.collection.mutable.ArrayBuffer(stealJiffies())
+    val sampleLog = sel.zipWithIndex.map { case (q, idx) =>
+      if (idx > 0 && idx % StealEvery == 0) marks += stealJiffies()
+      val runs = Seq.fill(2) {
+        val r = Drive.run(spark, q.run(_, sfDir))
+        r.problem.foreach(p => System.err.println(s"[bench] ${q.id} failed: $p"))
+        if (r.problem.isEmpty) ((r.constructNs + r.executeNs) / 1e9, r.cpuNs / 1e9)
+        else (-1.0, -1.0)
       }
+      (q.id, runs.map(_._1), runs.map(_._2))
     }
-    val results = firstPass.map { case (name, v) =>
-      name -> (retrySample.get(name) match {
-        case Some(c) if v >= 0 => math.min(v, c)
-        case _ => v
-      })
-    }
+    marks += stealJiffies()
+    def stealPct(a: (Long, Long), b: (Long, Long)): Double =
+      100.0 * (b._2 - a._2) / math.max(1L, b._1 - a._1)
+    // both runs must succeed (a flaky single failure is itself a signal)
+    def best(xs: Seq[Double]): Double = if (xs.exists(_ < 0)) -1.0 else xs.min
+    def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
+    val results = sampleLog.map { case (k, wall, _) => k -> best(wall) }
+    val cpuJson = sampleLog.map { case (k, _, cpu) => s"\"$k\":${r3(best(cpu))}" }
+      .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val hostNoise = math.max(calibStart, calibEnd) / NominalCalibSec
-    def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
-    // All samples per entry (BENCH_FULL only — the stdout / short
-    // lines keep the driver's one-number-per-entry contract).
-    // How to read: `queries` holds the min over samples; `samples`
-    // holds [a,b] (+ the end-of-suite retry as a third element for
-    // entries in `retried`); an entry in `noise_split` had its two
-    // same-code samples disagree >2x and >0.3s — its min is
-    // trustworthy, its max was a noise hit; `retried` entries sat in a
-    // canary-flagged contention window (or split) and carry one extra
-    // sample taken after the suite finished.
-    val samplesJson = sampleLog.map { case (k, a, b) =>
-      val extra = retrySample.get(k).map(c => s",${r3(c)}").getOrElse("")
-      s"\"" + k + s"\":[${r3(a)},${r3(b)}$extra]" }.mkString("{", ",", "}")
-    val noiseSplitJson =
-      noiseSplit0.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val retriedJson = retrySample.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val overBaselineJson = overBaseline0.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calibSeries = series0.map(r3).mkString("[", ",", "]")
+    // The noise keys of earlier artifacts stay, filled from steal:
+    // `calib_series` is the steal % of each StealEvery-entry window,
+    // `calib_start_sec`/`calib_end_sec` its first and last window, and
+    // `host_noise_factor` = 1 / (1 - the suite's steal share), how much
+    // longer the wall clock ran than the CPU this guest was given. No
+    // entry is split, compared with a floor or retried, so those name
+    // lists are empty.
+    val stealSeries = marks.zip(marks.tail).map { case (a, b) => r3(stealPct(a, b)) }
+    val suiteSteal = stealPct(marks.head, marks.last)
+    val hostNoise = 1.0 / math.max(1e-3, 1.0 - suiteSteal / 100.0)
+    val calibFields =
+      s""""calib_start_sec":${stealSeries.head},"calib_end_sec":${stealSeries.last},"host_noise_factor":${r3(hostNoise)},"calib_series":${stealSeries.mkString("[", ",", "]")},"host_steal_pct":${r3(suiteSteal)}"""
     val noiseFields =
-      s""""calib_start_sec":${r3(calibStart)},"calib_end_sec":${r3(calibEnd)},"host_noise_factor":${r3(hostNoise)},"calib_series":$calibSeries,"noise_split":$noiseSplitJson,"over_baseline":$overBaselineJson,"retried":$retriedJson"""
+      s"""$calibFields,"noise_split":[],"over_baseline":[],"retried":[]"""
+    // `samples` holds both wall times of each entry, `cpu` the lower of
+    // its two JVM CPU times.
+    val samplesJson = sampleLog.map { case (k, wall, _) =>
+      s"\"$k\":" + wall.map(r3).mkString("[", ",", "]") }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec",$noiseFields,"queries":$qs,"samples":$samplesJson,"sf":"$sfDir"}"""
-    // The driver's stdout capture has head-truncated the single long
-    // JSON line twice (r4, r7: "parsed": null). Print a SHORT line the
-    // parser can always swallow first, then the full per-query map;
-    // both precede SparkSession shutdown logging.
+      s"""{"metric":"total","value":$total,"unit":"sec",$noiseFields,"queries":$qs,"samples":$samplesJson,"cpu":$cpuJson,"sf":"$sfDir"}"""
+    // Three lines, in this order: a short one (the total without the
+    // per-entry maps) for a parser that keeps the head of stdout, the
+    // long one, and a last line of bounded size for a parser that keeps
+    // only the tail (a 2000-character window): name lists become counts
+    // and `queries` becomes a fixed headline map, the cheap entries a
+    // round-over-round comparison has always had plus the most
+    // expensive ones. The full map is in the long line and
+    // BENCH_FULL.json.
     val shortLine =
       s"""{"metric":"total","value":$total,"unit":"sec",$noiseFields,"sf":"$sfDir"}"""
     println(shortLine)
     println(line)
-    // Round-8 verdict: the driver keeps the END of stdout, so a short
-    // line printed only BEFORE the ~10 KB per-query line gets evicted
-    // from the tail window ("parsed": null three rounds running).
-    // Print it again AFTER the long line so it sits inside any
-    // tail-keeping capture as well as any head-keeping one.
-    // DELIBERATE trade-off (round-9 review): a last-match parser now
-    // always gets the short form without the per-query map — but for a
-    // tail-keeping window the long line can never fit anyway, and the
-    // full map is durable in BENCH_FULL.json below; a sum-all-totals
-    // parser would triple count, which no known consumer does.
-    println(shortLine)
-    // Round-11 post-mortem: even the "short" line blew past the
-    // driver's 2000-char tail window, because noise_split /
-    // over_baseline / retried each embed up to ~55 query NAMES (the
-    // r11 tail began mid-array — no `{"metric"` survived, "parsed":
-    // null for the 6th round). The VERY LAST stdout line must have a
-    // BOUNDED size: same metric/value/unit/sf contract, noise arrays
-    // replaced by counts, plus a fixed ~12-entry headline-query map so
-    // a queries-expecting parser still gets a non-empty map. Full
-    // fidelity lives in the long line above + BENCH_FULL.json.
-    // Round-13 refresh (r12 verdict item 6): the headline map gains the
-    // most expensive entries (v66b, w2, v67, st2, st21c — where the
-    // suite's cost mass actually is) so the driver's bounded-tail
-    // regression signal covers the time. ADDITIONS ONLY — the original
-    // 12 names all stay, so round-over-round PERF keeps its full common
-    // set; 17 entries ≈ 1.0 KB tail line, still inside the driver's
-    // 2000-char window with margin.
     val headlineNames = Seq(
       "a5_scan_count", "t04_endpoint_latencies", "t05_service_dependencies",
       "t10_trace_counts", "u5_critical_path", "v1_dedup_exact",
@@ -299,7 +137,7 @@ object Bench {
       .flatMap(n => resultMap.get(n).map(v => s"\"" + n + s"\":${r3(v)}"))
       .mkString("{", ",", "}")
     val tailLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","calib_start_sec":${r3(calibStart)},"calib_end_sec":${r3(calibEnd)},"host_noise_factor":${r3(hostNoise)},"calib_series":$calibSeries,"noise_split_n":${noiseSplit0.size},"over_baseline_n":${overBaseline0.size},"retried_n":${retrySample.size},"queries_n":${results.size},"queries":$headlineJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec",$calibFields,"noise_split_n":0,"over_baseline_n":0,"retried_n":0,"queries_n":${results.size},"queries":$headlineJson,"sf":"$sfDir"}"""
     println(tailLine)
     System.out.flush()
     // The driver's BENCH artifact head-truncates long stdout captures
@@ -322,4 +160,14 @@ object Bench {
     catch { case _: Throwable => () }
     spark.stop()
   }
+
+  /** Machine-wide CPU time from /proc/stat, in jiffies: (all states,
+    * steal). (0, 0) where the file cannot be read. */
+  private def stealJiffies(): (Long, Long) = scala.util.Try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      (f.take(8).sum, if (f.length > 7) f(7) else 0L)
+    } finally src.close()
+  }.getOrElse((0L, 0L))
 }

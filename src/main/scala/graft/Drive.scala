@@ -14,9 +14,14 @@ object Drive {
     * (an action that only writes returns 0), None when the build or the
     * action threw; `fault` is the message of what threw. `stopped`
     * is true when the run left the SparkContext stopped: every later
-    * run in this process then fails, so callers name this entry. */
+    * run in this process then fails, so callers name this entry.
+    * `constructNs` and `executeNs` are the wall time of the build and
+    * of the action. `cpuNs` is the JVM's process CPU time over both: in
+    * local mode every task, JIT and GC thread runs in this JVM, so it
+    * covers the entry's whole cost, and unlike wall time it leaves out
+    * what the host gave to other work. */
   final case class Result(rows: Option[Long], fault: Option[String],
-      stopped: Boolean, constructNs: Long, executeNs: Long) {
+      stopped: Boolean, constructNs: Long, executeNs: Long, cpuNs: Long) {
     /** The fault and the stop, as one line; None for a clean run. */
     def problem: Option[String] = {
       val ps = fault.toSeq ++ Option.when(stopped)("stopped the SparkContext")
@@ -48,6 +53,7 @@ object Drive {
     * throws still passes it. */
   def run(spark: SparkSession, build: SparkSession => DataFrame,
       act: DataFrame => Long = Force.rows): Result = {
+    val c0 = processCpuNs()
     val t0 = System.nanoTime()
     var t1 = -1L
     val (rows, fault) =
@@ -59,6 +65,7 @@ object Drive {
         (None, Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
     val t2 = System.nanoTime()
+    val cpu = processCpuNs() - c0
     if (t1 < 0) t1 = t2
     val stopped = spark.sparkContext.isStopped
     if (!stopped) {
@@ -66,6 +73,12 @@ object Drive {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    Result(rows, fault, stopped, t1 - t0, t2 - t1)
+    Result(rows, fault, stopped, t1 - t0, t2 - t1, cpu)
   }
+
+  private val os = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** CPU time this JVM has used, all threads. */
+  private def processCpuNs(): Long = os.getProcessCpuTime
 }

@@ -70,7 +70,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("persistent: a cold process adopts the warm process's artifact " +
     "from the disk catalog instead of rebuilding") {
     import java.nio.file.{Files, Paths}
-    val src = Files.createTempDirectory("ac_persist_src").toString
+    val src = SparkSpec.tempDir("ac_persist_src")
     Files.write(Paths.get(src, "t.parquet"), "data".getBytes("UTF-8"))
     // unique kind per run: the catalog deliberately SURVIVES processes,
     // so a reused kind would hit a previous test run's artifact
@@ -99,7 +99,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("persistent: a changed input publishes to a NEW path and never " +
     "touches the old artifact (the fixture-clobber guard)") {
     import java.nio.file.{Files, Paths}
-    val src = Files.createTempDirectory("ac_persist_src2").toString
+    val src = SparkSpec.tempDir("ac_persist_src2")
     val input = Paths.get(src, "t.parquet")
     Files.write(input, "gen1".getBytes("UTF-8"))
     val kind = s"spec_persist2_${System.nanoTime()}"
@@ -134,8 +134,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   }
 
   test("parquetListing sees exactly the nested parquet part files") {
-    val root = java.nio.file.Files
-      .createTempDirectory("artifact_listing").toString
+    val root = SparkSpec.tempDir("artifact_listing")
     val sub = java.nio.file.Paths.get(s"$root/bucket=3")
     java.nio.file.Files.createDirectories(sub)
     java.nio.file.Files.write(sub.resolve("part-0.parquet"),

@@ -158,8 +158,7 @@ class ClusterSpec extends SparkSpec {
 
   test("v47 empty-cluster edge: a duplicated seed's cluster drops out " +
     "and the run still equals the reference impl") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmeans_edge").toString
+    val dir = SparkSpec.tempDir("graft_kmeans_edge")
     import org.apache.spark.sql.functions.col
     val sess = spark
     import sess.implicits._

@@ -137,7 +137,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("V3b stored IVF index: partition-pruned probe equals in-memory") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf-index").toString
+    val idx = SparkSpec.tempDir("ivf-index")
     SimilarityOps.writeIvfIndex(spark, sf, idx)
     val stored = SimilarityOps.ivfTopKStored(spark, idx,
       SimilarityOps.queryVector(spark, sf, 0L), excludeVecId = 0L)
@@ -183,7 +183,7 @@ class DedupSpec extends SparkSpec {
     // all-one-label fixture: the worst semantic skew — every vector in
     // ONE block. Unsalted, the pair join would put all 500² pair evals
     // on a single task.
-    val tmp = java.nio.file.Files.createTempDirectory("v50-salt").toString
+    val tmp = SparkSpec.tempDir("v50-salt")
     Tables.embeddings(spark, sf).withColumn("label", lit(0))
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val salted = DedupOps.semanticPrune(spark, tmp, maxBlockSize = 50)
@@ -668,8 +668,7 @@ class DedupSpec extends SparkSpec {
       .forall(v => rows.values.exists(_.getAs[String]("verdict") == v)))
     // the corpus has no cross-split exact dup — plant one: doc 3
     // copies ledger doc 1's text verbatim
-    val tmp = java.nio.file.Files
-      .createTempDirectory("st25_fixture").toString
+    val tmp = SparkSpec.tempDir("st25_fixture")
     Tables.documents(spark, sf0001).limit(0).unionByName(
       Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota",
             "en", "src0", 9L),

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.storage.StorageLevel
 
-/** [[Drive.run]]'s three promises, checked on the shared session
-  * without stopping its SparkContext: a fault comes back as a record,
-  * the action materialises every computed column, and the run leaves
-  * no cached block or persistent RDD behind. */
+/** [[Drive.run]]'s promises, checked on the shared session without
+  * stopping its SparkContext: a fault comes back as a record, the
+  * action materialises every computed column, the run leaves no cached
+  * block or persistent RDD behind, and the record carries the run's
+  * JVM CPU time. */
 class DriveSpec extends SparkSpec {
 
   test("a build that throws comes back as a fault by entry id and the " +
@@ -53,5 +54,15 @@ class DriveSpec extends SparkSpec {
     assert(classic.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       spark.sparkContext.getPersistentRDDs)
+  }
+
+  test("cpuNs counts a CPU-bound run, and a build that throws still " +
+      "returns a record with cpuNs >= 0") {
+    val r = Drive.run(spark, _.range(0, 20000000L)
+      .selectExpr("sum(xxhash64(id) % 1048576) as s"))
+    assert(r.rows.contains(1L) && r.problem.isEmpty, r)
+    assert(r.cpuNs > 0, r)
+    val boom = Drive.run(spark, _ => throw new IllegalStateException("boom"))
+    assert(boom.fault.contains("boom") && boom.cpuNs >= 0, boom)
   }
 }

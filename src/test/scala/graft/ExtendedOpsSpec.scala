@@ -130,8 +130,7 @@ class ExtendedOpsSpec extends SparkSpec {
   test("v22b finds a planted shared span of k+b-1 chars (the winnowing " +
     "guarantee) and selects deterministically") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_winnow_fixture").toString
+    val dir = SparkSpec.tempDir("graft_winnow_fixture")
     // two docs sharing one 200-char span embedded in distinct noise;
     // a third unrelated doc must not pair with them
     val span = (1 to 40).map(i => s"tok${i % 13}x$i").mkString(" ").take(200)
@@ -304,7 +303,7 @@ class ExtendedOpsSpec extends SparkSpec {
   test("v49 BPE training: greedy L2R merge application (aaaa + (a,a) " +
       "-> two aa, no triple-count) and merges feed later rounds") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val tmp = SparkSpec.tempDir("graft-bpe")
     // 'aaaa' x3: round-1 pair counts see (a,a) 3x3=9; after merging,
     // each word is [aa, aa] -> round 2 must see (aa,aa), NOT (a,a).
     // 'bcbc' x2 gives (b,c) 4, (c,b) 2 -> (a,a) wins round 1.
@@ -361,7 +360,7 @@ class ExtendedOpsSpec extends SparkSpec {
   test("v71 contrastive selection: a planted in-domain clone outranks " +
     "gibberish, unseen transitions floor at zero, and both LMs score " +
     "exactly the general corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ml").toString
+    val tmp = SparkSpec.tempDir("graft-ml")
     val seed = "the quick brown fox jumps over the lazy dog again and again"
     // sources: src0 = in-domain seed corpus; general corpus holds a
     // clone of the seed text, a half-overlap doc, and pure gibberish

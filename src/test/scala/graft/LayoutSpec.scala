@@ -60,8 +60,7 @@ class LayoutSpec extends SparkSpec {
     val uLo = 0L; val uHi = 4L // 5 of 15 users at sf0.001
     val ev = Tables.events(spark, sf0001)
       .select(col("event_id"), col("ts_s"), col("user_id"), col("value"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-layoutspec").toString
+    val out = SparkSpec.tempDir("graft-layoutspec")
     LayoutOps.zOrderWrite(ev, col("ts_s"), (1704067200L, 1706659200L),
       col("user_id"), (0L, 14L), s"$out/z", 8)
     ev.repartition(8).write.mode("overwrite").parquet(s"$out/r")

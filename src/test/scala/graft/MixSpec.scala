@@ -14,8 +14,7 @@ class MixSpec extends SparkSpec {
     * and to hit the boundary-bucket ranking path in every source. */
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_mix_fixture").toString
+    val d = SparkSpec.tempDir("graft_mix_fixture")
     val rows = (1 to 2005).map { i =>
       val src =
         if (i <= 5) "src3" else if (i % 2 == 0) "src0" else "src1"
@@ -143,8 +142,7 @@ class MixSpec extends SparkSpec {
   test("v43 cross-source matrix detects planted cross and within " +
     "duplicates and zero-fills the clean pairs") {
     import spark.implicits._
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_xsrc_fixture").toString
+    val d = SparkSpec.tempDir("graft_xsrc_fixture")
     // src0∩src1 share 2 contents; src0 has 1 within-dup (docs 5,6);
     // src2 is clean; doc 9's null text is excluded
     Seq(
@@ -211,8 +209,7 @@ class MixSpec extends SparkSpec {
   test("v65 written shards verify against the manifest: counts, " +
     "tokens and content checksum recompute from the files") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_shards").toString
+    val out = SparkSpec.tempDir("graft_shards")
     MixOps.exportShards(spark, sf0001, out)
     // recompute the manifest FROM THE WRITTEN FILES — the trainer's
     // verification pass: any doc dropped/duplicated/altered by the

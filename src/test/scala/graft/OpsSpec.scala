@@ -1,7 +1,6 @@
 package graft
 
 import graft.spans.{OtlpIngest, SearchRequest, SpanStore, TraceService}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Operational surface: compaction, retention, query timeout, search
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions._
 class OpsSpec extends SparkSpec {
 
   private def freshStore(): String = {
-    val dir = Files.createTempDirectory("graft-ops").toString
+    val dir = SparkSpec.tempDir("graft-ops")
     val spans = SpanFixtures.spans(spark)
     // three appends -> several small files in the same date partition
     OtlpIngest.writeSpans(spans, dir)
@@ -29,7 +28,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("retention drops partitions older than the keep window") {
-    val dir = Files.createTempDirectory("graft-ttl").toString
+    val dir = SparkSpec.tempDir("graft-ttl")
     val spans = SpanFixtures.spans(spark)
     val yearNs = 31536000000000000L
     OtlpIngest.writeSpans(spans, dir) // 2024-01-01

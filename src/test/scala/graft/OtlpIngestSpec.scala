@@ -1,7 +1,6 @@
 package graft
 
 import graft.spans.{OtlpExamples, OtlpIngest}
-import java.nio.file.Files
 
 /** Ingest semantics: both OTLP generations, attribute stringification
   * rules (collector/service.go:184-237), id re-encoding, write path. */
@@ -193,7 +192,7 @@ class OtlpIngestSpec extends SparkSpec {
   }
 
   test("A4 write path: date-partitioned parquet round-trips") {
-    val dir = Files.createTempDirectory("graft-spans").toString
+    val dir = SparkSpec.tempDir("graft-spans")
     OtlpIngest.writeSpans(flat, dir)
     val back = OtlpIngest.readSpans(spark, dir)
     assert(back.count() === 3)
@@ -203,7 +202,7 @@ class OtlpIngestSpec extends SparkSpec {
 
   test("date partitioning prunes the scan for time-ranged queries") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-prune").toString
+    val dir = SparkSpec.tempDir("graft-prune")
     // two batches a year apart -> two date partitions
     OtlpIngest.writeSpans(flat, dir)
     OtlpIngest.writeSpans(

@@ -84,9 +84,9 @@ class OtlpProtoSpec extends SparkSpec {
   }
 
   test("protobuf binary-file stream -> span store end-to-end") {
-    val in = java.nio.file.Files.createTempDirectory("otlp-pb").toString
-    val store = java.nio.file.Files.createTempDirectory("pb-store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("pb-ckpt").toString
+    val in = SparkSpec.tempDir("otlp-pb")
+    val store = SparkSpec.tempDir("pb-store")
+    val ckpt = SparkSpec.tempDir("pb-ckpt")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$in/req1.pb"), request)
     val stream = graft.streaming.StreamingOps.streamOtlpProtobuf(spark, in)

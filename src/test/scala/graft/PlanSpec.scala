@@ -19,7 +19,7 @@ class PlanSpec extends SparkSpec {
     * registry's t* entries run the same methods over computed columns,
     * which no filter can reach the scan through. */
   private lazy val store: graft.spans.TraceService = {
-    val dir = java.nio.file.Files.createTempDirectory("plan-spans").toString
+    val dir = SparkSpec.tempDir("plan-spans")
     graft.spans.OtlpIngest.writeSpans(SpanFixtures.spans(spark), dir + "/s")
     new graft.spans.TraceService(
       graft.spans.OtlpIngest.readSpans(spark, dir + "/s"))

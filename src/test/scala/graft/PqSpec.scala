@@ -61,8 +61,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("v18i stored IVF-PQ: partition-pruned probe equals in-memory") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("ivfpq-index").toString
+    val idx = SparkSpec.tempDir("ivfpq-index")
     PqOps.writeIvfPqIndex(spark, sf0001, idx)
     val stored = PqOps.ivfPqTopKStored(spark, idx,
       PqOps.microQueryVector(spark, sf0001, 0L), excludeVecId = 0L)
@@ -84,8 +83,7 @@ class PqSpec extends SparkSpec {
 
   test("v18j incrementally-maintained IVF-PQ equals the full index " +
     "probe (append with existing artifacts loses nothing)") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("ivfpq-incr").toString
+    val idx = SparkSpec.tempDir("ivfpq-incr")
     PqOps.writeIvfPqIncremental(spark, sf0001, idx)
     val incr = PqOps.ivfPqTopKStored(spark, idx,
       PqOps.microQueryVector(spark, sf0001, 0L), excludeVecId = 0L)

@@ -46,7 +46,7 @@ class RegistrySweepSpec extends SparkSpec {
   /** The pass. Each entry asks [[SparkSpec.session]] for the session,
     * so an entry that stops the SparkContext is named in its record and
     * the next entry runs on a rebuilt one. Prints the pass's construct
-    * and execute totals and its slowest builds. */
+    * and execute wall totals, its JVM CPU total and its slowest builds. */
   private lazy val records: Seq[Record] = {
     val recs = SparkEntry.all.map { q =>
       var schema = Option.empty[StructType]
@@ -70,7 +70,8 @@ class RegistrySweepSpec extends SparkSpec {
     def sec(ns: Long) = f"${ns / 1e9}%.1f s"
     println(s"RegistrySweepSpec pass: construct " +
       s"${sec(recs.map(_.run.constructNs).sum)}, execute " +
-      s"${sec(recs.map(_.run.executeNs).sum)}; slowest builds: " +
+      s"${sec(recs.map(_.run.executeNs).sum)}, cpu " +
+      s"${sec(recs.map(_.run.cpuNs).sum)}; slowest builds: " +
       recs.sortBy(-_.run.constructNs).take(5)
         .map(r => s"${r.q.id} ${sec(r.run.constructNs)}").mkString(", "))
     recs

@@ -109,8 +109,7 @@ class ScaleSpec extends SparkSpec {
 
   test("V4 text ops: NULL text classifies 'und' with NULL metrics") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nulldocs")
-      .toString
+    val tmp = SparkSpec.tempDir("graft-nulldocs")
     Seq(
       (1L, Option("the cat and the hat"), "en", "s1", 19L),
       (2L, Option.empty[String], "xx", "s1", 0L))
@@ -135,8 +134,7 @@ class ScaleSpec extends SparkSpec {
 
   test("V13 curation pipeline: every gate fires (dedup, lang, quality, cap)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-curate")
-      .toString
+    val tmp = SparkSpec.tempDir("graft-curate")
     val good = "the cat and the dog is a good friend of the family and it is nice"
     val rows =
       Seq((1L, good, "en", "s1", 0L), // kept
@@ -161,8 +159,7 @@ class ScaleSpec extends SparkSpec {
   test("V13b explain: every gate verdict fires on the planted fixture " +
       "and agrees with v13's kept set") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-explain")
-      .toString
+    val tmp = SparkSpec.tempDir("graft-explain")
     val good = "the quick brown fox jumps over the lazy dog and then " +
       "the fox runs away with many other words here"
     val rows =
@@ -205,8 +202,7 @@ class ScaleSpec extends SparkSpec {
     assert(raster.take(w * (h / 2)).forall(b => (b & 0xff) == g1))
     assert(raster.drop(w * (h / 2)).forall(b => (b & 0xff) == g2))
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mmdocs")
-      .toString
+    val tmp = SparkSpec.tempDir("graft-mmdocs")
     Seq(
       (1L, Option("x" * 200), "en", "s1", 200L), // 16x16 -> 256B raster
       (2L, Option("y" * 250), "en", "s1", 250L), // 66x30 -> 1980B raster
@@ -249,8 +245,7 @@ class ScaleSpec extends SparkSpec {
       MultimodalOps.dhash64(w2, h2, r2),
       "gradient hash cancels the uniform brightness shift")
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-phash")
-      .toString
+    val tmp = SparkSpec.tempDir("graft-phash")
     val textA = "the quick brown fox jumps over the lazy dog again and again"
     val textB = "completely different content with its own gradient pattern"
     Seq((1L, textA, "en", "s1", 0L),
@@ -326,8 +321,7 @@ class ScaleSpec extends SparkSpec {
   // by graft.ScaleBench.
   private lazy val scaleFactor = 8
   private lazy val blownDir: String = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_scalespec").toString
+    val out = SparkSpec.tempDir("graft_scalespec")
     graft.util.ScaleData.blowUp(spark, "/root/testdata/sf0.01", out,
       scaleFactor)
     out

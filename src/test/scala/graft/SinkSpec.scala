@@ -72,8 +72,8 @@ class SinkSpec extends SparkSpec {
   }
 
   test("streaming OTLP -> foreachBatch -> JDBC sink end-to-end") {
-    val in = Files.createTempDirectory("otlp-jdbc-in").toString
-    val ckpt = Files.createTempDirectory("jdbc-ckpt").toString
+    val in = SparkSpec.tempDir("otlp-jdbc-in")
+    val ckpt = SparkSpec.tempDir("jdbc-ckpt")
     Files.writeString(java.nio.file.Paths.get(s"$in/req1.json"),
       OtlpExamples.current + "\n" + OtlpExamples.legacy + "\n")
     withDerby { (url, props) =>
@@ -106,7 +106,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("parquet sink behind the same seam") {
-    val store = Files.createTempDirectory("seam-store").toString
+    val store = SparkSpec.tempDir("seam-store")
     new ParquetSpanSink(store).writeBatch(fixtureSpans, 0L)
     assert(OtlpIngest.readSpans(spark, store).count() === 3)
   }

@@ -174,8 +174,7 @@ class SourceSpec extends SparkSpec {
     // collector started, nothing ingested: stats list is empty — a
     // pushed min over it would have to fabricate a non-nullable value
     // (it previously threw empty.min at planning)
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_empty_src").toString
+    val d = SparkSpec.tempDir("graft_empty_src")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(d, "_stats.json"), "[]".getBytes("UTF-8"))
     val df = SpanFileSource.read(spark, d)
@@ -241,7 +240,7 @@ class SourceSpec extends SparkSpec {
   /** Copy the span fixture into a writable temp dir. */
   private def copyFixture(): String = {
     val src = java.nio.file.Paths.get(SpanFixture.ensure(spark))
-    val dst = java.nio.file.Files.createTempDirectory("graft-stream-dir")
+    val dst = java.nio.file.Paths.get(SparkSpec.tempDir("graft-stream-dir"))
     java.nio.file.Files.list(src).forEach { f =>
       java.nio.file.Files.copy(f, dst.resolve(f.getFileName))
     }

@@ -30,4 +30,10 @@ object SparkSpec {
       shared = GraftSession.local(appName = "graft-test")
     shared
   }
+
+  /** A fresh directory under `java.io.tmpdir`, deleted at JVM exit
+    * with the process's other per-process artifacts. Every test that
+    * writes scratch files writes them under one of these. */
+  def tempDir(prefix: String): String = graft.util.TempArtifacts.register(
+    java.nio.file.Files.createTempDirectory(prefix).toString)
 }

@@ -385,7 +385,7 @@ class StatsOpsSpec extends SparkSpec {
       if (Integer.parseInt(hex.substring(0, 2), 16) % 2 == 0) "A" else "B"
     }
     // planted effect: B users' values shifted +50 -> t must cross 1.96
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ab").toString
+    val tmp = SparkSpec.tempDir("graft-ab")
     val ts0 = java.time.LocalDateTime.ofEpochSecond(
       EventWindow.StartS + 3600, 0, java.time.ZoneOffset.UTC)
     val rows = (1L to 400L).flatMap { uid =>
@@ -462,7 +462,7 @@ class StatsOpsSpec extends SparkSpec {
         .map("%02x".format(_)).mkString
       if (Integer.parseInt(hex.substring(0, 2), 16) % 2 == 0) "A" else "B"
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-gs").toString
+    val tmp = SparkSpec.tempDir("graft-gs")
     val days = Seq(3L, 9L, 16L, 21L, 27L)
     val evRows = (1L to 400L).flatMap { uid =>
       days.zipWithIndex.map { case (day, i) =>
@@ -535,7 +535,7 @@ class StatsOpsSpec extends SparkSpec {
     // planted: B users' masses shifted far above A's -> significant,
     // CLES (P[A beats B]) collapses toward 0; heavy ties by design
     // (base = uid % 7) exercise the tie-correction path
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mw").toString
+    val tmp = SparkSpec.tempDir("graft-mw")
     val ts0 = java.time.LocalDateTime.ofEpochSecond(
       EventWindow.StartS + 3600, 0, java.time.ZoneOffset.UTC)
     val rows = (1L to 400L).flatMap { uid =>
@@ -629,7 +629,7 @@ class StatsOpsSpec extends SparkSpec {
     assert(r.getDouble(5) === rho2, "var_reduction")
     // planted correlation: post ~ pre per user => CUPED removes most
     // outcome variance
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cuped").toString
+    val tmp = SparkSpec.tempDir("graft-cuped")
     val pre0 = java.time.LocalDateTime.ofEpochSecond(
       EventWindow.StartS + 3600, 0, java.time.ZoneOffset.UTC)
     val post0 = java.time.LocalDateTime.ofEpochSecond(

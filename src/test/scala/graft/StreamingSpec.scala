@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSpec {
 
   test("OTLP JSON stream -> watermark -> foreachBatch span store") {
-    val in = Files.createTempDirectory("otlp-in").toString
-    val store = Files.createTempDirectory("span-store").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val in = SparkSpec.tempDir("otlp-in")
+    val store = SparkSpec.tempDir("span-store")
+    val ckpt = SparkSpec.tempDir("ckpt")
     Files.writeString(java.nio.file.Paths.get(s"$in/req1.json"),
       OtlpExamples.current + "\n" + OtlpExamples.legacy + "\n")
     val stream = StreamingOps.streamOtlpJson(spark, in)

@@ -23,9 +23,8 @@ object Bench {
         .select(graft.functions.VectorFunctions
           .dot_product(col("vi"), col("vj"))).count()
     } catch { case _: Throwable => () }
-    // warm the OTLP ingest projection (the from_json + stringification
-    // tree compiles to a large generated class — Janino dominates the
-    // first ingest otherwise)
+    // warm the OTLP ingest (its span-row encoder and id derivation
+    // compile on first use)
     try {
       import spark.implicits._
       graft.spans.OtlpIngest.fromJson(

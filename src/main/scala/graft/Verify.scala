@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // tools/check.py reads the witness dumps after this JVM exits
+    graft.util.Memo.keepStablePaths()
     val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Failures must be VISIBLE, not just absent: round 5's testdata schema

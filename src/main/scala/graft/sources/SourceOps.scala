@@ -189,8 +189,8 @@ object SourceOps extends QueryModule {
       dsv2AggStats, Some(dsv2AggStatsSql)),
     GraftQuery("a7_dsv2_scan",
       "A7 DataSourceV2 span source: OTLP/JSON files through a custom " +
-        "TableProvider (Jackson parse, independent of the from_json " +
-        "batch path); per-service rollup with column pruning at the " +
+        "TableProvider (Jackson parse, independent of the OtlpIngest " +
+        "batch decoder); per-service rollup with column pruning at the " +
         "reader",
       dsv2Scan, Some(dsv2ScanSql)),
     GraftQuery("a7b_dsv2_pushdown",

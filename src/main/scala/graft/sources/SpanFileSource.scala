@@ -45,7 +45,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The per-file parse is Jackson over the protojson wire shape
   * (`resourceSpans → scopeSpans → spans`, hex ids re-encoded to the
   * store's base64 convention, collector/service.go:273-275) — an
-  * INDEPENDENT implementation of the `from_json` batch path in
+  * INDEPENDENT implementation of the batch decoder in
   * [[graft.spans.OtlpIngest]], which is exactly what makes the a7
   * oracle a real cross-check. One file = one input partition (request
   * files are small and many; at scale the unit of parallelism is the

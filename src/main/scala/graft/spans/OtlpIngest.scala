@@ -1,21 +1,25 @@
 package graft.spans
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.spans.OtlpProto._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** OTLP trace ingestion (SURVEY §2.A A1-A4): OTLP/JSON
   * `ExportTraceServiceRequest` documents → one denormalized row per span.
   *
-  * Mirrors the reference collector's behavior Spark-first:
+  * Mirrors the reference collector's behavior:
   *  - A2: accepts both the current `scopeSpans` form and the legacy
   *    `instrumentationLibrarySpans` form incl. `{Value:{StringValue:..}}`
   *    wrapped attribute values (reference collector/controller.go:54-70,
-  *    97-223) — handled by schema-level coalesce, no JSON text surgery.
-  *  - A3: flattens resource → scope → span → events via `explode` and
-  *    stringifies attribute values with the reference's rules
+  *    97-223).
+  *  - A3: flattens resource → scope → span → events and stringifies
+  *    attribute values with the reference's rules
   *    (collector/service.go:184-237): string kept; int/double/bool
-  *    rendered; all-string arrays comma-joined, mixed arrays JSON;
+  *    rendered; all-string arrays comma-joined, other arrays JSON;
   *    kvlist JSON; bytes stay base64 (OTLP/JSON already base64s bytes).
   *  - ids: OTLP/JSON carries hex ids; the reference stores base64 of the
   *    raw bytes (collector/service.go:273-275) — hex ids are re-encoded
@@ -26,167 +30,157 @@ import org.apache.spark.sql.types._
   *    (db/clickhouse.go:107-109): partition pruning + row-group min/max
   *    stats give the same time-range skipping at scale.
   *
-  * Everything here is `functions._` expressions — the whole ingest is one
-  * codegen'd projection pipeline, no UDFs.
+  * A JSON document decodes per partition, in [[decodeJson]], into the
+  * value model and span rows of the protobuf decoder ([[OtlpProto]]), so
+  * both wire forms share one stringification and one attribute-map
+  * builder; only the scope/resource ids are derived by Spark
+  * expressions ([[withDerivedIds]]), after the decode.
   */
 object OtlpIngest {
 
-  // ---- OTLP/JSON schema (protojson shape; int64s arrive as strings) ----
+  // ---- A2+A3: OTLP/JSON → span rows ----
 
-  /** Scalar branch of AnyValue, plus the legacy Go-marshalled
-    * `{Value:{StringValue:..}}` wrapper fields. */
-  private val scalarValue: StructType = StructType(Seq(
-    StructField("stringValue", StringType),
-    StructField("intValue", StringType),
-    StructField("doubleValue", DoubleType),
-    StructField("boolValue", BooleanType),
-    StructField("bytesValue", StringType)))
+  private val mapper = new ObjectMapper()
 
-  private val legacyWrapper: StructType = StructType(Seq(
-    StructField("StringValue", StringType),
-    StructField("IntValue", StringType),
-    StructField("DoubleValue", DoubleType),
-    StructField("BoolValue", BooleanType)))
+  // Field readers over the Jackson tree. They read as Spark's JSON
+  // reader (from_json) does, so a document gives the rows it gave when
+  // the ingest was a from_json schema: a field of the wrong JSON type
+  // reads as absent, a string field takes any other JSON value as its
+  // JSON text, a list with an element that is neither an object nor
+  // null reads as absent, and a null element reads as an object with
+  // every field absent.
+  private def field(n: JsonNode, name: String): JsonNode =
+    if (n == null) null else n.get(name)
+  private def obj(n: JsonNode, name: String): JsonNode =
+    Option(field(n, name)).filter(_.isObject).orNull
+  private def text(n: JsonNode, name: String): String = {
+    val v = field(n, name)
+    if (v == null || v.isNull) null else if (v.isTextual) v.textValue else v.toString
+  }
+  private def list(n: JsonNode, name: String): Option[Seq[JsonNode]] =
+    Option(field(n, name)).filter(_.isArray).map(_.elements.asScala.toSeq)
+      .filter(_.forall(x => x.isObject || x.isNull))
+      .map(_.map(x => if (x.isNull) mapper.createObjectNode() else x))
+  private def objs(n: JsonNode, name: String): Seq[JsonNode] =
+    list(n, name).getOrElse(Nil)
+  private def bool(n: JsonNode, name: String): Option[Boolean] =
+    Option(field(n, name)).filter(_.isBoolean).map(_.booleanValue)
+  private def double(n: JsonNode, name: String): Option[Double] =
+    Option(field(n, name)).flatMap { v =>
+      if (v.isNumber) Some(v.doubleValue)
+      else if (!v.isTextual) None
+      else v.textValue match {
+        case "NaN" => Some(Double.NaN)
+        case "Infinity" | "+Infinity" | "+INF" => Some(Double.PositiveInfinity)
+        case "-Infinity" | "-INF" => Some(Double.NegativeInfinity)
+        case _ => None
+      }
+    }
+  /** An int64 carried as a string (or number); a value that is not an
+    * integer fails the ingest, as casting it did. */
+  private def int64(n: JsonNode, name: String): java.lang.Long =
+    Option(text(n, name)).map { s =>
+      try java.lang.Long.valueOf(s.trim)
+      catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"OTLP/JSON $name '$s' is not an int64")
+      }
+    }.orNull
 
-  private val anyValue: StructType = StructType(
-    scalarValue.fields.toSeq ++ Seq(
-      StructField("arrayValue",
-        StructType(Seq(StructField("values", ArrayType(scalarValue))))),
-      StructField("kvlistValue", StructType(Seq(StructField("values",
-        ArrayType(StructType(Seq(
-          StructField("key", StringType),
-          StructField("value", scalarValue)))))))),
-      StructField("Value", legacyWrapper)))
+  /** AnyValue → [[PValue]]; the first field set wins, in the order
+    * string, int, double, bool, bytes, the legacy `Value` wrapper,
+    * array, kvlist. No field set → null. */
+  private def anyValue(v: JsonNode): PValue =
+    if (v == null || !v.isObject) null
+    else {
+      val legacy = obj(v, "Value")
+      def str(n: JsonNode, f: String, as: String => PValue) = Option(text(n, f)).map(as)
+      str(v, "stringValue", PString)
+        .orElse(str(v, "intValue", PText))
+        .orElse(double(v, "doubleValue").map(PDouble))
+        .orElse(bool(v, "boolValue").map(PBool))
+        .orElse(str(v, "bytesValue", PText))
+        .orElse(Option(legacy).flatMap(l => str(l, "StringValue", PString)
+          .orElse(str(l, "IntValue", PText))
+          .orElse(double(l, "DoubleValue").map(PDouble))
+          .orElse(bool(l, "BoolValue").map(PBool))))
+        .orElse(list(obj(v, "arrayValue"), "values").map(vs => PArray(vs.map(anyValue))))
+        .orElse(list(obj(v, "kvlistValue"), "values").map(kvs =>
+          PKvList(keyValues(kvs).map { case (k, x) => k -> anyValue(x) })))
+        .orNull
+    }
 
-  private val keyValue: StructType = StructType(Seq(
-    StructField("key", StringType),
-    StructField("value", anyValue)))
+  /** The KeyValue entries that carry a key. */
+  private def keyValues(kvs: Seq[JsonNode]): Seq[(String, JsonNode)] =
+    kvs.flatMap(kv => Option(text(kv, "key")).map(_ -> kv.get("value")))
 
-  private val spanJson: StructType = StructType(Seq(
-    StructField("traceId", StringType),
-    StructField("spanId", StringType),
-    StructField("parentSpanId", StringType),
-    StructField("flags", IntegerType),
-    StructField("name", StringType),
-    StructField("startTimeUnixNano", StringType),
-    StructField("endTimeUnixNano", StringType),
-    StructField("attributes", ArrayType(keyValue)),
-    StructField("events", ArrayType(StructType(Seq(
-      StructField("timeUnixNano", StringType),
-      StructField("name", StringType),
-      StructField("attributes", ArrayType(keyValue))))))))
+  private def attrs(n: JsonNode): Map[String, String] =
+    attrMap(keyValues(objs(n, "attributes"))
+      .map { case (k, v) => k -> stringify(anyValue(v)) })
 
-  private val scopeSpansJson: StructType = StructType(Seq(
-    StructField("scope", StructType(Seq(StructField("name", StringType)))),
-    StructField("instrumentationLibrary",
-      StructType(Seq(StructField("name", StringType)))),
-    StructField("spans", ArrayType(spanJson))))
+  /** Hex id → base64 of its bytes (collector/service.go:273-275); a
+    * non-hex or odd-length id passes through, an absent one is "". */
+  private def storedId(id: String): String =
+    if (id == null || id.isEmpty) ""
+    else if (id.length % 2 == 0 && id.forall(c => c < 128 && Character.digit(c, 16) >= 0))
+      java.util.Base64.getEncoder.encodeToString(java.util.HexFormat.of.parseHex(id))
+    else id
 
-  /** Top-level ExportTraceServiceRequest schema (both generations). */
-  val requestSchema: StructType = StructType(Seq(
-    StructField("resourceSpans", ArrayType(StructType(Seq(
-      StructField("resource", StructType(Seq(
-        StructField("attributes", ArrayType(keyValue))))),
-      StructField("schemaUrl", StringType),
-      StructField("scopeSpans", ArrayType(scopeSpansJson)),
-      StructField("instrumentationLibrarySpans", ArrayType(scopeSpansJson))))))))
-
-  // ---- attribute stringification (collector/service.go:184-237) ----
-
-  private def scalarToString(v: Column): Column =
-    coalesce(
-      v.getField("stringValue"),
-      v.getField("intValue"),
-      v.getField("doubleValue").cast(StringType),
-      v.getField("boolValue").cast(StringType),
-      v.getField("bytesValue"))
-
-  /** AnyValue → String per the reference's rules, legacy wrappers included. */
-  def valueToString(v: Column): Column = {
-    val arr = v.getField("arrayValue").getField("values")
-    val allStrings =
-      forall(arr, x => x.getField("stringValue").isNotNull)
-    val legacy = v.getField("Value")
-    coalesce(
-      scalarToString(v),
-      // legacy {Value:{StringValue:..}} wrapper (controller.go:97-223)
-      legacy.getField("StringValue"),
-      legacy.getField("IntValue"),
-      legacy.getField("DoubleValue").cast(StringType),
-      legacy.getField("BoolValue").cast(StringType),
-      // array: comma-join if all-string else JSON (service.go:197-217)
-      when(arr.isNotNull,
-        when(allStrings,
-          array_join(transform(arr, _.getField("stringValue")), ","))
-          .otherwise(to_json(transform(arr, scalarToString(_))))),
-      // kvlist → JSON object (service.go:218-225)
-      when(v.getField("kvlistValue").getField("values").isNotNull,
-        to_json(map_from_entries(
-          transform(v.getField("kvlistValue").getField("values"),
-            kv => struct(kv.getField("key"),
-              scalarToString(kv.getField("value"))))))))
+  /** One OTLP/JSON request → its span rows. A document that does not
+    * parse, or is not an object, has no rows. */
+  def decodeJson(doc: String): Seq[SpanRow] = {
+    val root =
+      try if (doc == null) null else mapper.readTree(doc)
+      catch { case _: JacksonException => null }
+    val out = ArrayBuffer[SpanRow]()
+    for (rs <- objs(root, "resourceSpans")) {
+      val res = attrs(obj(rs, "resource"))
+      val schemaUrl = Option(text(rs, "schemaUrl")).getOrElse("")
+      // scopeSpans wins only when it carries entries: a migration-era
+      // exporter may send both lists, and an empty scopeSpans must not
+      // hide the legacy spans; spans read from the legacy list get the
+      // legacy attribute merge
+      val scoped = objs(rs, "scopeSpans")
+      val legacy = scoped.isEmpty
+      for (ss <- if (legacy) objs(rs, "instrumentationLibrarySpans") else scoped) {
+        val scopeName = Option(text(obj(ss, "scope"), "name"))
+          .getOrElse(text(obj(ss, "instrumentationLibrary"), "name"))
+        for (sp <- objs(ss, "spans")) {
+          val spanAttrs = attrs(sp)
+          val start = int64(sp, "startTimeUnixNano")
+          val end = int64(sp, "endTimeUnixNano")
+          out += SpanRow(storedId(text(sp, "traceId")),
+            storedId(text(sp, "spanId")), storedId(text(sp, "parentSpanId")),
+            Option(field(sp, "flags")).filter(f => f.isIntegralNumber && f.canConvertToInt)
+              .fold(0)(_.intValue),
+            text(sp, "name"), start, end,
+            if (start == null || end == null) null
+            else java.lang.Long.valueOf(Math.subtractExact(end.longValue, start.longValue)),
+            scopeName, schemaUrl,
+            if (legacy) mergeLegacy(res, spanAttrs) else res, spanAttrs,
+            objs(sp, "events").map(e =>
+              SpanEvent(int64(e, "timeUnixNano"), text(e, "name"), attrs(e))),
+            res)
+        }
+      }
+    }
+    out.toSeq
   }
 
-  /** Array<KeyValue> → ARRAY<STRUCT<key,value:STRING>> entries; null
-    * array → empty. */
-  private def attrEntries(attrs: Column): Column = {
-    val entryType = ArrayType(StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType))))
-    when(attrs.isNull, array().cast(entryType))
-      .otherwise(transform(
-        // a malformed attribute object without "key" parses to
-        // key=null (legal JSON, invalid wire data) and would throw
-        // "Cannot use null as map key" inside the lastWinsMap fold —
-        // the kill-the-whole-ingest class that helper exists to
-        // prevent, and under streaming the poison doc replays forever
-        // (round-10 review); drop the entry instead
-        filter(attrs, kv => kv.getField("key").isNotNull),
-        kv => struct(
-          kv.getField("key").as("key"),
-          valueToString(kv.getField("value")).as("value"))))
-  }
+  /** Parse a Dataset of OTLP/JSON request documents and flatten to the
+    * span table (one row per span), decoded per partition. Works on a
+    * streaming Dataset too ([[graft.streaming.StreamingOps.streamOtlpJson]]). */
+  def fromJson(requests: Dataset[String]): DataFrame =
+    spanTable(requests)(decodeJson)
 
-  /** Entry array → map with LAST-entry-wins per key (Go-map overwrite
-    * semantics for repeated keys WITHIN one attribute list — legal on
-    * the wire, and what the protobuf path's Map building already does
-    * silently). map_from_entries would throw DUPLICATE_MAP_KEY under
-    * Spark's default EXCEPTION dedup policy and kill the whole ingest;
-    * the aggregate fold evaluates the (stringified) entries array ONCE
-    * and rebuilds only the small accumulator map per element. */
-  private def lastWinsMap(entries: Column): Column =
-    aggregate(entries,
-      map().cast(MapType(StringType, StringType)),
-      (acc, e) => map_concat(
-        map_filter(acc, (k, _) => k =!= e.getField("key")),
-        map(e.getField("key"), e.getField("value"))))
-
-  /** Array<KeyValue> → MAP<STRING,STRING>; null array → empty map;
-    * repeated keys last-wins. */
-  def attrsToMap(attrs: Column): Column =
-    lastWinsMap(attrEntries(attrs))
-
-  /** Legacy-request merge of span attrs INTO resource attrs with the
-    * reference's Go-map overwrite semantics (controller.go:199-207): a
-    * key present in both takes the SPAN value. Built from entry arrays —
-    * resource entries shadowed by a span key are dropped before
-    * map_from_entries, so the merge never trips Spark's default
-    * `spark.sql.mapKeyDedupPolicy=EXCEPTION` (map_concat of the two maps
-    * threw "duplicate map key" for exactly the keys the reference
-    * deliberately duplicates, e.g. service.name). */
-  def mergeAttrsLastWins(resAttrs: Column, spanAttrs: Column): Column = {
-    val span = attrsToMap(spanAttrs)
-    val res = attrsToMap(resAttrs)
-    map_concat(
-      map_filter(res, (k, _) => !array_contains(map_keys(span), k)),
-      span)
-  }
-
-  /** Hex OTLP/JSON ids → base64-of-bytes, matching the reference's stored
-    * form (collector/service.go:273-275); non-hex ids pass through. */
-  def idToBase64(id: Column): Column =
-    when(id.isNull || id === "", lit(""))
-      .otherwise(when(id.rlike("^[0-9a-fA-F]+$") && length(id) % 2 === 0,
-        base64(unhex(id))).otherwise(id))
+  /** Requests decoded per partition into span rows → the span table in
+    * SpanSchema column order, with scope and resource ids derived. */
+  private[spans] def spanTable[T](requests: Dataset[T])(
+      decode: T => Seq[SpanRow]): DataFrame =
+    requests.mapPartitions(_.flatMap(decode))(Encoders.product[SpanRow])
+      .toDF()
+      .transform(withDerivedIds(_, Some(col("resource_identity"))))
+      .select(SpanSchema.columns.map(col): _*)
 
   // ---- derived scope/resource ids ----
 
@@ -214,12 +208,11 @@ object OtlpIngest {
 
   /** Populate scope_id/resource_id from scope name and resource identity
     * (schema url + canonical attrs). Works on any frame with those
-    * columns — both the JSON and protobuf ingest paths route through it.
-    * `resourceIdentity` overrides the attr map the resource hash reads:
-    * the JSON path passes its PRE-merge resource attrs, because legacy
-    * requests fold each span's own attrs into `resource_attributes` and
-    * hashing the merged map would give spans of one resource different
-    * resource_ids. */
+    * columns — both ingest paths route through it. `resourceIdentity`
+    * overrides the attr map the resource hash reads: the decoders pass
+    * the PRE-merge resource attrs, because legacy requests fold each
+    * span's own attrs into `resource_attributes` and hashing the merged
+    * map would give spans of one resource different resource_ids. */
   def withDerivedIds(spans: DataFrame,
       resourceIdentity: Option[Column] = None): DataFrame = {
     val identity = resourceIdentity.getOrElse(col("resource_attributes"))
@@ -229,70 +222,6 @@ object OtlpIngest {
       .withColumn("resource_id", contentUuid(lit("resource"),
         coalesce(col("resource_schema_url"), lit("")),
         canonicalAttrs(identity)))
-  }
-
-  // ---- A2+A3: parse + flatten ----
-
-  /** Parse a Dataset of OTLP/JSON request documents and flatten to the
-    * span table (one row per span). */
-  def fromJson(requests: Dataset[String]): DataFrame = {
-    val parsed = requests.toDF("raw")
-      .select(from_json(col("raw"), requestSchema).as("req"))
-    flatten(parsed.select(col("req.resourceSpans").as("resourceSpans")))
-  }
-
-  /** Flatten parsed OTLP structs → SpanSchema rows. */
-  def flatten(parsed: DataFrame): DataFrame = {
-    val legacy = col("rs.instrumentationLibrarySpans")
-    // scopeSpans wins only when it actually CARRIES spans: a
-    // migration-era exporter may emit BOTH fields (receivers were
-    // required to accept either), and (a) spans read from scopeSpans
-    // must not get the legacy attr-merge semantics, (b) an
-    // empty-but-non-null scopeSpans beside populated legacy spans
-    // must not silently drop every span (round-10 review) — is_legacy
-    // now derives from which branch actually supplied the spans
-    val useScope =
-      col("rs.scopeSpans").isNotNull && size(col("rs.scopeSpans")) > 0
-    parsed
-      .select(explode(col("resourceSpans")).as("rs"))
-      .select(
-        col("rs.resource.attributes").as("res_attrs"),
-        col("rs.schemaUrl").as("resource_schema_url"),
-        (!useScope && legacy.isNotNull).as("is_legacy"),
-        explode(when(useScope, col("rs.scopeSpans")).otherwise(legacy))
-          .as("ss"))
-      .select(
-        col("res_attrs"), col("resource_schema_url"), col("is_legacy"),
-        coalesce(col("ss.scope.name"),
-          col("ss.instrumentationLibrary.name")).as("scope_name"),
-        explode(col("ss.spans")).as("sp"))
-      .select(
-        idToBase64(col("sp.traceId")).as("trace_id"),
-        idToBase64(col("sp.spanId")).as("span_id"),
-        idToBase64(col("sp.parentSpanId")).as("parent_span_id"),
-        coalesce(col("sp.flags"), lit(0)).as("flags"),
-        col("sp.name").as("name"),
-        col("sp.startTimeUnixNano").cast(LongType).as("start_time_unix_nano"),
-        col("sp.endTimeUnixNano").cast(LongType).as("end_time_unix_nano"),
-        (col("sp.endTimeUnixNano").cast(LongType) -
-          col("sp.startTimeUnixNano").cast(LongType)).as("duration_ns"),
-        col("scope_name"),
-        coalesce(col("resource_schema_url"), lit("")).as("resource_schema_url"),
-        // legacy requests merge span attrs into resource attrs, span
-        // value winning on shared keys (controller.go:54-70,199-207)
-        when(col("is_legacy"),
-          mergeAttrsLastWins(col("res_attrs"), col("sp.attributes")))
-          .otherwise(attrsToMap(col("res_attrs"))).as("resource_attributes"),
-        attrsToMap(col("sp.attributes")).as("span_attributes"),
-        // pre-merge resource identity for resource_id derivation
-        attrsToMap(col("res_attrs")).as("__res_identity"),
-        coalesce(transform(col("sp.events"), e => struct(
-          e.getField("timeUnixNano").cast(LongType).as("time_unix_nano"),
-          e.getField("name").as("name"),
-          attrsToMap(e.getField("attributes")).as("attributes"))),
-          array().cast(ArrayType(SpanSchema.eventType))).as("events"))
-      .transform(withDerivedIds(_, Some(col("__res_identity"))))
-      .select(SpanSchema.columns.map(col): _*)
   }
 
   // ---- A4: sink ----

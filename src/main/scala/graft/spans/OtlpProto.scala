@@ -1,20 +1,26 @@
 package graft.spans
 
 import java.util.Base64
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable.ArrayBuffer
 
 /** OTLP/protobuf ingestion (SURVEY §2.A A1, the `application/x-protobuf`
-  * branch of the reference collector, collector/controller.go:46-53):
-  * a dependency-free protobuf wire-format decoder for
-  * `ExportTraceServiceRequest` (message/field layout per the public
-  * opentelemetry-proto schema), producing the same denormalized span rows
-  * as [[OtlpIngest.fromJson]], with the same attribute-stringification
-  * rules (collector/service.go:184-237) and base64 ids
-  * (collector/service.go:273-275).
+  * branch of the reference collector, collector/controller.go:46-53), and
+  * the decoder model both wire forms share.
   *
-  * Decoding runs per-partition over a binary column (`mapPartitions`) —
+  * A dependency-free protobuf wire-format decoder for
+  * `ExportTraceServiceRequest` (message/field layout per the public
+  * opentelemetry-proto schema) reads each request into [[PValue]]
+  * attribute values and [[SpanRow]]s. [[OtlpIngest.decodeJson]] reads
+  * OTLP/JSON into the same model, so both wire forms share one
+  * stringification ([[stringify]], collector/service.go:184-237), one
+  * attribute-map builder ([[attrMap]]) and one row type, as the
+  * reference collector unmarshals both into the same structs
+  * (collector/controller.go:45-77).
+  *
+  * Decoding runs per partition (`mapPartitions`) over a binary column —
   * the batch shape a Kafka `value: binary` stream feeds directly.
   */
 object OtlpProto {
@@ -96,13 +102,14 @@ object OtlpProto {
   final case class PArray(vs: Seq[PValue]) extends PValue
   final case class PKvList(kvs: Seq[(String, PValue)]) extends PValue
   final case class PBytes(bs: Array[Byte]) extends PValue
+  /** A non-string scalar kept as its wire text: OTLP/JSON carries int64
+    * and bytes values as strings, rendered as received. */
+  final case class PText(s: String) extends PValue
 
   private def readAnyValue(r: Reader): PValue = {
-    // an AnyValue with NO recognized field set must surface as a NULL
-    // attribute value, matching the JSON path's coalesce chain (the
-    // previous PString("") default made element_at return "" on one
-    // ingest path and NULL on the other, and diverged the
-    // canonicalAttrs hash feeding resource_id — round-10 review)
+    // an AnyValue with NO recognized field set is a NULL attribute
+    // value, as on the JSON path, so element_at and the canonicalAttrs
+    // hash feeding resource_id agree across the wire forms
     var v: PValue = null
     while (r.hasNext) {
       val (f, w) = r.tag()
@@ -145,13 +152,10 @@ object OtlpProto {
     (k, v)
   }
 
-  // reference stringification rules (collector/service.go:184-237)
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  // reference stringification rules (collector/service.go:184-237);
+  // strings inside JSON renderings are escaped as Spark's to_json does
+  private def quoted(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
   def stringify(v: PValue): String = v match {
     case null       => null
     case PString(s) => s
@@ -159,56 +163,77 @@ object OtlpProto {
     case PInt(i)    => i.toString
     case PDouble(d) => d.toString
     case PBytes(bs) => Base64.getEncoder.encodeToString(bs)
-    // empty array joins to "" exactly like the JSON path (forall over
-    // an empty array is true there, so it takes the comma-join branch)
+    case PText(s)   => s
+    // an all-string array (the empty one too) is comma-joined; any
+    // other array is a JSON array of the rendered elements
     case PArray(vs) if vs.forall(_.isInstanceOf[PString]) =>
       vs.map(_.asInstanceOf[PString].s).mkString(",")
-    case PArray(vs) =>
-      vs.map(x => Option(stringify(x))
-          .map(sx => s""""${jsonEscape(sx)}"""").getOrElse("null"))
-        .mkString("[", ",", "]")
+    case PArray(vs) => vs.map(jsonText).mkString("[", ",", "]")
     case PKvList(kvs) =>
-      kvs.map { case (k, x) =>
-        s""""${jsonEscape(k)}":""" + Option(stringify(x))
-          .map(sx => s""""${jsonEscape(sx)}"""").getOrElse("null")
-      }.mkString("{", ",", "}")
+      kvs.map { case (k, x) => quoted(k) + ":" + jsonText(x) }
+        .mkString("{", ",", "}")
+  }
+  private def jsonText(v: PValue): String =
+    Option(stringify(v)).map(quoted).getOrElse("null")
+
+  /** An attribute list as a map: a repeated key keeps its last value, at
+    * the position of its last occurrence (the Go reference's map
+    * assignment, with the wire order kept for the stored row). */
+  def attrMap(kvs: Seq[(String, String)]): Map[String, String] = {
+    val seen = new java.util.HashSet[String]()
+    VectorMap.from(kvs.reverseIterator.filter(kv => seen.add(kv._1)).toSeq.reverse)
   }
 
-  final case class ProtoEvent(time_unix_nano: Long, name: String,
+  /** A legacy request's resource attributes with the span's merged in:
+    * a key present in both takes the span value (controller.go:199-207),
+    * resource entries first. */
+  def mergeLegacy(res: Map[String, String],
+      span: Map[String, String]): Map[String, String] =
+    VectorMap.from(res.iterator.filter(kv => !span.contains(kv._1)) ++ span)
+
+  final case class SpanEvent(time_unix_nano: java.lang.Long, name: String,
       attributes: Map[String, String])
-  final case class ProtoSpanRow(trace_id: String, span_id: String,
+  /** One decoded span, its resource and scope folded in.
+    * `resource_identity` is the resource's own attributes; it differs
+    * from `resource_attributes` only for a legacy JSON request, whose
+    * span attributes merge into the resource's, and it is what the
+    * resource id hashes ([[OtlpIngest.withDerivedIds]]). */
+  final case class SpanRow(trace_id: String, span_id: String,
       parent_span_id: String, flags: Int, name: String,
-      start_time_unix_nano: Long, end_time_unix_nano: Long,
-      duration_ns: Long, scope_name: String, resource_schema_url: String,
-      resource_attributes: Map[String, String],
-      span_attributes: Map[String, String], events: Seq[ProtoEvent])
+      start_time_unix_nano: java.lang.Long, end_time_unix_nano: java.lang.Long,
+      duration_ns: java.lang.Long, scope_name: String,
+      resource_schema_url: String, resource_attributes: Map[String, String],
+      span_attributes: Map[String, String], events: Seq[SpanEvent],
+      resource_identity: Map[String, String])
 
   private def b64(bs: Array[Byte]): String =
     if (bs.isEmpty) "" else Base64.getEncoder.encodeToString(bs)
 
-  private def readAttrs(r: Reader): (String, PValue) = readKeyValue(r)
+  private def readAttrs(r: Reader): (String, String) = {
+    val (k, v) = readKeyValue(r)
+    (k, stringify(v))
+  }
 
-  private def readEvent(r: Reader): ProtoEvent = {
+  private def readEvent(r: Reader): SpanEvent = {
     var t = 0L; var name = ""; val attrs = ArrayBuffer[(String, String)]()
     while (r.hasNext) {
       val (f, w) = r.tag()
       f match {
         case 1 => t = r.fixed64()
         case 2 => name = new String(r.bytes(), "UTF-8")
-        case 3 =>
-          val (k, v) = readAttrs(r.sub()); attrs += (k -> stringify(v))
+        case 3 => attrs += readAttrs(r.sub())
         case _ => r.skip(w)
       }
     }
-    ProtoEvent(t, name, attrs.toMap)
+    SpanEvent(t, name, attrMap(attrs.toSeq))
   }
 
-  private def readSpan(r: Reader): ProtoSpanRow = {
+  private def readSpan(r: Reader): SpanRow = {
     var traceId, spanId, parentId = Array.emptyByteArray
     var name = ""; var flags = 0
     var start = 0L; var end = 0L
     val attrs = ArrayBuffer[(String, String)]()
-    val events = ArrayBuffer[ProtoEvent]()
+    val events = ArrayBuffer[SpanEvent]()
     while (r.hasNext) {
       val (f, w) = r.tag()
       f match {
@@ -218,20 +243,20 @@ object OtlpProto {
         case 5  => name = new String(r.bytes(), "UTF-8")
         case 7  => start = r.fixed64()
         case 8  => end = r.fixed64()
-        case 9  =>
-          val (k, v) = readAttrs(r.sub()); attrs += (k -> stringify(v))
+        case 9  => attrs += readAttrs(r.sub())
         case 11 => events += readEvent(r.sub())
         case 16 => flags = r.fixed32()
         case _  => r.skip(w)
       }
     }
-    ProtoSpanRow(b64(traceId), b64(spanId), b64(parentId), flags, name,
-      start, end, end - start, "", "", Map.empty, attrs.toMap, events.toSeq)
+    SpanRow(b64(traceId), b64(spanId), b64(parentId), flags, name,
+      start, end, end - start, "", "", Map.empty, attrMap(attrs.toSeq),
+      events.toSeq, Map.empty)
   }
 
   /** Decode one ExportTraceServiceRequest → flat span rows. */
-  def decodeRequest(bytes: Array[Byte]): Seq[ProtoSpanRow] = {
-    val out = ArrayBuffer[ProtoSpanRow]()
+  def decodeRequest(bytes: Array[Byte]): Seq[SpanRow] = {
+    val out = ArrayBuffer[SpanRow]()
     val root = new Reader(bytes, 0, bytes.length)
     while (root.hasNext) {
       val (f, w) = root.tag()
@@ -240,7 +265,7 @@ object OtlpProto {
         val rs = root.sub()
         var resAttrs = Map.empty[String, String]
         var schemaUrl = ""
-        val scoped = ArrayBuffer[(String, Seq[ProtoSpanRow])]()
+        val scoped = ArrayBuffer[(String, Seq[SpanRow])]()
         while (rs.hasNext) {
           val (rf, rw) = rs.tag()
           rf match {
@@ -248,15 +273,13 @@ object OtlpProto {
               val rr = rs.sub(); val as = ArrayBuffer[(String, String)]()
               while (rr.hasNext) {
                 val (ff, ww) = rr.tag()
-                if (ff == 1) {
-                  val (k, v) = readAttrs(rr.sub()); as += (k -> stringify(v))
-                } else rr.skip(ww)
+                if (ff == 1) as += readAttrs(rr.sub()) else rr.skip(ww)
               }
-              resAttrs = as.toMap
+              resAttrs = attrMap(as.toSeq)
             case 2 =>
               val sr = rs.sub()
               var scopeName = ""
-              val spans = ArrayBuffer[ProtoSpanRow]()
+              val spans = ArrayBuffer[SpanRow]()
               while (sr.hasNext) {
                 val (sf, sw) = sr.tag()
                 sf match {
@@ -280,7 +303,7 @@ object OtlpProto {
           spans.foreach { s =>
             out += s.copy(scope_name = scopeName,
               resource_schema_url = schemaUrl,
-              resource_attributes = resAttrs)
+              resource_attributes = resAttrs, resource_identity = resAttrs)
           }
         }
       }
@@ -295,29 +318,22 @@ object OtlpProto {
     * that fails to decode instead of throwing: a corrupt payload in a
     * batch job should fail loudly, but in a streaming source the
     * failed micro-batch replays the same offsets on restart and
-    * crashes forever — the poison-replay class the JSON path already
-    * degrades around (from_json → nulls). Dropped messages are
-    * counted in [[droppedMessages]] (per-executor, monitoring seam) —
-    * a production deployment routes the raw bytes to a dead-letter
-    * sink instead (round-10 review). */
+    * crashes forever. Dropped messages are counted in
+    * [[droppedMessages]] (per-executor, monitoring seam) — a
+    * production deployment routes the raw bytes to a dead-letter sink
+    * instead. */
   def fromProtobuf(requests: Dataset[Array[Byte]],
-      lenient: Boolean = false): DataFrame = {
-    val spark = requests.sparkSession
-    import spark.implicits._
-    requests.mapPartitions(_.flatMap { bytes =>
-        if (!lenient) decodeRequest(bytes)
-        else
-          try decodeRequest(bytes)
-          catch {
-            case _: IllegalArgumentException =>
-              droppedMessages.incrementAndGet()
-              Seq.empty
-          }
-      })
-      .toDF()
-      .transform(OtlpIngest.withDerivedIds(_)) // same derivation as JSON path
-      .select(SpanSchema.columns.map(col): _*)
-  }
+      lenient: Boolean = false): DataFrame =
+    OtlpIngest.spanTable(requests) { bytes =>
+      if (!lenient) decodeRequest(bytes)
+      else
+        try decodeRequest(bytes)
+        catch {
+          case _: IllegalArgumentException =>
+            droppedMessages.incrementAndGet()
+            Seq.empty
+        }
+    }
 
   /** Per-JVM count of lenient-mode messages dropped as undecodable. */
   val droppedMessages = new java.util.concurrent.atomic.AtomicLong(0)

@@ -12,8 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * becomes one ClickHouse batch insert (collector/service.go:176,
   * utils/utils.go:169-240) with no watermark or late-data policy. Here the
   * same pipeline is an actual streaming job: file/Kafka source of OTLP
-  * JSON → the SAME OtlpIngest transforms (they are plain Column
-  * expressions, batch/stream agnostic) → watermark → sink; monitoring
+  * JSON → the SAME per-partition OtlpIngest decoder (stateless, so
+  * batch/stream agnostic) → watermark → sink; monitoring
   * series become windowed streaming aggregations.
   *
   * Late data: spans arriving later than the watermark delay are dropped
@@ -28,11 +28,7 @@ object StreamingOps extends QueryModule {
   def streamOtlpJson(spark: SparkSession, inputDir: String,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    val raw = spark.readStream.text(inputDir).as[String]
-    OtlpIngest.flatten(
-      raw.toDF("raw")
-        .select(from_json(col("raw"), OtlpIngest.requestSchema).as("req"))
-        .select(col("req.resourceSpans").as("resourceSpans")))
+    OtlpIngest.fromJson(spark.readStream.text(inputDir).as[String])
       .withColumn("start_ts",
         timestamp_micros(expr("start_time_unix_nano div 1000")))
       .withWatermark("start_ts", watermarkDelay)

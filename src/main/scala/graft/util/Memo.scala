@@ -30,13 +30,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Two path shapes. [[path]] is a fresh exit-deleted directory per
   * build. [[stablePath]] is `fastBase/graft_<name>_<pid>`, the same for
-  * the whole process and deliberately NOT exit-deleted: the witness
-  * dumps and fixtures written there are named in oracle SQL, which
-  * `tools/check.py` runs in DuckDB after the Verify JVM has exited. The
-  * pid keeps two runners on one host from overwriting each other's dump
-  * mid-read. So every process leaves its stable paths behind; they can
-  * be deleted once the oracle has read them. [[once]] writes such an
-  * artifact once per process. */
+  * the whole process: the witness dumps and fixtures written there are
+  * named in oracle SQL. They are exit-deleted too, except in a process
+  * that called [[keepStablePaths]] (Verify: `tools/check.py` runs the
+  * oracle SQL in DuckDB after the Verify JVM has exited, and deletes
+  * nothing). The pid keeps two runners on one host from overwriting
+  * each other's dump mid-read. [[once]] writes such an artifact once
+  * per process. */
 object Memo {
   private final case class Key(session: Option[SparkSession], kind: String,
       dir: String)
@@ -44,6 +44,7 @@ object Memo {
   private val entries = new ConcurrentHashMap[Key, FutureTask[Any]]()
   private val seq = new AtomicLong()
   private val pid = ProcessHandle.current().pid()
+  @volatile private var keepStable = false
 
   /** The value `build` returns for (session, kind, dir), built at most
     * once while it succeeds. `session = None` scopes the entry to the
@@ -92,10 +93,16 @@ object Memo {
     p
   }
 
-  /** `fastBase/graft_<name>_<pid>`: stable for the process and kept
-    * after exit (see the object's doc). */
-  def stablePath(name: String): String =
-    s"${TempArtifacts.fastBase}/graft_${name}_$pid"
+  /** `fastBase/graft_<name>_<pid>`: stable for the process, deleted at
+    * exit unless [[keepStablePaths]] was called first. */
+  def stablePath(name: String): String = {
+    val p = s"${TempArtifacts.fastBase}/graft_${name}_$pid"
+    if (keepStable) p else TempArtifacts.register(p)
+  }
+
+  /** Keep every [[stablePath]] asked for from now on after the JVM
+    * exits, for a reader that runs after it. */
+  def keepStablePaths(): Unit = keepStable = true
 
   /** Forget every entry whose kind starts with `kindPrefix`. */
   private[util] def forget(kindPrefix: String): Unit =

@@ -2,16 +2,16 @@ package graft.util
 
 /** One process-wide ledger of per-process artifacts (every
   * [[Memo.path]] — memoized plans, bucket tables, IVF and inverted
-  * indexes, streaming scratch — plus the session's local dir and the
-  * streaming checkpoint root) with a single JVM shutdown hook deleting
-  * them all — instead of one ad-hoc hook per module, or none. Paths are
-  * registered BEFORE the write starts, so a JVM exit mid-build still
-  * cleans the partial directory. Registration
+  * indexes, streaming scratch — the witness dumps at
+  * [[Memo.stablePath]] outside Verify, plus the session's local dir and
+  * the streaming checkpoint root) with a single JVM shutdown hook
+  * deleting them all — instead of one ad-hoc hook per module, or none.
+  * Paths are registered BEFORE the write starts, so a JVM exit
+  * mid-build still cleans the partial directory. Registration
   * never deletes during the run (already-planned readers reference
-  * these paths until exit). The witness dumps at [[Memo.stablePath]]
-  * are deliberately not registered. */
+  * these paths until exit). */
 object TempArtifacts {
-  private val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     paths.forEach { p =>

@@ -1,6 +1,9 @@
 package graft
 
 import graft.spans.{OtlpExamples, OtlpIngest}
+import graft.streaming.StreamingOps
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 
 /** Ingest semantics: both OTLP generations, attribute stringification
   * rules (collector/service.go:184-237), id re-encoding, write path. */
@@ -111,12 +114,15 @@ class OtlpIngestSpec extends SparkSpec {
         | "attributes":[{"key":"k","value":{"stringValue":"v1"}},
         |               {"key":"k","value":{"stringValue":"v2"}}]}
         |]}]}]}""".stripMargin.replace("\n", "")
-    val row = OtlpIngest.fromJson(spark.createDataset(Seq(dup)))
-      .collect().head
+    val rows = OtlpIngest.fromJson(spark.createDataset(Seq(dup)))
+    val row = rows.collect().head
     val res = row.getAs[Map[String, String]]("resource_attributes")
     assert(res("env") === "new")
     assert(res("region") === "eu")
     assert(row.getAs[Map[String, String]]("span_attributes")("k") === "v2")
+    // the repeated key sits where it last occurred
+    assert(rows.selectExpr("to_json(resource_attributes)").head().getString(0) ===
+      """{"region":"eu","env":"new"}""")
   }
 
   test("scope_id/resource_id: deterministic content-derived UUID format") {
@@ -189,6 +195,106 @@ class OtlpIngestSpec extends SparkSpec {
     assert(row.getAs[Map[String, String]]("span_attributes") === Map())
     assert(row.getSeq[Any](row.fieldIndex("events")) === Seq())
     assert(row.getAs[Long]("duration_ns") === 1L)
+  }
+
+  /** `docs` ingested by [[OtlpIngest.fromJson]] and, written one per
+    * line, through [[StreamingOps.streamOtlpJson]]: (side, run). */
+  private def sides(docs: Seq[String]): Seq[(String, () => Array[Row])] = {
+    import spark.implicits._
+    val in = SparkSpec.tempDir("otlp-json-in")
+    Files.writeString(Paths.get(s"$in/docs.json"), docs.mkString("", "\n", "\n"))
+    Seq(
+      "batch" -> (() => OtlpIngest.fromJson(spark.createDataset(docs)).collect()),
+      "stream" -> (() => StreamingOps.runToBatchAppend(spark,
+        StreamingOps.streamOtlpJson(spark, in).drop("start_ts"),
+        s"otlp_json_${System.nanoTime()}").collect()))
+  }
+
+  private def batchAndStream(docs: Seq[String]): Seq[(String, Array[Row])] =
+    sides(docs).map { case (side, run) => side -> run() }
+
+  /** One current-form request holding one span with the given fields
+    * after its ids and name. */
+  private def oneSpan(fields: String, scope: String = "\"scope\":{\"name\":\"s\"},"): String =
+    s"""{"resourceSpans":[{"scopeSpans":[{$scope"spans":[
+       |{"traceId":"aa","spanId":"bb","name":"x"$fields}]}]}]}"""
+      .stripMargin.replace("\n", "")
+
+  private def spanAttrs(values: (String, String)*): String =
+    oneSpan(values.map { case (k, v) => s"""{"key":"$k","value":$v}""" }
+      .mkString(""","startTimeUnixNano":"1","endTimeUnixNano":"2","attributes":[""", ",", "]"))
+
+  test("a malformed document among good ones yields no rows and no error") {
+    val docs = Seq(OtlpExamples.current, """{"resourceSpans":[{"scopeSpans":[""",
+      OtlpExamples.legacy)
+    for ((side, rows) <- batchAndStream(docs))
+      assert(rows.map(_.getAs[String]("name")).sorted.toSeq ===
+        Seq("GET /users", "POST /orders", "SELECT users"), side)
+  }
+
+  test("intValue reads as a JSON number and as a string") {
+    val doc = spanAttrs("num" -> """{"intValue":42}""", "str" -> """{"intValue":"42"}""")
+    for ((side, rows) <- batchAndStream(Seq(doc))) {
+      val attrs = rows.head.getAs[Map[String, String]]("span_attributes")
+      assert(attrs === Map("num" -> "42", "str" -> "42"), side)
+    }
+  }
+
+  test("doubleValue renders like Java's Double.toString") {
+    val doc = spanAttrs("half" -> """{"doubleValue":0.5}""",
+      "tiny" -> """{"doubleValue":1e-7}""", "huge" -> """{"doubleValue":1e21}""")
+    for ((side, rows) <- batchAndStream(Seq(doc))) {
+      val attrs = rows.head.getAs[Map[String, String]]("span_attributes")
+      assert(attrs === Map("half" -> "0.5", "tiny" -> "1.0E-7", "huge" -> "1.0E21"),
+        side)
+    }
+  }
+
+  test("non-hex and odd-length ids pass through unchanged") {
+    val doc = """{"resourceSpans":[{"scopeSpans":[{"spans":[
+      |{"traceId":"trace-xyz","spanId":"abc","parentSpanId":"0A0B",
+      | "name":"x","startTimeUnixNano":"1","endTimeUnixNano":"2"}]}]}]}"""
+      .stripMargin.replace("\n", "")
+    for ((side, rows) <- batchAndStream(Seq(doc))) {
+      val r = rows.head
+      assert(r.getAs[String]("trace_id") === "trace-xyz", side)
+      assert(r.getAs[String]("span_id") === "abc", side)
+      assert(r.getAs[String]("parent_span_id") === "Cgs=", side) // even hex
+    }
+  }
+
+  test("absent scope and library names give a null scope_name") {
+    val docs = Seq(
+      oneSpan("", scope = ""),
+      oneSpan("", scope = "\"scope\":{},"),
+      """{"resourceSpans":[{"instrumentationLibrarySpans":[
+        |{"spans":[{"spanId":"cc","name":"legacy"}]}]}]}"""
+        .stripMargin.replace("\n", ""))
+    for ((side, rows) <- batchAndStream(docs)) {
+      assert(rows.length === 3, side)
+      rows.foreach(r => assert(r.getAs[String]("scope_name") === null, side))
+      assert(rows.map(_.getAs[String]("scope_id")).distinct.length === 1, side)
+    }
+  }
+
+  test("absent flags and events read as 0 and an empty list") {
+    val doc = oneSpan(""","startTimeUnixNano":"5","endTimeUnixNano":"9"""")
+    for ((side, rows) <- batchAndStream(Seq(doc))) {
+      val r = rows.head
+      assert(r.getAs[Int]("flags") === 0, side)
+      assert(r.getSeq[Row](r.fieldIndex("events")) === Seq(), side)
+      assert(r.getAs[Long]("duration_ns") === 4L, side)
+    }
+  }
+
+  test("a non-numeric startTimeUnixNano fails the ingest, naming the value") {
+    val doc = oneSpan(""","startTimeUnixNano":"abc","endTimeUnixNano":"2"""")
+    def chain(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    for ((side, run) <- sides(Seq(doc))) {
+      val e = intercept[Exception](run())
+      assert(chain(e).contains("'abc'"), s"$side: ${chain(e)}")
+    }
   }
 
   test("A4 write path: date-partitioned parquet round-trips") {

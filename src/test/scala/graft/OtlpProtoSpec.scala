@@ -106,6 +106,71 @@ class OtlpProtoSpec extends SparkSpec {
     assert(row.getAs[String]("trace_id") === "CgsMDQ==")
     assert(row.getAs[Long]("duration_ns") === 100000000L)
   }
+
+  test("one request in both wire forms decodes to identical rows, " +
+    "map entry order included") {
+    import spark.implicits._
+    // (key, OTLP/JSON value, protobuf AnyValue writer)
+    type Attr = (String, String, W => W)
+    val res: Seq[Attr] = Seq(
+      ("service.name", """{"stringValue":"gateway"}""", strVal("gateway")),
+      ("host.name", """{"stringValue":"h-1"}""", strVal("h-1")),
+      ("region", """{"stringValue":"eu"}""", strVal("eu")),
+      ("pid", """{"intValue":"4242"}""", _.vint(3, 4242)),
+      ("load", """{"doubleValue":0.75}""", _.fixed64(4,
+        java.lang.Double.doubleToLongBits(0.75))),
+      ("debug", """{"boolValue":false}""", _.vint(2, 0)),
+      ("tags", """{"arrayValue":{"values":[{"stringValue":"a"},{"stringValue":"b"}]}}""",
+        _.msg(5, new W().msg(1, new W().str(1, "a")).msg(1, new W().str(1, "b")))))
+    val span: Seq[Attr] = Seq(
+      ("http.method", """{"stringValue":"GET"}""", strVal("GET")),
+      ("retries", """{"intValue":"42"}""", _.vint(3, 42)),
+      ("ratio", """{"doubleValue":0.5}""", _.fixed64(4,
+        java.lang.Double.doubleToLongBits(0.5))),
+      ("mixed", """{"arrayValue":{"values":[{"stringValue":"a"},{"intValue":"1"}]}}""",
+        _.msg(5, new W().msg(1, new W().str(1, "a")).msg(1, new W().vint(3, 1)))),
+      ("meta", """{"kvlistValue":{"values":[{"key":"k","value":{"stringValue":"v"}}]}}""",
+        _.msg(6, new W().msg(1, kv("k", strVal("v"))))),
+      ("blob", """{"bytesValue":"aGVsbG8="}""", _.bytes(7, "hello".getBytes("UTF-8"))),
+      ("http.method", """{"stringValue":"POST"}""", strVal("POST")))
+    def json(as: Seq[Attr]): String =
+      as.map { case (k, v, _) => s"""{"key":"$k","value":$v}""" }.mkString("[", ",", "]")
+    def proto(w: W, field: Int, as: Seq[Attr]): W =
+      as.foldLeft(w) { case (acc, (k, _, v)) => acc.msg(field, kv(k, v)) }
+    val jsonDoc =
+      s"""{"resourceSpans":[{"resource":{"attributes":${json(res)}},
+         |"schemaUrl":"https://example/schema",
+         |"scopeSpans":[{"scope":{"name":"gateway"},"spans":[
+         |{"traceId":"0a0b0c0d","spanId":"01020304","parentSpanId":"05060708",
+         | "flags":1,"name":"GET /users",
+         | "startTimeUnixNano":"1704067200000000000",
+         | "endTimeUnixNano":"1704067200100000000",
+         | "attributes":${json(span)},
+         | "events":[{"timeUnixNano":"1704067200050000000","name":"exception",
+         |   "attributes":${json(span.take(3))}}]}]}]}]}"""
+        .stripMargin.replace("\n", "")
+    val protoSpan = proto(new W()
+      .bytes(1, Array[Byte](0x0a, 0x0b, 0x0c, 0x0d))
+      .bytes(2, Array[Byte](1, 2, 3, 4))
+      .bytes(4, Array[Byte](5, 6, 7, 8))
+      .str(5, "GET /users")
+      .fixed64(7, 1704067200000000000L)
+      .fixed64(8, 1704067200100000000L), 9, span)
+      .msg(11, proto(new W()
+        .fixed64(1, 1704067200050000000L)
+        .str(2, "exception"), 3, span.take(3)))
+      .fixed32(16, 1)
+    val protoDoc = new W().msg(1, new W()
+      .msg(1, proto(new W(), 1, res))
+      .msg(2, new W().msg(1, new W().str(1, "gateway")).msg(2, protoSpan))
+      .str(3, "https://example/schema")).out.toByteArray
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.selectExpr("to_json(struct(*))").as[String].collect().toSeq
+    val fromJson = rows(graft.spans.OtlpIngest.fromJson(
+      spark.createDataset(Seq(jsonDoc))))
+    assert(fromJson.length === 1)
+    assert(rows(OtlpProto.fromProtobuf(spark.createDataset(Seq(protoDoc)))) === fromJson)
+  }
 }
 
 /** Wire-bytes fixtures shared with other specs (e.g. the Kafka decode
@@ -128,6 +193,11 @@ object OtlpProtoSpec {
     def fixed64(field: Int, v: Long): W = {
       tag(field, 1)
       (0 until 8).foreach(i => out.write(((v >>> (8 * i)) & 0xFF).toInt))
+      this
+    }
+    def fixed32(field: Int, v: Int): W = {
+      tag(field, 5)
+      (0 until 4).foreach(i => out.write((v >>> (8 * i)) & 0xFF))
       this
     }
     def vint(field: Int, v: Long): W = tag(field, 0).varint(v)

@@ -1,7 +1,9 @@
 package graft.spans
 
 import com.fasterxml.jackson.core.JacksonException
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import graft.spans.OtlpProto._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,7 +42,11 @@ object OtlpIngest {
 
   // ---- A2+A3: OTLP/JSON → span rows ----
 
-  private val mapper = new ObjectMapper()
+  // Spark's JSON reader accepts single-quoted strings and unquoted
+  // NaN/Infinity by default (JSONOptions), so this mapper does too
+  private val mapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
 
   // Field readers over the Jackson tree. They read as Spark's JSON
   // reader (from_json) does, so a document gives the rows it gave when

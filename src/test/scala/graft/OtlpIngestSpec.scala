@@ -250,6 +250,19 @@ class OtlpIngestSpec extends SparkSpec {
     }
   }
 
+  test("single-quoted documents and unquoted NaN/Infinity doubles give rows") {
+    val docs = Seq(
+      "{'resourceSpans':[{'scopeSpans':[{'spans':[{'traceId':'aa','spanId':'bb'," +
+        "'name':'quoted','attributes':[{'key':'k','value':{'stringValue':'say \"hi\"'}}]}]}]}]}",
+      spanAttrs("nan" -> """{"doubleValue":NaN}""", "ninf" -> """{"doubleValue":-Infinity}"""))
+    for ((side, rows) <- batchAndStream(docs)) {
+      val byName = rows.map(r => r.getAs[String]("name") ->
+        r.getAs[Map[String, String]]("span_attributes")).toMap
+      assert(byName === Map("quoted" -> Map("k" -> "say \"hi\""),
+        "x" -> Map("nan" -> "NaN", "ninf" -> "-Infinity")), side)
+    }
+  }
+
   test("non-hex and odd-length ids pass through unchanged") {
     val doc = """{"resourceSpans":[{"scopeSpans":[{"spans":[
       |{"traceId":"trace-xyz","spanId":"abc","parentSpanId":"0A0B",

@@ -2,8 +2,8 @@
 """Run same-session alternating benchmark pairs: a git rev against the
 working tree.
 
-Usage: python3 tools/perf_pairs.py --rev REV --workload W [--workload W2]
-           --seeds FIRST-LAST [--triplet] [--seconds 5] [--work DIR]
+Usage: python3 tools/perf_pairs.py --rev REV [--workload W ...]
+           --seeds FIRST-LAST [--triplet] [--work DIR]
 
 Run from the repository root. The script makes fresh copies under
 --work (default: a new temporary directory): A is `git archive REV`, B
@@ -11,11 +11,13 @@ is the working tree (tracked and untracked files that git does not
 ignore), and with --triplet A2 is a second `git archive REV`, so two
 copies of identical code show the copy-to-copy spread. For each seed it
 runs `python3 perfbench/run.py --workload W --seed S --seconds N
---trace 0` once in every copy, alternating which copy runs first (A, B
-then B, A; triplets rotate A, A2, B), and reads the host's steal share
-from /proc/stat around each run.
+--trace 0` once in every copy, with N the run_seconds of
+BENCHMARK.json, alternating which copy runs first (A, B then B, A;
+triplets rotate A, A2, B), and reads the host's steal share from
+/proc/stat around each run.
 
-For each workload and each end-to-end metric of BENCHMARK.json it
+The workloads are those of BENCHMARK.json, all of them unless
+--workload names some. For each workload and each end-to-end metric it
 prints the median of every copy, the pairs in which B was lower than A,
 A's IQR/median and the metric's bound, then one line per run with its
 steal and fail_frac. Every run record goes to DIR/runs.json. It only
@@ -80,18 +82,19 @@ def quartiles(xs):
 
 
 def main():
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = [w["name"] for w in bench["workloads"]]
+    metrics = bench["end_to_end"]
     ap = argparse.ArgumentParser()
     ap.add_argument("--rev", required=True)
-    ap.add_argument("--workload", action="append", required=True,
-                    choices=["trace_api", "registry_batch"])
+    ap.add_argument("--workload", action="append", choices=workloads)
     ap.add_argument("--seeds", required=True, help="FIRST-LAST, inclusive")
-    ap.add_argument("--seconds", type=int, default=5)
     ap.add_argument("--triplet", action="store_true")
     ap.add_argument("--work")
     a = ap.parse_args()
+    a.workload = a.workload or workloads
     first, last = (int(x) for x in a.seeds.split("-"))
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
 
     work = a.work or tempfile.mkdtemp(prefix="perf_pairs_")
     copies = {"A": os.path.join(work, "A"), "B": os.path.join(work, "B")}
@@ -109,7 +112,7 @@ def main():
             order = (names[k:] + names[:k]) if a.triplet else (
                 names if i % 2 == 0 else names[::-1])
             for name in order:
-                r = run(copies[name], w, seed, a.seconds)
+                r = run(copies[name], w, seed, bench["run_seconds"])
                 r.update(workload=w, seed=seed, copy=name)
                 runs.append(r)
                 res = r["result"] or {}

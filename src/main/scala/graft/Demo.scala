@@ -1,7 +1,6 @@
 package graft
 
 import graft.spans.{OtlpExamples, OtlpIngest, TraceService}
-import java.nio.file.Files
 
 /** Runnable quickstart — the end-to-end path a reference (nabatshy) user
   * follows after switching: ingest OTLP (both JSON generations), persist
@@ -18,7 +17,7 @@ object Demo {
     println(s"ingested ${spans.count()} spans")
 
     // 2. persist: date-partitioned parquet store
-    val store = Files.createTempDirectory("graft-demo-store").toString
+    val store = graft.util.Memo.path("demo_store")
     OtlpIngest.writeSpans(spans, store)
 
     // 3. analytics over the store

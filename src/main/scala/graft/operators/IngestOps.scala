@@ -110,11 +110,9 @@ object IngestOps extends QueryModule {
     // says this design must avoid (round-10 review)
     val rows =
       try {
-        // idempotent sink, with batch 0 REPLAYED (the at-least-once
-        // failure mode foreachBatch exposes) — contents must still be
-        // exactly-once
-        val sink = new graft.sinks.IdempotentJdbcSpanSink(
-          url, "denormalized_span", props)
+        // batch 0 REPLAYED (the at-least-once failure mode foreachBatch
+        // exposes) — the sink's contents must still be exactly-once
+        val sink = new JdbcSpanSink(url, "denormalized_span", props)
         sink.writeBatch(spans, 0L)
         sink.writeBatch(spans, 0L) // simulated replay after a crash
         val back = JdbcSpanSink.readBack(

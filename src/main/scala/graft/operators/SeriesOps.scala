@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft._
+import graft.util.TimeRanges
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,10 +9,11 @@ import org.apache.spark.sql.functions._
   * (the D7-D11 endpoint series are [[graft.spans.TraceService]] methods,
   * oracle-checked through [[SpanNativeOps]]): distinct-user series and
   * their HLL twins, moving windows, spike and SLO-burn alerting, and
-  * DAU/WAU stickiness. Bucketed series share the reference's grid: width
-  * range/15 (utils/utils.go:81-85), `unix − unix % step` floor alignment
-  * (utils/utils.go:74-79), zero-filled inside the plan (H14) by a
-  * `spark.range` calendar frame left-joined to the aggregated buckets.
+  * DAU/WAU stickiness. Bucketed series share the reference's grid
+  * ([[graft.util.TimeRanges]]): width range/15 (utils/utils.go:81-85),
+  * `unix − unix % step` floor alignment (utils/utils.go:74-79),
+  * zero-filled inside the plan (H14) by a `spark.range` calendar frame
+  * left-joined to the aggregated buckets.
   *
   * Scale notes: one scan + one shuffle on the bucket key per series; the
   * frame side is ≤16 rows so the fill join is a broadcast.
@@ -20,8 +22,8 @@ object SeriesOps extends QueryModule {
   // Query window: the testdata month [2024-01-01, 2024-01-31] in epoch secs.
   private val Start = EventWindow.StartS
   private val End = EventWindow.EndS
-  private val Step = (End - Start) / 15 // 172800 s — reference's range/15
-  private val Aligned = Start - Start % Step
+  private val Step = TimeRanges.bucketSeconds(End - Start) // 172800 s
+  private val Aligned = TimeRanges.align(Start, Step)
 
   /** Events inside the window with the floor-aligned bucket column. */
   private def bucketed(spark: SparkSession, dir: String): DataFrame =

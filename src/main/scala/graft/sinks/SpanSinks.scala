@@ -18,9 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * micro-batch with checkpointed offsets; the JDBC writer keeps Spark's
   * per-partition write parallelism (one connection per partition, batched
   * inserts) — the distributed equivalent of the reference's single-node
-  * PrepareBatch/Send loop. Exactly-once needs an idempotent target
-  * (ClickHouse ReplacingMergeTree or a batch_id dedup key — batchId is
-  * passed through for that purpose).
+  * PrepareBatch/Send loop. Exactly-once needs an idempotent target:
+  * batchId is passed through so [[JdbcSpanSink]] can replace a replayed
+  * batch's rows instead of appending them twice; [[ParquetSpanSink]]
+  * appends.
   */
 trait SpanSink {
   def writeBatch(batch: DataFrame, batchId: Long): Unit
@@ -36,47 +37,32 @@ final class ParquetSpanSink(path: String) extends SpanSink {
   * (utils/utils.go:169-240). Complex columns (attr maps, events) are
   * serialized to JSON text so the row shape is portable across JDBC
   * dialects (Derby/Postgres/ClickHouse-JDBC); a ClickHouse target with
-  * native Map columns can override [[JdbcSpanSink.relationalProjection]].
+  * native Map columns would need its own projection in place of
+  * [[JdbcSpanSink.relationalProjection]].
   * Tested against embedded Derby (the JDBC engine available in-sandbox).
+  *
+  * Exactly-once under replay: every row is stamped with its micro-batch
+  * id, and a batch write first deletes any rows a previous attempt of
+  * the SAME batch landed. foreachBatch is at-least-once (offsets
+  * checkpoint only after the batch function returns), so a crash
+  * mid-write replays the whole batch — delete-then-insert makes each
+  * replay CONVERGE to exactly-once table contents without needing a
+  * cross-partition transaction. This is the portable-JDBC analog of
+  * ClickHouse-side dedup (ReplacingMergeTree keyed on a batch column).
+  * At warehouse scale the target should be indexed/partitioned on
+  * batch_id so the replay delete is a partition drop, not a full scan.
+  * `properties` carries the connection's driver and credentials.
   */
 final class JdbcSpanSink(url: String, table: String,
-    properties: Properties = new Properties(),
-    batchSize: Int = 10000,
-    createTableColumnTypes: String = JdbcSpanSink.DefaultColumnTypes)
-    extends SpanSink {
-  override def writeBatch(batch: DataFrame, batchId: Long): Unit =
-    JdbcSpanSink.relationalProjection(batch)
-      .write.mode("append")
-      .option("batchsize", batchSize.toString)
-      .option("createTableColumnTypes", createTableColumnTypes)
-      .jdbc(url, table, properties)
-}
-
-/** Exactly-once-under-replay JDBC sink: every row is stamped with its
-  * micro-batch id, and a batch write first deletes any rows a previous
-  * attempt of the SAME batch landed. foreachBatch is at-least-once
-  * (offsets checkpoint only after the batch function returns), so a
-  * crash mid-write replays the whole batch — delete-then-insert makes
-  * each replay CONVERGE to exactly-once table contents without needing
-  * a cross-partition transaction. This is the portable-JDBC analog of
-  * ClickHouse-side dedup (ReplacingMergeTree keyed on a batch column);
-  * a warehouse with real multi-statement transactions can instead wrap
-  * [[JdbcSpanSink]] + a ledger insert in one commit. At warehouse
-  * scale the target should be indexed/partitioned on batch_id so the
-  * replay delete is a partition drop, not a full scan. */
-final class IdempotentJdbcSpanSink(url: String, table: String,
-    properties: Properties = new Properties(),
-    batchSize: Int = 10000,
-    createTableColumnTypes: String = JdbcSpanSink.DefaultColumnTypes)
-    extends SpanSink {
+    properties: Properties = new Properties()) extends SpanSink {
 
   override def writeBatch(batch: DataFrame, batchId: Long): Unit = {
     deletePriorAttempt(batchId)
     JdbcSpanSink.relationalProjection(batch)
       .withColumn("batch_id", lit(batchId))
       .write.mode("append")
-      .option("batchsize", batchSize.toString)
-      .option("createTableColumnTypes", createTableColumnTypes)
+      .option("batchsize", JdbcSpanSink.BatchSize.toString)
+      .option("createTableColumnTypes", JdbcSpanSink.ColumnTypes)
       .jdbc(url, table, properties)
   }
 
@@ -97,23 +83,22 @@ final class IdempotentJdbcSpanSink(url: String, table: String,
       try st.executeUpdate(s"DELETE FROM $table WHERE $bid = $batchId")
       catch {
         case e: java.sql.SQLException
-            if IdempotentJdbcSpanSink.MissingTableStates(e.getSQLState) =>
+            if JdbcSpanSink.MissingTableStates(e.getSQLState) =>
           () // Derby 42X05 / Postgres 42P01 / generic 42S02
       } finally st.close()
     } finally conn.close()
   }
 }
 
-object IdempotentJdbcSpanSink {
-  private val MissingTableStates = Set("42X05", "42P01", "42S02")
-}
-
 object JdbcSpanSink {
+  private val MissingTableStates = Set("42X05", "42P01", "42S02")
+  /** Rows per JDBC insert batch. */
+  private val BatchSize = 10000
   /** Explicit SQL types for the string columns: without them Spark's
     * Derby dialect creates CLOBs, which cannot be compared/filtered
     * (and CLOB-per-id would be pathological on any warehouse). JSON
     * payload columns get the widest portable VARCHAR. */
-  val DefaultColumnTypes: String = Seq(
+  private val ColumnTypes: String = Seq(
     "trace_id VARCHAR(128)", "span_id VARCHAR(128)",
     "parent_span_id VARCHAR(128)", "name VARCHAR(1024)",
     "scope_id VARCHAR(36)", "scope_name VARCHAR(512)",

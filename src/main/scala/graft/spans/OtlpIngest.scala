@@ -36,7 +36,9 @@ import scala.jdk.CollectionConverters._
   * value model and span rows of the protobuf decoder ([[OtlpProto]]), so
   * both wire forms share one stringification and one attribute-map
   * builder; only the scope/resource ids are derived by Spark
-  * expressions ([[withDerivedIds]]), after the decode.
+  * expressions ([[withDerivedIds]]), after the decode. A request the
+  * decoder rejects fails a batch and is dropped and counted by a stream,
+  * for both wire forms ([[spanTable]]).
   */
 object OtlpIngest {
 
@@ -83,7 +85,7 @@ object OtlpIngest {
       }
     }
   /** An int64 carried as a string (or number); a value that is not an
-    * integer fails the ingest, as casting it did. */
+    * integer fails the request ([[spanTable]] sets what that means). */
   private def int64(n: JsonNode, name: String): java.lang.Long =
     Option(text(n, name)).map { s =>
       try java.lang.Long.valueOf(s.trim)
@@ -92,6 +94,15 @@ object OtlpIngest {
           s"OTLP/JSON $name '$s' is not an int64")
       }
     }.orNull
+
+  /** end − start; a difference past int64 fails the request, as a bad
+    * time value does. */
+  private def duration(start: java.lang.Long, end: java.lang.Long): java.lang.Long =
+    try java.lang.Long.valueOf(Math.subtractExact(end.longValue, start.longValue))
+    catch {
+      case _: ArithmeticException => throw new IllegalArgumentException(
+        s"OTLP/JSON endTimeUnixNano '$end' minus startTimeUnixNano '$start' overflows int64")
+    }
 
   /** AnyValue → [[PValue]]; the first field set wins, in the order
     * string, int, double, bool, bytes, the legacy `Value` wrapper,
@@ -133,7 +144,8 @@ object OtlpIngest {
     else id
 
   /** One OTLP/JSON request → its span rows. A document that does not
-    * parse, or is not an object, has no rows. */
+    * parse, or is not an object, has no rows, as under Spark's JSON
+    * reader; a bad time value raises `IllegalArgumentException`. */
   def decodeJson(doc: String): Seq[SpanRow] = {
     val root =
       try if (doc == null) null else mapper.readTree(doc)
@@ -160,8 +172,7 @@ object OtlpIngest {
             Option(field(sp, "flags")).filter(f => f.isIntegralNumber && f.canConvertToInt)
               .fold(0)(_.intValue),
             text(sp, "name"), start, end,
-            if (start == null || end == null) null
-            else java.lang.Long.valueOf(Math.subtractExact(end.longValue, start.longValue)),
+            if (start == null || end == null) null else duration(start, end),
             scopeName, schemaUrl,
             if (legacy) mergeLegacy(res, spanAttrs) else res, spanAttrs,
             objs(sp, "events").map(e =>
@@ -180,13 +191,31 @@ object OtlpIngest {
     spanTable(requests)(decodeJson)
 
   /** Requests decoded per partition into span rows → the span table in
-    * SpanSchema column order, with scope and resource ids derived. */
+    * SpanSchema column order, with scope and resource ids derived.
+    *
+    * The one rule for a request the decoder rejects (an
+    * `IllegalArgumentException`: a malformed protobuf message, a JSON
+    * time value that is not an int64, an `end − start` past int64), for
+    * both wire forms: a batch job fails and the error names the value;
+    * a stream drops the request and counts it in
+    * [[OtlpProto.droppedMessages]], because a failed micro-batch replays
+    * the same offsets on restart and would fail forever. A production
+    * deployment routes the dropped bytes to a dead-letter sink. */
   private[spans] def spanTable[T](requests: Dataset[T])(
-      decode: T => Seq[SpanRow]): DataFrame =
-    requests.mapPartitions(_.flatMap(decode))(Encoders.product[SpanRow])
+      decode: T => Seq[SpanRow]): DataFrame = {
+    val streaming = requests.isStreaming
+    requests.mapPartitions(_.flatMap { r =>
+      try decode(r)
+      catch {
+        case _: IllegalArgumentException if streaming =>
+          droppedMessages.incrementAndGet()
+          Seq.empty
+      }
+    })(Encoders.product[SpanRow])
       .toDF()
       .transform(withDerivedIds(_, Some(col("resource_identity"))))
       .select(SpanSchema.columns.map(col): _*)
+  }
 
   // ---- derived scope/resource ids ----
 

@@ -22,6 +22,13 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Decoding runs per partition (`mapPartitions`) over a binary column —
   * the batch shape a Kafka `value: binary` stream feeds directly.
+  *
+  * Proto3 does not tell an absent scalar field from its default, so two
+  * fields that are null when absent from an OTLP/JSON request read as
+  * their defaults here: an absent scope name is "" (JSON: null) and an
+  * absent start, end or event time is 0 (JSON: null). Each wire form
+  * keeps its own reading of these two; a KeyValue with no value, which
+  * the wire does mark, is a null attribute value in both.
   */
 object OtlpProto {
 
@@ -140,7 +147,8 @@ object OtlpProto {
   }
 
   private def readKeyValue(r: Reader): (String, PValue) = {
-    var k = ""; var v: PValue = PString("")
+    // no value field is a null attribute value, as an empty AnyValue is
+    var k = ""; var v: PValue = null
     while (r.hasNext) {
       val (f, w) = r.tag()
       f match {
@@ -312,29 +320,13 @@ object OtlpProto {
   }
 
   /** Dataset of serialized requests → span DataFrame (SpanSchema column
-    * order), decoded per partition.
-    *
-    * `lenient = true` (the STREAMING callers' mode) drops a message
-    * that fails to decode instead of throwing: a corrupt payload in a
-    * batch job should fail loudly, but in a streaming source the
-    * failed micro-batch replays the same offsets on restart and
-    * crashes forever. Dropped messages are counted in
-    * [[droppedMessages]] (per-executor, monitoring seam) — a
-    * production deployment routes the raw bytes to a dead-letter sink
-    * instead. */
-  def fromProtobuf(requests: Dataset[Array[Byte]],
-      lenient: Boolean = false): DataFrame =
-    OtlpIngest.spanTable(requests) { bytes =>
-      if (!lenient) decodeRequest(bytes)
-      else
-        try decodeRequest(bytes)
-        catch {
-          case _: IllegalArgumentException =>
-            droppedMessages.incrementAndGet()
-            Seq.empty
-        }
-    }
+    * order), decoded per partition. A message that fails to decode fails
+    * a batch job and is dropped and counted by a stream
+    * ([[OtlpIngest.spanTable]]). */
+  def fromProtobuf(requests: Dataset[Array[Byte]]): DataFrame =
+    OtlpIngest.spanTable(requests)(decodeRequest)
 
-  /** Per-JVM count of lenient-mode messages dropped as undecodable. */
+  /** Per-JVM count of requests a stream dropped as undecodable, for
+    * both wire forms (a monitoring seam; per executor on a cluster). */
   val droppedMessages = new java.util.concurrent.atomic.AtomicLong(0)
 }

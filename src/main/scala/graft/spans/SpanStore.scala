@@ -1,48 +1,15 @@
 package graft.spans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
-/** Bucketed span-store layout for co-located joins (SURVEY §4 / prompt
-  * "minimize shuffles"): bucketing both sides of the hot self-joins
-  * (dependency edges on span ids, per-trace rollups on trace_id) by the
-  * join key lets Spark plan the join with ZERO shuffle — each bucket
-  * pairs with its counterpart directly. At 100 TB this converts the two
-  * biggest exchanges in the workload into local sort-merge joins.
-  *
-  * Bucketed tables go through the session catalog (`saveAsTable`);
-  * the date-partitioned parquet path ([[OtlpIngest.writeSpans]]) remains
-  * the plain-files layout.
+/** Upkeep of the span store, the date-partitioned parquet that
+  * [[OtlpIngest.writeSpans]] appends (the one span layout; partition
+  * pruning and row-group stats stand in for the reference's MergeTree
+  * time clustering): compaction of the small files streaming appends
+  * leave, and retention by whole date partitions.
   */
 object SpanStore {
-  /** Write the span table bucketed+sorted by trace_id. Idempotent: drops
-    * the table and any orphaned managed location first (an in-memory
-    * catalog forgets tables between sessions but the warehouse dir
-    * persists). */
-  def writeBucketed(spans: DataFrame, table: String,
-      buckets: Int = 32): Unit = {
-    val spark = spans.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    spans.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "trace_id")
-      .sortBy("trace_id")
-      .saveAsTable(table)
-  }
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** Per-trace rollup on the bucketed table — same shape as
-    * TraceService.traceList but with both aggregation and self-join
-    * consuming the bucket layout (no Exchange in the plan). */
-  def bucketedTraceList(spark: SparkSession, table: String): DataFrame =
-    new TraceService(readTable(spark, table)).traceList()
-
   /** Compact one date partition of the plain-files store: streaming
     * micro-batch appends leave many small files per partition (one per
     * foreachBatch x writer task); periodic compaction rewrites the

@@ -2,6 +2,7 @@ package graft.spans
 
 import graft.Exact
 import graft.dsl.SearchDsl
+import graft.util.TimeRanges
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -216,8 +217,8 @@ class TraceService(spans: DataFrame) {
   private def seriesFrame(startNs: Long, endNs: Long): (DataFrame, Column, Long) = {
     val startS = startNs / 1000000000L
     val endS = endNs / 1000000000L
-    val step = math.max((endS - startS) / 15, 1L)
-    val aligned = startS - startS % step
+    val step = TimeRanges.bucketSeconds(endS - startS)
+    val aligned = TimeRanges.align(startS, step)
     val frame = spans.sparkSession.range(aligned, endS + 1, step)
       .toDF("bucket_s")
     val bucket = expr(s"(start_time_unix_nano div 1000000000) - " +

@@ -12,9 +12,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * becomes one ClickHouse batch insert (collector/service.go:176,
   * utils/utils.go:169-240) with no watermark or late-data policy. Here the
   * same pipeline is an actual streaming job: file/Kafka source of OTLP
-  * JSON → the SAME per-partition OtlpIngest decoder (stateless, so
-  * batch/stream agnostic) → watermark → sink; monitoring
-  * series become windowed streaming aggregations.
+  * JSON or protobuf → the SAME per-partition OtlpIngest decoder
+  * (stateless, so batch/stream agnostic) → watermark → sink; monitoring
+  * series become windowed streaming aggregations. An undecodable request
+  * is dropped and counted (`OtlpProto.droppedMessages`) rather than
+  * failing the micro-batch, which would replay and fail forever.
   *
   * Late data: spans arriving later than the watermark delay are dropped
   * from streaming aggregates (the reference silently keeps them because
@@ -28,11 +30,17 @@ object StreamingOps extends QueryModule {
   def streamOtlpJson(spark: SparkSession, inputDir: String,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    OtlpIngest.fromJson(spark.readStream.text(inputDir).as[String])
+    watermarked(OtlpIngest.fromJson(spark.readStream.text(inputDir).as[String]),
+      watermarkDelay)
+  }
+
+  /** Span rows with the `start_ts` event-time column and its watermark,
+    * for every OTLP source. */
+  private def watermarked(spans: DataFrame, delay: String): DataFrame =
+    spans
       .withColumn("start_ts",
         timestamp_micros(expr("start_time_unix_nano div 1000")))
-      .withWatermark("start_ts", watermarkDelay)
-  }
+      .withWatermark("start_ts", delay)
 
   /** A4-streaming: append each micro-batch to the date-partitioned span
     * store via foreachBatch — the exact write path batch ingest uses. */
@@ -63,11 +71,7 @@ object StreamingOps extends QueryModule {
     val raw = spark.readStream.format("binaryFile").schema(binarySchema)
       .option("pathGlobFilter", "*.pb").load(inputDir)
       .select(col("content")).as[Array[Byte]]
-    // lenient: a corrupt payload must not poison-replay the stream
-    graft.spans.OtlpProto.fromProtobuf(raw, lenient = true)
-      .withColumn("start_ts",
-        timestamp_micros(expr("start_time_unix_nano div 1000")))
-      .withWatermark("start_ts", watermarkDelay)
+    watermarked(graft.spans.OtlpProto.fromProtobuf(raw), watermarkDelay)
   }
 
   /** A1-streaming, Kafka branch: `format("kafka")` reader feeding the
@@ -95,18 +99,15 @@ object StreamingOps extends QueryModule {
 
   /** Kafka-shaped rows (`value: binary` + source metadata columns) →
     * flattened watermarked span rows via the protobuf wire decoder.
-    * Works identically on a batch frame (`spark.read.format("kafka")`)
-    * and a streaming one. */
+    * Works on a batch frame (`spark.read.format("kafka")`) and a
+    * streaming one; a corrupt value fails the batch and is dropped and
+    * counted by the stream, as for every OTLP source. */
   def fromKafkaValues(kafkaRows: DataFrame,
       watermarkDelay: String = "10 minutes"): DataFrame = {
     val spark = kafkaRows.sparkSession
     import spark.implicits._
-    graft.spans.OtlpProto.fromProtobuf(
-      kafkaRows.select(col("value")).as[Array[Byte]],
-      lenient = true) // corrupt values skip + count, never poison-replay
-      .withColumn("start_ts",
-        timestamp_micros(expr("start_time_unix_nano div 1000")))
-      .withWatermark("start_ts", watermarkDelay)
+    watermarked(graft.spans.OtlpProto.fromProtobuf(
+      kafkaRows.select(col("value")).as[Array[Byte]]), watermarkDelay)
   }
 
   /** D7-streaming: tumbling-window span/event counts. */

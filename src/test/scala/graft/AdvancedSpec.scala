@@ -1,12 +1,10 @@
 package graft
 
-import graft.spans.SpanStore
 import graft.streaming.TraceAssembler
 import graft.streaming.TraceAssembler.SpanEvent
 import org.apache.spark.sql.functions._
 
-/** Extensions registration, bucketed shuffle-free joins, stateful
-  * streaming trace assembly. */
+/** Extensions registration, stateful streaming trace assembly. */
 class AdvancedSpec extends SparkSpec {
 
   test("GraftExtensions registers dot_product for SQL") {
@@ -57,22 +55,6 @@ class AdvancedSpec extends SparkSpec {
     val err = intercept[Exception](spark.sql("SELECT z_value(1) AS z"))
     assert(err.getMessage.contains("z_value expects 2 argument"),
       err.getMessage)
-  }
-
-  test("bucketed span store: self-join rollup plans with zero shuffle") {
-    val spans = SpanFixtures.spans(spark)
-    SpanStore.writeBucketed(spans, "spans_bucketed", buckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val rollup = SpanStore.bucketedTraceList(spark, "spans_bucketed")
-      val plan = rollup.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"unexpected shuffle in bucketed join plan:\n$plan")
-      // and it still computes the right thing
-      val byTrace = rollup.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(byTrace === Map("T1" -> 4L, "T2" -> 1L))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("mapGroupsWithState trace status: running summaries per batch") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.spans.{OtlpExamples, OtlpIngest}
+import graft.spans.{OtlpExamples, OtlpIngest, OtlpProto}
 import graft.streaming.StreamingOps
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
@@ -300,13 +300,24 @@ class OtlpIngestSpec extends SparkSpec {
     }
   }
 
-  test("a non-numeric startTimeUnixNano fails the ingest, naming the value") {
-    val doc = oneSpan(""","startTimeUnixNano":"abc","endTimeUnixNano":"2"""")
+  test("a bad time value fails a batch, naming it; a stream drops and counts it") {
     def chain(e: Throwable): String = Iterator.iterate(e)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" / ")
-    for ((side, run) <- sides(Seq(doc))) {
-      val e = intercept[Exception](run())
-      assert(chain(e).contains("'abc'"), s"$side: ${chain(e)}")
+    // (document, the value the batch error names): a non-numeric time and
+    // an end − start past int64
+    val bad = Seq(
+      oneSpan(""","startTimeUnixNano":"abc","endTimeUnixNano":"2"""") -> "'abc'",
+      oneSpan(""","startTimeUnixNano":"-1","endTimeUnixNano":"9223372036854775807"""") ->
+        "'9223372036854775807'")
+    for ((doc, named) <- bad) {
+      val runs = sides(Seq(OtlpExamples.current, doc, OtlpExamples.legacy)).toMap
+      val e = intercept[Exception](runs("batch")())
+      assert(chain(e).contains(named), chain(e))
+      val dropped = OtlpProto.droppedMessages.get
+      val rows = runs("stream")()
+      assert(rows.map(_.getAs[String]("name")).sorted.toSeq ===
+        Seq("GET /users", "POST /orders", "SELECT users"))
+      assert(OtlpProto.droppedMessages.get - dropped === 1)
     }
   }
 

@@ -84,17 +84,30 @@ class OtlpProtoSpec extends SparkSpec {
   }
 
   test("protobuf binary-file stream -> span store end-to-end") {
+    import spark.implicits._
     val in = SparkSpec.tempDir("otlp-pb")
     val store = SparkSpec.tempDir("pb-store")
     val ckpt = SparkSpec.tempDir("pb-ckpt")
+    // a truncated request beside the good one: the stream drops and
+    // counts it, and the good request's rows still arrive
+    val truncated = request.take(request.length / 2)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$in/req1.pb"), request)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$in/req2.pb"), truncated)
+    val dropped = OtlpProto.droppedMessages.get
     val stream = graft.streaming.StreamingOps.streamOtlpProtobuf(spark, in)
     val q = graft.streaming.StreamingOps.writeToSpanStore(stream, store, ckpt)
     q.awaitTermination(60000)
     val back = graft.spans.OtlpIngest.readSpans(spark, store)
     assert(back.count() === 1)
     assert(back.collect().head.getAs[String]("trace_id") === "CgsMDQ==")
+    assert(OtlpProto.droppedMessages.get - dropped === 1)
+    // the same bytes fail a batch job
+    val e = intercept[Exception](
+      OtlpProto.fromProtobuf(spark.createDataset(Seq(request, truncated))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("malformed protobuf")), e)
   }
 
   test("fromProtobuf: DataFrame in SpanSchema column order") {
@@ -121,7 +134,8 @@ class OtlpProtoSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(0.75))),
       ("debug", """{"boolValue":false}""", _.vint(2, 0)),
       ("tags", """{"arrayValue":{"values":[{"stringValue":"a"},{"stringValue":"b"}]}}""",
-        _.msg(5, new W().msg(1, new W().str(1, "a")).msg(1, new W().str(1, "b")))))
+        _.msg(5, new W().msg(1, new W().str(1, "a")).msg(1, new W().str(1, "b")))),
+      ("novalue", null, null))
     val span: Seq[Attr] = Seq(
       ("http.method", """{"stringValue":"GET"}""", strVal("GET")),
       ("retries", """{"intValue":"42"}""", _.vint(3, 42)),
@@ -132,11 +146,18 @@ class OtlpProtoSpec extends SparkSpec {
       ("meta", """{"kvlistValue":{"values":[{"key":"k","value":{"stringValue":"v"}}]}}""",
         _.msg(6, new W().msg(1, kv("k", strVal("v"))))),
       ("blob", """{"bytesValue":"aGVsbG8="}""", _.bytes(7, "hello".getBytes("UTF-8"))),
+      ("novalue", null, null),
       ("http.method", """{"stringValue":"POST"}""", strVal("POST")))
-    def json(as: Seq[Attr]): String =
-      as.map { case (k, v, _) => s"""{"key":"$k","value":$v}""" }.mkString("[", ",", "]")
+    // a null value is a KeyValue with no value field in either wire form
+    def json(as: Seq[Attr]): String = as.map {
+      case (k, null, _) => s"""{"key":"$k"}"""
+      case (k, v, _) => s"""{"key":"$k","value":$v}"""
+    }.mkString("[", ",", "]")
     def proto(w: W, field: Int, as: Seq[Attr]): W =
-      as.foldLeft(w) { case (acc, (k, _, v)) => acc.msg(field, kv(k, v)) }
+      as.foldLeft(w) {
+        case (acc, (k, _, null)) => acc.msg(field, new W().str(1, k))
+        case (acc, (k, _, v)) => acc.msg(field, kv(k, v))
+      }
     val jsonDoc =
       s"""{"resourceSpans":[{"resource":{"attributes":${json(res)}},
          |"schemaUrl":"https://example/schema",

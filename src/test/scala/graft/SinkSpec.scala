@@ -90,9 +90,8 @@ class SinkSpec extends SparkSpec {
   }
 
   test("idempotent JDBC sink: replayed micro-batch converges to exactly-once") {
-    import graft.sinks.IdempotentJdbcSpanSink
     withDerby { (url, props) =>
-      val sink = new IdempotentJdbcSpanSink(url, "denormalized_span", props)
+      val sink = new JdbcSpanSink(url, "denormalized_span", props)
       sink.writeBatch(fixtureSpans, 0L)
       sink.writeBatch(fixtureSpans, 0L) // replay after a simulated failure
       val back = JdbcSpanSink.readBack(spark, url, "denormalized_span", props)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Memo
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the configs every graft entry point (Verify, Bench,
@@ -13,16 +14,20 @@ object GraftSession {
   /** THE graft session: every entry point (Verify, Bench, the mains,
     * the tests) builds through here, so a conf added to
     * [[requiredConfs]] takes effect everywhere at once. Only the
-    * session-shaped extras — width, app name, warehouse, UI — are
-    * spelled here. */
+    * session-shaped extras — width, app name, scratch dirs, UI — are
+    * spelled here. The warehouse and `spark.local.dir` (shuffle,
+    * broadcast and block-manager files) are fresh [[graft.util.Memo.path]]
+    * dirs under [[graft.util.TempArtifacts.fastBase]], deleted at exit.
+    * Cluster deployments set their own; `SPARK_LOCAL_DIRS`, when set,
+    * takes precedence over `spark.local.dir` in Spark itself. */
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
             appName: String = "graft"): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
+      .config("spark.sql.warehouse.dir", Memo.path("graft_warehouse"))
+      .config("spark.local.dir", Memo.path("graft_local"))
       .config("spark.ui.enabled", "false")
     requiredConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
@@ -70,20 +75,7 @@ object GraftSession {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.cache.maxEntries" -> "600") ++
-    // Shuffle/broadcast/block-manager scratch on tmpfs when the host
-    // offers one (the streaming drives' shmCheckpointRoot discipline,
-    // applied to batch): java.io.tmpdir here is disk-backed ext4, so
-    // every shuffle map output paid file-system journaling that a
-    // local-mode run never needs durable. Spark creates and removes
-    // its own blockmgr-*/spark-* subdirs; the pid suffix keeps
-    // concurrent graft processes (driver + builder) apart. Cluster
-    // deployments set their own spark.local.dir — this only fills the
-    // local-mode default.
-    (if (new java.io.File("/dev/shm").canWrite)
-      Map("spark.local.dir" -> graft.util.TempArtifacts.register(
-        s"/dev/shm/graft_local_${ProcessHandle.current().pid()}"))
-    else Map.empty[String, String])
+    "spark.sql.codegen.cache.maxEntries" -> "600")
 
   /** Query timeout — the analog of the reference's ClickHouse
     * `max_execution_time: 60` ceiling (db/clickhouse.go:20-22): run the

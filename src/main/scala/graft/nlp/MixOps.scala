@@ -383,11 +383,11 @@ object MixOps extends QueryModule {
       .orderBy(col("shard_id"))
 
   /** The written v65c shard tree (one gzip jsonl file per shard),
-    * built once per input fingerprint into the persistent artifact
-    * catalog; both v65c (manifest witness) and v65d (corpus loader)
+    * built once per process and dir as an [[graft.util.ArtifactCache]]
+    * artifact; both v65c (manifest witness) and v65d (corpus loader)
     * read from here. */
   private def jsonlRoot(spark: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.persistent("v65c_jsonl", "v1", dir) { p =>
+    graft.util.ArtifactCache.cached("v65c_jsonl", dir) { p =>
       withShards(spark, dir)
         .select(col("shard_id"),
           to_json(struct(col("doc_id"), col("source"), col("text")))

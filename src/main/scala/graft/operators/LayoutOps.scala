@@ -92,7 +92,7 @@ object LayoutOps extends QueryModule {
     // empty table / all-NULL ids: nothing to cluster — answer the box
     // query directly (same layout-invariant result, no crash)
     if (ub.isNullAt(0)) return boxAgg(ev)
-    val out = compactScratch("graft-zorder")
+    val out = graft.util.Memo.path("graft_zorder")
     val path = s"$out/events_z"
     // materialize the 1-row aggregate eagerly so the per-run clustered
     // copy can be deleted before returning (same convention as the
@@ -105,7 +105,7 @@ object LayoutOps extends QueryModule {
       spark.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
     } finally {
       import scala.reflect.io.Directory
-      new Directory(new java.io.File(out.toString)).deleteRecursively()
+      new Directory(new java.io.File(out)).deleteRecursively()
     }
   }
 
@@ -174,14 +174,6 @@ object LayoutOps extends QueryModule {
     * spec's file-count probe — ONE definition, so the 64→4 pin in
     * ExtendedOpsSpec always tests the shipped rewrite. Returns the
     * compacted path. */
-  /** Per-call scratch for the rewrite fixtures: tmpfs when available
-    * (the [[graft.util.TempArtifacts.fastBase]] convention — the
-    * 64-file fragmentation otherwise pays ext4 journaling per file). */
-  private def compactScratch(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.util.TempArtifacts.fastBase), prefix)
-      .toString
-
   private def writeFragAndCompact(spark: SparkSession, df: DataFrame,
       root: String): String = {
     df.repartition(FragFiles).write.mode("overwrite")
@@ -194,7 +186,7 @@ object LayoutOps extends QueryModule {
   }
 
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val root = compactScratch("graft_compact")
+    val root = graft.util.Memo.path("graft_compact")
     try {
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -220,7 +212,7 @@ object LayoutOps extends QueryModule {
     * frag=[[FragFiles]], compact=[[CompactFiles]], content equal). */
   private[graft] def compactionFileCounts(spark: SparkSession,
       dir: String): (Long, Long) = {
-    val root = compactScratch("graft_compact_spec")
+    val root = graft.util.Memo.path("graft_compact_spec")
     try {
       val ev = Tables.events(spark, dir).select(col("event_id"))
       writeFragAndCompact(spark, ev, root)

@@ -73,11 +73,11 @@ object PcaOps extends QueryModule {
   /** The 1-row (n, cm) covariance frame: numerators n·Σxy − Σx·Σy per
     * (i,j), half-up divided by n. */
   private[graft] def covRow(spark: SparkSession, dir: String): DataFrame = {
-    // repartition: the source is one parquet file = one task, and the
-    // d² in-row products are interpreted HOF work — spread it (the
-    // st16/st17 finding; measured ~2 s -> sub-second at sf0.1)
-    val pts = ClusterOps.pointsOf(Tables.embeddings(spark, dir))
-      .repartition(32)
+    // spread: the source is one parquet file = one task, and the d²
+    // in-row products are interpreted HOF work (measured ~2 s ->
+    // sub-second at sf0.1 once spread)
+    val pts = graft.util.Spread.toCores(
+      ClusterOps.pointsOf(Tables.embeddings(spark, dir)))
     // in-row d² product array → one (k)-keyed partial-agg shuffle
     val prods = pts.select(posexplode(flatten(transform(col("xm"),
         xi => transform(col("xm"), xj => xi * xj)))))
@@ -168,8 +168,8 @@ object PcaOps extends QueryModule {
     * share detects. */
   def pcaSourceDrift(spark: SparkSession, dir: String): DataFrame = {
     val vRow = principalRow(spark, dir).select(col("v"))
-    val pts = ClusterOps.pointsOf(Tables.embeddings(spark, dir))
-      .repartition(32)
+    val pts = graft.util.Spread.toCores(
+      ClusterOps.pointsOf(Tables.embeddings(spark, dir)))
     val proj = pts.crossJoin(broadcast(vRow))
       .select(col("vec_id"),
         aggregate(sequence(lit(0), lit(D - 1)), lit(0L), (acc, i) =>

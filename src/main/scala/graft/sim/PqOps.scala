@@ -294,8 +294,10 @@ object PqOps extends QueryModule {
     * sub-codes argmin'd inside one row (slices built inline), then the
     * two integer checksums — no explode, no per-vector state, so the
     * streaming twin runs in APPEND mode with zero aggregation state.
-    * NOTE Spark SQL's `arr[i]` is 0-based (element_at is the 1-based
-    * form). */
+    * No exchange of its own: st16 streams the split copy of
+    * [[graft.streaming.StreamingOps.tableStream]], so each
+    * micro-batch's scan is already one task per split file. NOTE Spark
+    * SQL's `arr[i]` is 0-based (element_at is the 1-based form). */
   private def encodeInRow(df: DataFrame, cents: DataFrame): DataFrame = {
     // broadcast codebooks + compiled PqCodes (round 9): the previous
     // form crossJoined a one-row bundle and argmin'd through
@@ -305,9 +307,6 @@ object PqOps extends QueryModule {
     val bc = collectCodebooks(cents)
     df.select(col("vec_id"),
         ClusterOps.microVec(col("embedding")).as("xm64"))
-      // spread the per-row encode across cores: a stream's
-      // micro-batch otherwise runs one task per source file
-      .repartition(32)
       .withColumn("codes",
         graft.functions.PqFunctions.pq_codes(col("xm64"), bc, M, SubDims))
       .select(col("vec_id"),
@@ -568,9 +567,10 @@ object PqOps extends QueryModule {
       queryDir: String, corpusDir: String, k: Int = 10,
       ncell: Int = NCell, coarseK: Int = ClusterOps.K,
       queryBound: Long = Long.MaxValue): DataFrame = {
-    val ver = if (coarseK == ClusterOps.K) "v1" else s"v1-ck$coarseK"
-    val idx = graft.util.ArtifactCache.persistent("ivfpq_index", ver,
-      corpusDir)(writeIvfPqIndex(spark, corpusDir, _, coarseK))
+    val kind =
+      if (coarseK == ClusterOps.K) "ivfpq_index" else s"ivfpq_index-ck$coarseK"
+    val idx = graft.util.ArtifactCache.cached(kind, corpusDir)(
+      writeIvfPqIndex(spark, corpusDir, _, coarseK))
     val q = serveQueryFrame(spark, queryDir, idx, ncell, queryBound)
     val codes = spark.read.parquet(s"$idx/codes")
       .select(col("vec_id"), col("sub"), col("cid"),
@@ -605,7 +605,7 @@ object PqOps extends QueryModule {
     * identical integers to st21, same oracle. */
   def streamingAnnServePruned(spark: SparkSession, dir: String,
       k: Int = 10, ncell: Int = NCell): DataFrame = {
-    val idx = graft.util.ArtifactCache.persistent("ivfpq_index", "v1", dir)(
+    val idx = graft.util.ArtifactCache.cached("ivfpq_index", dir)(
       writeIvfPqIndex(spark, dir, _))
     val q = serveQueryFrame(spark, dir, idx, ncell)
     val outPath = graft.util.Memo.path("graft_st21b")
@@ -838,7 +838,7 @@ object PqOps extends QueryModule {
         "the probed cell partitions (pruning + equality with v18h " +
         "pinned in PqSpec) — shares v18h's oracle",
       (s, d) => {
-        val idx = graft.util.ArtifactCache.persistent("ivfpq_index", "v1", d)(
+        val idx = graft.util.ArtifactCache.cached("ivfpq_index", d)(
           writeIvfPqIndex(s, d, _))
         ivfPqTopKStored(s, idx, microQueryVector(s, d, queryId),
           excludeVecId = queryId)

@@ -300,10 +300,6 @@ object SimilarityOps extends QueryModule {
     (cents, assigned)
   }
 
-  /** Assignment frame only — (vec_id, v, nrm, centroid_id). */
-  def ivfAssign(spark: SparkSession, dir: String, nlist: Int,
-      iters: Int = 1): DataFrame = ivfIndex(spark, dir, nlist, iters)._2
-
   /** V3b: IVF-probed approximate top-k — search only the `nprobe`
     * centroids nearest to the query. At 100 TB the assignment is computed
     * once at ingest and stored partitioned by centroid_id, so a query

@@ -22,6 +22,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * from streaming aggregates (the reference silently keeps them because
   * every query rescans the table — SURVEY §1.5); the batch operators over
   * the stored table retain that retroactive behavior.
+  *
+  * Scratch: the registry drives re-derive their input on every run, so
+  * their checkpoints recover nothing across processes. Each drive
+  * checkpoints under a fresh [[graft.util.Memo.path]] root, and the
+  * split copies of its input tables are per-process
+  * [[graft.util.ArtifactCache]] artifacts: both lie under
+  * [[graft.util.TempArtifacts.fastBase]] and are deleted at exit.
   */
 object StreamingOps extends QueryModule {
 
@@ -166,11 +173,12 @@ object StreamingOps extends QueryModule {
     * it is a single task and all per-row work a drive fuses into the
     * scan stage runs on ONE core, at any session width. The drive
     * source is each entry's own input prep (the stdrive_frame
-    * convention), so the table is re-laid out once per (dir, width) as
-    * a multi-file copy in the cross-process catalog and every drive
-    * streams the split copy: same rows, schema and values — only file
-    * boundaries change, and every registry drive is an aggregation or
-    * ends in an explicit orderBy, so outputs are identical. All files
+    * convention), so the table is re-laid out once per process and
+    * (dir, width) as a multi-file [[graft.util.ArtifactCache]] copy,
+    * and every drive streams the split copy: same rows, schema and
+    * values — only file boundaries change, and every registry drive is
+    * an aggregation or ends in an explicit orderBy, so outputs are
+    * identical. All files
     * are present before `start()`, so batch structure is unchanged
     * (one data micro-batch). Scale-adaptive by construction: the
     * target is derived from input size and session parallelism, and a
@@ -196,8 +204,8 @@ object StreamingOps extends QueryModule {
       if (!f.isFile || f.length() > MaxSplitCopyBytes) 1
       else splitWidth(spark, f.length())
     if (target <= 1) None
-    else Some(graft.util.ArtifactCache.persistent(
-      s"stsrc_$table", s"v1-n$target", dir) { p =>
+    else Some(graft.util.ArtifactCache.cached(
+      s"stsrc_$table-n$target", dir) { p =>
       spark.read.parquet(f.getPath).repartition(target)
         .write.mode("overwrite").parquet(p)
     })
@@ -239,26 +247,20 @@ object StreamingOps extends QueryModule {
     // wrapper's sink helpers' no-data dependence either way.
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // Checkpoints (offset log, commit log, state-store deltas) are
-    // fsync-per-batch machinery; on this host java.io.tmpdir is ext4
-    // while /dev/shm is tmpfs, so pointing the checkpoint ROOT at
-    // tmpfs removes the disk round-trips from every drive. This is a
-    // REGISTRY-DRIVE setting only: these finite drives need no
-    // crash-recoverable checkpoint (each run re-derives from the
-    // source), so volatile storage is semantically fine — a production
-    // deployment keeps its checkpoint on durable storage and would NOT
-    // copy this. Queries under a configured root are not auto-cleaned
-    // on stop, so the root is registered for exit-time deletion.
+    // per-process scratch here: these finite drives re-derive their
+    // input on every run, so nothing needs to recover a query after
+    // the process exits. Each drive gets a fresh Memo.path root, under
+    // the one scratch root and deleted at exit (Spark does not clean a
+    // query's checkpoint under a configured root on stop). Fresh per
+    // DRIVE: under a root each query checkpoints at <root>/<queryName>,
+    // and a REUSED query name (a8's is pid-stable across a bench's two
+    // runs) would resume its committed offsets and replay nothing —
+    // silently emptying the second run's result. A production
+    // deployment keeps its checkpoint on durable storage.
     val prevCkpt = spark.conf.getOption(
       "spark.sql.streaming.checkpointLocation")
-    // per-DRIVE unique subroot: under a configured root each query
-    // checkpoints at <root>/<queryName>, and a REUSED query name
-    // (a8's is pid-stable across a bench's two runs) would resume its
-    // committed offsets and replay nothing — silently emptying the
-    // second run's result. A fresh subroot per drive keeps every
-    // start's checkpoint virgin.
-    if (shmCheckpointRoot != null)
-      spark.conf.set("spark.sql.streaming.checkpointLocation",
-        s"$shmCheckpointRoot/d${driveSeq.incrementAndGet()}")
+    spark.conf.set("spark.sql.streaming.checkpointLocation",
+      graft.util.Memo.path("graft_ckpt"))
     try body finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set(
@@ -266,22 +268,10 @@ object StreamingOps extends QueryModule {
       prevCkpt match {
         case Some(v) =>
           spark.conf.set("spark.sql.streaming.checkpointLocation", v)
-        case None => if (shmCheckpointRoot != null)
+        case None =>
           spark.conf.unset("spark.sql.streaming.checkpointLocation")
       }
     }
-  }
-
-  private val driveSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** One tmpfs checkpoint root per process (null when /dev/shm is
-    * unavailable — then drives fall back to Spark's tmpdir default). */
-  private lazy val shmCheckpointRoot: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      graft.util.TempArtifacts.register(
-        s"/dev/shm/graft_ckpt_${ProcessHandle.current().pid()}")
-    else null
   }
 
   /** Run a finite streaming plan to completion and return the final
@@ -312,7 +302,7 @@ object StreamingOps extends QueryModule {
     * (read at query start): 2 suits the tiny-state gates; a drive
     * whose batch is join-compute-bound (st24's band join + shingle
     * intersect) buys real parallelism with a few more near-free
-    * tmpfs-backed stores. */
+    * state stores. */
   def runToBatchAppend(spark: SparkSession, df: DataFrame,
       name: String, shufflePartitions: Int = 2): DataFrame =
     runToBatch(spark, df, name, "append", shufflePartitions)
@@ -321,8 +311,7 @@ object StreamingOps extends QueryModule {
     * per-micro-batch serving-loop shape (st21b): the caller's function
     * sees each micro-batch as a plain DataFrame and may run arbitrary
     * batch dataflow (pruned reads, joins, writes). Same state-store
-    * sizing discipline as [[runToBatch]]; Spark provisions a temp
-    * checkpoint for the unanchored sink. */
+    * sizing discipline and fresh checkpoint root as [[runToBatch]]. */
   def runForeachBatch(spark: SparkSession, df: DataFrame, name: String)(
       fn: (DataFrame, Long) => Unit): Unit =
     withStreamSizedShuffle(spark, 2) {
@@ -526,8 +515,8 @@ object StreamingOps extends QueryModule {
       val ef = new java.io.File(s"$dir/events.parquet")
       if (!ef.isFile) 1 else splitWidth(spark, ef.length() / 4)
     }
-    val prep = graft.util.ArtifactCache.persistent(
-        "stdrive_frame", s"v3-n$nSplit", dir) { p =>
+    val prep = graft.util.ArtifactCache.cached(
+        s"stdrive_frame-n$nSplit", dir) { p =>
       sampledSpanFrame(spark, dir).repartition(nSplit)
         .write.mode("overwrite").parquet(p)
       val mx = spark.read.parquet(p)

@@ -14,8 +14,7 @@ package graft.util
   * Counting happens INSIDE the memo's build, so a hit never increments
   * and a concurrent double-build (if the memo's build-once rule were
   * broken) shows up as a count of 2 — the counter doubles as a
-  * concurrency regression tripwire. The persistent catalog counts only
-  * the builds it publishes, not the artifacts it adopts.
+  * concurrency regression tripwire.
   */
 object BuildCounters {
   private val counts = new java.util.concurrent.ConcurrentHashMap[

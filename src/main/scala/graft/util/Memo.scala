@@ -28,8 +28,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Count builds: [[BuildCounters]] is incremented once per build,
   *    under `s"$kind:$dir"`, and never on a hit.
   *
-  * Two path shapes. [[path]] is a fresh exit-deleted directory per
-  * build. [[stablePath]] is `fastBase/graft_<name>_<pid>`, the same for
+  * Two path shapes, both under [[TempArtifacts.fastBase]]. [[path]] is
+  * a fresh exit-deleted directory per call, and it is the only place
+  * scratch is placed: stored artifacts, the session's `spark.local.dir`
+  * and warehouse, each streaming drive's checkpoint root and the
+  * layout rewrites' scratch. Nothing in it outlives the process.
+  * [[stablePath]] is `fastBase/graft_<name>_<pid>`, the same for
   * the whole process: the witness dumps and fixtures written there are
   * named in oracle SQL. They are exit-deleted too, except in a process
   * that called [[keepStablePaths]] (Verify: `tools/check.py` runs the
@@ -103,10 +107,6 @@ object Memo {
   /** Keep every [[stablePath]] asked for from now on after the JVM
     * exits, for a reader that runs after it. */
   def keepStablePaths(): Unit = keepStable = true
-
-  /** Forget every entry whose kind starts with `kindPrefix`. */
-  private[util] def forget(kindPrefix: String): Unit =
-    entries.keySet.removeIf(_.kind.startsWith(kindPrefix)): Unit
 
   /** A fresh artifact path `fastBase/<name>_<pid>_<seq>`, registered for
     * exit-time cleanup BEFORE the caller writes it, so a JVM kill

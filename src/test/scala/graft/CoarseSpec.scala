@@ -194,8 +194,8 @@ class CoarseSpec extends SparkSpec {
           .toSeq
       }
     assert(served.nonEmpty)
-    val idx = graft.util.ArtifactCache.persistent("ivfpq_index",
-      "v1-ck32", sf0001)(PqOps.writeIvfPqIndex(spark, sf0001, _, 32))
+    val idx = graft.util.ArtifactCache.cached("ivfpq_index-ck32",
+      sf0001)(PqOps.writeIvfPqIndex(spark, sf0001, _, 32))
     served.foreach { case (qid, rows) =>
       val qm = PqOps.microQueryVector(spark, sf0001, qid)
       val ref = PqOps.ivfPqTopKStored(spark, idx, qm,

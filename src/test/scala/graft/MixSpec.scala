@@ -246,8 +246,8 @@ class MixSpec extends SparkSpec {
     assert(viaFiles.length > 1, "budget should yield multiple shards")
     // the written artifact is genuinely gzip-framed jsonl: pick one
     // part file and decode it outside Spark
-    val root = graft.util.ArtifactCache.persistent(
-      "v65c_jsonl", "v1", sf0001)(_ =>
+    val root = graft.util.ArtifactCache.cached(
+      "v65c_jsonl", sf0001)(_ =>
       fail("v65c artifact must already exist after the entry ran"))
     val part = {
       def walk(f: java.io.File): Seq[java.io.File] =

@@ -197,8 +197,8 @@ class RegistrySweepSpec extends SparkSpec {
     * scrub broadcasts) therefore rebuild under the second count instead
     * of handing the first arm's stored result back — t04 reads a
     * PlanMemo parquet, so a same-session re-run compared a file with
-    * itself. Process-scoped artifacts (ArtifactCache, the persistent
-    * catalog, the Memo.once dumps) are still shared between the arms.
+    * itself. Process-scoped artifacts (ArtifactCache, the Memo.once
+    * dumps) are still shared between the arms.
     * The shared session's conf is left untouched. */
   test("registry results are shuffle-partition-count independent") {
     val first = records.filter(r => partitionSample(r.q.id))

@@ -75,6 +75,30 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingOps.splitCopyPath(spark, sf0001, "region").isEmpty)
   }
 
+  test("one scratch root: the local dir, the warehouse and a drive's " +
+    "checkpoint lie under TempArtifacts.fastBase") {
+    import java.nio.file.Paths
+    val base = Paths.get(graft.util.TempArtifacts.fastBase)
+    def under(p: String): Boolean =
+      Paths.get(new org.apache.hadoop.fs.Path(p).toUri.getPath)
+        .normalize.startsWith(base)
+    val local = spark.sparkContext.getConf.getOption("spark.local.dir")
+    assert(local.exists(under), s"spark.local.dir $local outside $base")
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    assert(under(warehouse), s"warehouse $warehouse outside $base")
+    val key = "spark.sql.streaming.checkpointLocation"
+    val name = s"scratch_root_${System.nanoTime()}"
+    var root = ""
+    StreamingOps.runForeachBatch(spark,
+        StreamingOps.tableStream(spark, sf0001, "region"), name) {
+      (_, _) => root = spark.conf.get(key)
+    }
+    assert(new java.io.File(s"$root/$name/offsets").isDirectory,
+      s"no checkpoint written under $root")
+    assert(under(root), s"checkpoint root $root outside $base")
+    assert(spark.conf.getOption(key).isEmpty, "drive leaked its root")
+  }
+
   test("streaming windowed counts equal batch group-by") {
     val streamed = StreamingOps.streamingCounts(spark, sf0001)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
